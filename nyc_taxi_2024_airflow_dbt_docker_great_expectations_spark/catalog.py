@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 LAYERS = ["staging", "bronze", "silver", "gold", "metadata"]
 
@@ -36,10 +37,21 @@ def ensure_namespaces(spark: SparkSession, layers=None) -> None:
 
 
 class Warehouse:
-    """Path-mode catalog: tables are parquet directories under a root."""
+    """Path-mode catalog: tables are parquet directories under a root.
+
+    Reads use a schema the warehouse already knows, because inferring a
+    parquet schema is a Spark job that reads a file footer.  The schema of a
+    path is recorded when it is written through :meth:`write` or
+    :meth:`record`, or the first time a read has to infer it.  It is the
+    schema a fresh ``spark.read.parquet(path)`` would return: partition
+    columns are left for Spark to infer from the directory names, as a fresh
+    read does.  A table's part files are assumed to share one schema, and
+    every writer of a table is assumed to go through this class.
+    """
 
     def __init__(self, root: str):
         self.root = root
+        self.schemas: dict[str, StructType] = {}  # path -> read schema
 
     def path(self, layer: str, table: str) -> str:
         qualified_name(layer, table)  # validates layer
@@ -57,7 +69,13 @@ class Warehouse:
         )
 
     def read(self, spark: SparkSession, layer: str, table: str):
-        return spark.read.parquet(self.path(layer, table))
+        path = self.path(layer, table)
+        schema = self.schemas.get(path)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(path)
+        df = spark.read.parquet(path)
+        self.schemas[path] = df.schema
+        return df
 
     def write(self, df, layer: str, table: str, mode: str = "overwrite",
               partition_by: list[str] | None = None) -> None:
@@ -65,6 +83,17 @@ class Warehouse:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(layer, table))
+        self.record(df.sparkSession, layer, table, df.schema, partition_by)
+
+    def record(self, spark: SparkSession, layer: str, table: str,
+               schema: StructType, partition_by: list[str] | None = None) -> None:
+        """Note that ``schema`` was just written to the table.  Resolving it
+        against the path lists files on the driver and runs no job; Spark
+        makes every column nullable and infers the partition columns."""
+        parts = set(partition_by or ())
+        data = StructType([f for f in schema.fields if f.name not in parts])
+        path = self.path(layer, table)
+        self.schemas[path] = spark.read.schema(data).parquet(path).schema
 
 
 def collect_table_stats(spark: SparkSession, table: str,

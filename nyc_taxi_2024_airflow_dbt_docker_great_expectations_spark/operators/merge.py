@@ -27,6 +27,7 @@ read-modify-write; the logical semantics here are identical.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 
 def quoted_col(name: str) -> Column:
@@ -141,10 +142,15 @@ def append_if_absent(target: DataFrame, delta: DataFrame, keys: list[str],
 
 
 def merge_write_path(spark, path: str, delta: DataFrame, keys: list[str],
-                     order_col: str | None = None) -> None:
+                     order_col: str | None = None,
+                     target: DataFrame | None = None) -> StructType:
     """Merge ``delta`` into the parquet table at ``path`` by key (S8/S9) with
     a write-aside-and-swap, because Spark cannot overwrite a path that feeds
     the running plan.  First write (no target yet) is a plain write.
+    ``target`` is the table at ``path`` as the caller already read it (with
+    a known schema, a read runs no inference job); by default it is read
+    here.  Returns the schema written: the merge moves the key columns to
+    the front.
 
     Path-mode primitive for local/HDFS-like filesystems; on a real lakehouse
     this whole function is one Delta/Iceberg ``MERGE INTO`` (atomic, no
@@ -157,8 +163,9 @@ def merge_write_path(spark, path: str, delta: DataFrame, keys: list[str],
 
     if not os.path.isdir(path):
         delta.write.mode("overwrite").parquet(path)
-        return
-    target = spark.read.parquet(path)
+        return delta.schema
+    if target is None:
+        target = spark.read.parquet(path)
     merged = upsert_by_key(
         target,
         delta.select(*[quoted_col(c).alias(c) for c in target.columns]),
@@ -171,6 +178,7 @@ def merge_write_path(spark, path: str, delta: DataFrame, keys: list[str],
     # file-listing cache still points at the deleted part files — refresh it
     spark.catalog.refreshByPath(path)
     spark.catalog.refreshByPath(tmp)
+    return merged.schema
 
 
 def month_partition_overwrite(df: DataFrame, path: str, month_col: str = "month") -> None:

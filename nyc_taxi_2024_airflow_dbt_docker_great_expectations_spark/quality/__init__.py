@@ -6,10 +6,13 @@ Two reference systems unified into one module:
   (dbt semantics: any returned row = failure).
 - ``expectations``: Great-Expectations-style suites — threshold-aware
   (``mostly``), evaluated in a single aggregation pass, raising with a
-  structured ``unexpected_percent`` report on failure.
+  structured ``unexpected_percent`` report on failure.  A suite can carry
+  dbt tests too (``suites.BRONZE_TESTS`` / ``SILVER_TESTS``), so one
+  aggregate gates a whole pipeline stage.
 """
 
 from .expectations import (  # noqa: F401
+    DbtTestFailure,
     Expectation,
     ExpectationResult,
     ValidationError,
@@ -27,4 +30,10 @@ from .dbt_tests import (  # noqa: F401
     relationship_failures,
     unique_failures,
 )
-from .suites import BRONZE_SUITE, GOLD_SUITE, SILVER_SUITE  # noqa: F401
+from .suites import (  # noqa: F401
+    BRONZE_SUITE,
+    BRONZE_TESTS,
+    GOLD_SUITE,
+    SILVER_SUITE,
+    SILVER_TESTS,
+)

@@ -1,10 +1,11 @@
 """dbt-style data tests (reference section 2.9a, Q1-Q5).
 
 dbt compiles each test to a SQL query whose *returned rows are the failures*
-(zero rows = pass).  Each function here returns the failing-rows DataFrame so
-callers can ``assert failures.limit(1).count() == 0`` (short-circuit — no full
-count of a 100 TB table just to learn it's non-empty) or persist the failures
-for triage.
+(zero rows = pass).  Each function here returns the failing-rows DataFrame,
+for triage or for persisting the failures.  To *gate* on tests, do not run
+one action per test: declare them as named expectations (``suites.BRONZE_TESTS``
+/ ``SILVER_TESTS``) and ``run_suite`` counts every test's failing rows in one
+aggregate, with the same counts as these functions.
 """
 
 from __future__ import annotations

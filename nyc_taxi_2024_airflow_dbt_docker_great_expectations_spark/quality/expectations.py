@@ -7,6 +7,13 @@ value expectations into **one** ``agg()`` over the table — one scan at 100 TB
 instead of one per expectation — and evaluates schema/row-count expectations
 from metadata/the same pass.
 
+A suite may also carry dbt tests (section 2.9a): expectations with a
+``test`` name, which fail on any failing row and raise ``DbtTestFailure``
+before any GX failure is reported.  ``unique`` groups by its column inside
+the same aggregate, and ``relationships`` flags each child row against the
+broadcast, deduplicated keys of ``parent``, so a whole gate stage (dbt tests
+and GX suite) stays one query.
+
 GX semantics preserved (``dags/validation_utils.py:72-84``):
 
 - ``mostly=m`` passes iff the violating fraction of **non-null** values is
@@ -26,14 +33,21 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 @dataclass(frozen=True)
 class Expectation:
-    kind: str                      # not_null | between | in_set | row_count_between | column_exists
+    """One check.  ``kind``: not_null | between | in_set | unique |
+    relationships | row_count_between | column_exists."""
+
+    kind: str
     column: str | None = None
     min_value: float | None = None
     max_value: float | None = None
     value_set: tuple = ()
     mostly: float = 1.0
+    parent_column: str | None = None  # relationships: key column of ``parent``
+    test: str | None = None           # dbt test name: fail on any failing row
 
     def describe(self) -> str:
+        if self.test:
+            return f"dbt test {self.test}"
         bits = [self.kind]
         if self.column:
             bits.append(self.column)
@@ -87,6 +101,10 @@ class ExpectationResult:
                 f"= {self.unexpected_percent:.3f}%)")
 
 
+class DbtTestFailure(ValueError):
+    """A dbt-style test returned failing rows (dbt semantics: rows=failures)."""
+
+
 class ValidationError(ValueError):
     """Raised when a suite fails; carries per-expectation results
     (mirrors reference dags/validation_utils.py:72-84)."""
@@ -114,13 +132,63 @@ def _violation_condition(e: Expectation) -> Column:
     raise ValueError(f"no violation condition for kind {e.kind!r}")
 
 
+_COUNTED = ("not_null", "between", "in_set", "unique", "relationships")
+
+
+def _suite_counts(df: DataFrame, counted: list[Expectation],
+                  parent: DataFrame | None):
+    """One row: ``__rows`` and, per counted expectation ``i``, its failing
+    count ``u{i}`` and basis ``n{i}`` — from a single aggregate."""
+    frame = df
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    unique_cols = {e.column for e in counted if e.kind == "unique"}
+    if len(unique_cols) > 1:
+        raise ValueError(f"one unique column per suite, got {sorted(unique_cols)}")
+    for i, e in enumerate(counted):
+        c = F.col(e.column)
+        if e.kind == "unique":
+            continue  # counted over the key groups below
+        if e.kind == "not_null":
+            cond, basis = c.isNull(), F.lit(1)  # basis: all rows
+        elif e.kind == "relationships":
+            if parent is None:
+                raise ValueError(f"{e.describe()} needs a parent frame")
+            keys = F.broadcast(
+                parent.select(F.col(e.parent_column).alias(f"__k{i}")).distinct()
+                .withColumn(f"__in{i}", F.lit(True)))
+            frame = frame.join(keys, c == F.col(f"__k{i}"), "left")
+            cond, basis = c.isNotNull() & F.col(f"__in{i}").isNull(), c
+        else:
+            cond, basis = _violation_condition(e), c  # basis: non-null
+        aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"u{i}"))
+        aggs.append(F.count(basis).alias(f"n{i}"))
+    if not unique_cols:
+        return frame.agg(*aggs).first()
+    # failing keys of ``unique`` = groups of more than one row (the NULL
+    # key is one group, as in dbt's GROUP BY); the other counts re-sum
+    grouped = frame.groupBy(*unique_cols).agg(*aggs)
+    outer = [F.sum(name).alias(name) for name in grouped.columns[1:]]
+    for i, e in enumerate(counted):
+        if e.kind == "unique":
+            outer.append(
+                F.sum(F.when(F.col("__rows") > 1, 1).otherwise(0)).alias(f"u{i}"))
+            outer.append(F.count(F.lit(1)).alias(f"n{i}"))  # basis: keys
+    return grouped.agg(*outer).first()
+
+
 def run_suite(df: DataFrame, suite: list[Expectation], table: str = "table",
-              raise_on_failure: bool = True) -> list[ExpectationResult]:
-    """Evaluate a whole suite in one aggregation pass + metadata checks."""
+              raise_on_failure: bool = True,
+              parent: DataFrame | None = None) -> list[ExpectationResult]:
+    """Evaluate a whole suite in one aggregation pass + metadata checks.
+
+    ``parent`` is the table a ``relationships`` expectation looks its keys
+    up in.  On failure, the first failing dbt test (in suite order) raises
+    ``DbtTestFailure``; otherwise failing expectations raise
+    ``ValidationError``."""
     results: list[ExpectationResult] = []
 
-    value_exps = [e for e in suite if e.kind in ("not_null", "between", "in_set")]
-    needs_count = any(e.kind == "row_count_between" for e in suite) or value_exps
+    counted = [e for e in suite if e.kind in _COUNTED]
+    needs_count = any(e.kind == "row_count_between" for e in suite) or counted
 
     # --- metadata-only expectations (no scan) ---
     for e in suite:
@@ -129,19 +197,8 @@ def run_suite(df: DataFrame, suite: list[Expectation], table: str = "table",
 
     # --- one aggregation pass for everything else ---
     if needs_count:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for i, e in enumerate(value_exps):
-            if e.kind == "not_null":
-                aggs.append(
-                    F.sum(F.when(F.col(e.column).isNull(), 1).otherwise(0)).alias(f"u{i}")
-                )
-                aggs.append(F.count(F.lit(1)).alias(f"n{i}"))  # basis: all rows
-            else:
-                cond = _violation_condition(e)
-                aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"u{i}"))
-                aggs.append(F.count(F.col(e.column)).alias(f"n{i}"))  # basis: non-null
-        row = df.agg(*aggs).first()
-        total = row["__rows"]
+        row = _suite_counts(df, counted, parent)
+        total = row["__rows"] or 0
 
         for e in suite:
             if e.kind == "row_count_between":
@@ -150,7 +207,7 @@ def run_suite(df: DataFrame, suite: list[Expectation], table: str = "table",
                 )
                 results.append(ExpectationResult(e, ok, element_count=total))
 
-        for i, e in enumerate(value_exps):
+        for i, e in enumerate(counted):
             n = row[f"n{i}"] or 0
             u = row[f"u{i}"] or 0
             pct = (u / n * 100.0) if n else 0.0
@@ -160,6 +217,10 @@ def run_suite(df: DataFrame, suite: list[Expectation], table: str = "table",
                                   unexpected_percent=pct)
             )
 
-    if raise_on_failure and any(not r.success for r in results):
-        raise ValidationError(table, results)
+    if raise_on_failure:
+        for r in results:
+            if r.expectation.test and not r.success:
+                raise DbtTestFailure(f"dbt test {r.expectation.test} returned failing rows")
+        if any(not r.success for r in results):
+            raise ValidationError(table, results)
     return results

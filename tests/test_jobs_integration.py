@@ -127,3 +127,115 @@ def test_pipeline_quality_gate_failure_marks_ledger_and_alerts(spark, pipe):
     # alert hook fired for the failed stage (O5), downstream never ran
     assert pipe._alerts and pipe._alerts[0][1] == "bronze_validate"
     assert not pipe.warehouse.exists("silver", "silver_yellow_tripdata")
+
+
+@pytest.mark.parametrize("rows, stage, message", [
+    # no row at all: the staging table is never written
+    ([], "bronze_run", "'NoneType' object has no attribute 'select'"),
+    # every pickup NULL: staging keeps the rows, bronze gets none of them
+    ([dict(r, tpep_pickup_datetime=None) for r in _month_rows("2024-01")],
+     "bronze_validate", "'NoneType' object has no attribute 'filter'"),
+])
+def test_first_month_with_no_bronze_rows_stops_early(spark, pipe, rows, stage,
+                                                     message):
+    _write_month(spark, pipe._src, "2024-01", rows)
+    with pytest.raises(AttributeError) as err:
+        pipe.run_month("2024-01")
+    assert str(err.value) == message
+    assert [a[1] for a in pipe._alerts] == [stage]
+    row = pipe.ledger.read().first()
+    assert (row["status"], row["error_message"]) == ("FAILED", message)
+
+
+def test_month_with_no_bronze_rows_after_a_loaded_one_succeeds(spark, pipe):
+    """The gates validate whole tables, so a month that adds no bronze row
+    passes them once earlier months have loaded."""
+    _write_month(spark, pipe._src, "2024-01", _month_rows("2024-01"))
+    _write_month(spark, pipe._src, "2024-02", [])
+    _write_month(spark, pipe._src, "2024-03", [
+        dict(r, tpep_pickup_datetime=None) for r in _month_rows("2024-03")])
+    for m in ("2024-01", "2024-02", "2024-03"):
+        assert pipe.run_month(m) == m
+    assert pipe.warehouse.read(spark, "silver", "silver_yellow_tripdata").count() == 31
+    assert pipe.ledger.read().filter("status = 'SUCCESS'").count() == 3
+    assert pipe._alerts == []
+
+
+# Spark jobs per call in a warm month of two 30-row months, as measured on
+# local[4] (AQE on): a global aggregate is 2 jobs (shuffle map + result).
+# The silver tests add one shuffle for ``unique`` and two jobs for the
+# deduplicated bronze keys the ``relationships`` flag broadcasts.  A ledger
+# call is one collect and one write.  Reads name their schema: no job.
+JOB_BUDGET = {
+    "target_month": 1, "register_run": 2, "mark_success": 2,
+    "validate_bronze": 2, "test_silver": 5, "validate_silver": 2,
+    "validate_gold": 2,
+    "build_bronze": 1,  # the partition write; staging is read schema-known
+}
+
+
+def _count_jobs(spark, owner, names, counts):
+    """Tag the jobs of each call of ``owner.<name>`` with its own job group
+    and add their number to ``counts[name]``."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    for name in names:
+        fn = getattr(owner, name)
+
+        def tagged(*args, _fn=fn, _name=name, **kwargs):
+            group = f"job-budget-{_name}-{id(args)}"
+            sc.setJobGroup(group, _name)
+            try:
+                return _fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                bus.waitUntilEmpty(60_000)  # the status store is async
+                counts[_name] = counts.get(_name, 0) + len(
+                    sc.statusTracker().getJobIdsForGroup(group))
+
+        setattr(owner, name, tagged)
+
+
+def test_warm_month_job_budget(spark, pipe):
+    _write_month(spark, pipe._src, "2024-01", _month_rows("2024-01"))
+    _write_month(spark, pipe._src, "2024-02", _month_rows("2024-02"))
+    pipe.run_month()
+    counts: dict = {}
+    _count_jobs(spark, pipe, ("validate_bronze", "test_silver", "validate_silver",
+                              "validate_gold", "build_bronze"), counts)
+    _count_jobs(spark, pipe.ledger, ("target_month", "register_run",
+                                     "mark_success"), counts)
+    assert pipe.run_month() == "2024-02"
+    over = {k: (counts[k], budget) for k, budget in JOB_BUDGET.items()
+            if counts[k] > budget}
+    assert not over, f"stages over their job budget (jobs, budget): {over}"
+
+
+def _tables(wh):
+    for layer in sorted(os.listdir(wh.root)):
+        for table in sorted(os.listdir(os.path.join(wh.root, layer))):
+            yield layer, table
+
+
+def test_recorded_schemas_match_disk(spark, pipe):
+    """After two months and a re-run, the schema the warehouse reads each
+    table with is the one a fresh read infers — names, order and types —
+    including after the merge swap moved the key columns to the front."""
+    _write_month(spark, pipe._src, "2024-01", _month_rows("2024-01"))
+    _write_month(spark, pipe._src, "2024-02", _month_rows("2024-02", n=20))
+    pipe.run_month()
+    pipe.run_month()
+    pipe.run_month("2024-02")
+    wh = pipe.warehouse
+    tables = list(_tables(wh))
+    assert len(tables) == 9
+    for layer, table in tables:
+        path = wh.path(layer, table)
+        fresh = spark.read.parquet(path).schema
+        assert wh.schemas[path] == fresh, (layer, table)
+        assert wh.read(spark, layer, table).schema == fresh, (layer, table)
+    daily = wh.schemas[wh.path("gold", "gold_daily_summary")]
+    assert daily.names[0] == "trip_date"
+    # a month-partitioned table keeps ``month`` last, typed as inferred
+    bronze = wh.schemas[wh.path("bronze", "bronze_yellow_tripdata")]
+    assert bronze.names[-1] == "month"

@@ -3,6 +3,9 @@ re-expressed without mocks: real Spark, tiny data)."""
 
 from __future__ import annotations
 
+import os
+import time
+
 import pytest
 
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.catalog import Warehouse
@@ -36,6 +39,28 @@ def test_ledger_month_advance_and_lifecycle(spark, tmp_warehouse):
 
     ok = ledger.read().filter("run_id = '%s'" % run1).first()
     assert ok["status"] == "SUCCESS"
+
+
+def test_ledger_lifecycle_under_non_utc_tz(spark, tmp_warehouse):
+    """Ledger times are UTC instants whatever the host's TZ: PySpark reads a
+    naive datetime as local time, which once put created_at hours off."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        ledger = Ledger(spark, Warehouse(tmp_warehouse))
+        run = ledger.register_run("p", "2024-05")
+        ledger.mark_success(run)
+        row = ledger.read().filter(f"run_id = '{run}'").first()
+        assert 0 <= row["runtime_seconds"] < 60
+        assert row["updated_at"] >= row["created_at"]
+        assert abs(row["created_at"].timestamp() - time.time()) < 60
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
 
 
 def test_ledger_conflict_ignore(spark, tmp_warehouse):

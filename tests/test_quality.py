@@ -1,14 +1,20 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from conftest import trip_row, ts
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.plans import (
     bronze_trips,
     silver_trips,
 )
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.quality import (
     BRONZE_SUITE,
+    BRONZE_TESTS,
     SILVER_SUITE,
+    SILVER_TESTS,
+    DbtTestFailure,
+    Expectation,
     ValidationError,
     accepted_values_failures,
     expect_column_values_to_be_between,
@@ -21,6 +27,7 @@ from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.quality import (
     run_suite,
     unique_failures,
 )
+from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.schema import TRIP_SCHEMA
 
 
 def test_mostly_threshold_pass_and_fail(spark):
@@ -200,3 +207,140 @@ def test_equal_width_histogram(spark):
     one = spark.createDataFrame([(7.0,), (7.0,)], "v double")
     got = equal_width_histogram(one, "v", n_bins=4).collect()
     assert len(got) == 1 and got[0]["bucket"] == 0 and got[0]["n"] == 2
+
+
+# -- fused gates: one aggregate per stage, same verdicts as one query per test
+
+def _frame(spark, rows):
+    return spark.createDataFrame(
+        [tuple(r[f.name] for f in TRIP_SCHEMA.fields) for r in rows], TRIP_SCHEMA)
+
+
+def _clean_rows(n):
+    return [trip_row(
+        vendorid=1 + i % 2,
+        tpep_pickup_datetime=ts(f"2024-01-{1 + i % 27:02d} 08:00:00"),
+        tpep_dropoff_datetime=ts(f"2024-01-{1 + i % 27:02d} 08:15:00"),
+        fare_amount=10.0 + i,
+    ) for i in range(n)]
+
+
+def _gate(df, suite, **kw):
+    """Fused results by dbt test name (or GX description), and what the gate
+    raises (None if it passes)."""
+    results = run_suite(df, suite, raise_on_failure=False, **kw)
+    try:
+        run_suite(df, suite, "t", **kw)
+        raised = None
+    except ValueError as exc:
+        raised = exc
+    return {r.expectation.test or r.expectation.describe(): r for r in results}, raised
+
+
+def _assert_parity(results, raised, per_check, order):
+    for name, failing in per_check.items():
+        assert results[name].unexpected_count == failing, name
+        assert results[name].success == (failing == 0), name
+    first = next((n for n in order if per_check[n]), None)
+    if first is None:
+        assert raised is None
+    else:
+        assert type(raised) is DbtTestFailure
+        assert str(raised) == f"dbt test {first} returned failing rows"
+
+
+@pytest.mark.parametrize("defect", [None, "vendorid", "tpep_pickup_datetime",
+                                    "tpep_dropoff_datetime"])
+def test_bronze_gate_matches_per_test_functions(spark, defect):
+    rows = _clean_rows(150)
+    if defect:
+        rows[3][defect] = None
+    bronze = bronze_trips(_frame(spark, rows))
+    results, raised = _gate(bronze, BRONZE_TESTS + BRONZE_SUITE)
+    cols = ("vendorid", "tpep_pickup_datetime", "tpep_dropoff_datetime")
+    per_check = {f"bronze.not_null.{c}": not_null_failures(bronze, c).count()
+                 for c in cols}
+    assert sum(per_check.values()) == (1 if defect else 0)
+    _assert_parity(results, raised, per_check, list(per_check))
+    # the GX part of the gate is unchanged: 1 NULL pickup in 150 < 1%
+    assert all(r.success for r in results.values() if not r.expectation.test)
+
+
+@pytest.mark.parametrize("rows, passes", [(101, True), (99, False)])
+def test_bronze_gate_mostly_threshold(spark, rows, passes):
+    """G3 (pickup not NULL, mostly=0.99) with one NULL pickup just under and
+    just over 1%: the fused gate agrees with the suite run alone, and the dbt
+    not_null test on the same column still fails first, as it always has."""
+    data = _clean_rows(rows)
+    data[0]["tpep_pickup_datetime"] = None
+    bronze = bronze_trips(_frame(spark, data))
+    g3 = BRONZE_SUITE[-1].describe()
+    fused, raised = _gate(bronze, BRONZE_TESTS + BRONZE_SUITE)
+    alone = {r.expectation.describe(): r
+             for r in run_suite(bronze, BRONZE_SUITE, raise_on_failure=False)}
+    assert fused[g3].success is alone[g3].success is passes
+    assert fused[g3].unexpected_count == alone[g3].unexpected_count == 1
+    assert fused[g3].element_count == alone[g3].element_count == rows
+    assert str(raised) == \
+        "dbt test bronze.not_null.tpep_pickup_datetime returned failing rows"
+    if passes:
+        run_suite(bronze, BRONZE_SUITE)
+    else:
+        with pytest.raises(ValidationError, match="mostly=0.99"):
+            run_suite(bronze, BRONZE_SUITE, "bronze_yellow_tripdata")
+
+
+_SILVER_DEFECTS = {
+    "duplicated_id": lambda s: s.unionByName(s.limit(1)),
+    "null_id": lambda s: s.unionByName(
+        s.limit(1).withColumn("unique_trip_id", F.lit(None).cast("string"))),
+    "two_null_ids": lambda s: s.unionByName(
+        s.limit(2).withColumn("unique_trip_id", F.lit(None).cast("string"))),
+    "null_pickup": lambda s: s.unionByName(
+        s.limit(1).withColumn("unique_trip_id", F.lit("x"))
+        .withColumn("tpep_pickup_datetime", F.lit(None).cast("timestamp"))),
+    "payment_type_9": lambda s: s.unionByName(
+        s.limit(1).withColumn("unique_trip_id", F.lit("x"))
+        .withColumn("payment_type", F.lit(9).cast(s.schema["payment_type"].dataType))),
+    "orphan_vendorid": lambda s: s.unionByName(
+        s.limit(1).withColumn("unique_trip_id", F.lit("x"))
+        .withColumn("vendorid", F.lit(99).cast(s.schema["vendorid"].dataType))),
+    "negative_total": lambda s: s.unionByName(
+        s.limit(1).withColumn("unique_trip_id", F.lit("x"))
+        .withColumn("total_amount", F.lit(-1.0).cast(s.schema["total_amount"].dataType))),
+}
+
+
+@pytest.mark.parametrize("defect", [None, *_SILVER_DEFECTS])
+def test_silver_gate_matches_per_test_functions(spark, defect):
+    bronze = bronze_trips(_frame(spark, _clean_rows(40)))
+    silver = silver_trips(bronze).localCheckpoint()
+    if defect:
+        silver = _SILVER_DEFECTS[defect](silver).localCheckpoint()
+    results, raised = _gate(silver, SILVER_TESTS, parent=bronze)
+    per_check = {
+        "silver.unique.unique_trip_id":
+            unique_failures(silver, "unique_trip_id").count(),
+        "silver.not_null.unique_trip_id":
+            not_null_failures(silver, "unique_trip_id").count(),
+        "silver.not_null.tpep_pickup_datetime":
+            not_null_failures(silver, "tpep_pickup_datetime").count(),
+        "silver.accepted_values.payment_type":
+            accepted_values_failures(silver, "payment_type", list(range(7))).count(),
+        "silver.relationships.vendorid":
+            relationship_failures(silver, "vendorid", bronze, "vendorid").count(),
+        "silver.assert_total_amount_positive":
+            no_negative_total_failures(silver).count(),
+    }
+    assert (sum(per_check.values()) > 0) == (defect is not None)
+    assert list(per_check) == [e.test for e in SILVER_TESTS]
+    _assert_parity(results, raised, per_check, list(per_check))
+
+
+def test_unique_counts_failing_keys_not_rows(spark):
+    df = spark.createDataFrame(
+        [("a",), ("a",), ("a",), ("b",), ("b",), ("c",), (None,), (None,)], "k string")
+    [r] = run_suite(df, [Expectation("unique", "k", test="t.unique.k")],
+                    raise_on_failure=False)
+    assert r.unexpected_count == unique_failures(df, "k").count() == 3  # a, b, NULL
+    assert r.element_count == 4
