@@ -17,6 +17,14 @@ no-recompute) and caches the result MEMORY_AND_DISK.  When the intermediate
 is too large for cluster memory to be a sensible home — the 100 TB case —
 ``storage="disk"`` persists DISK_ONLY instead (an ``InMemoryRelation`` is
 still a projection fence, and DISK_ONLY never evicts executor heap).
+
+Iterative algorithms (star contraction in ``extensions/graph.py``, greedy
+k-center in ``extensions/similarity.py``) use the same primitive: each
+round is one ``materialize_once(frame, storage="lazy")``, so every
+round's plan starts from a checkpoint leaf and its size stays constant
+however many rounds run.  No round is unpersisted by hand: a superseded
+round's checkpoint is freed by Spark's ``ContextCleaner`` once its
+DataFrame is garbage-collected, like every other result here.
 """
 
 from __future__ import annotations
@@ -33,13 +41,18 @@ def materialize_once(df: DataFrame, storage: str = "memory") -> DataFrame:
     the escape hatch for intermediates larger than cluster memory.
     ``storage="lazy"``: ``localCheckpoint(eager=False)`` — the first
     ACTION over the result materializes the cache, so a caller whose very
-    next statement is itself an action (the prefix-sum offset collects in
-    packing.py) pays ONE job where the eager form pays two (materialize,
-    then aggregate-from-cache); r12's MEASUREMENTS table showed the same
-    eager-vs-lazy split was the 6.6x culprit in the iterative CC rounds.
-    Only safe when the caller serializes its own first action before any
-    fan-out — concurrent first consumers of a lazy checkpoint would race
-    to compute it.
+    next statement is itself an action pays ONE job where the eager form
+    pays two (materialize, then aggregate-from-cache).  The lazy callers:
+    the prefix-sum offset collects in packing.py, and every round of the
+    iterative loops (``connected_components``' convergence count,
+    k-center's top-1 pick), where the cut lineage also keeps each round's
+    plan the size of one round.  Only safe when the caller serializes its
+    own first action before any fan-out — concurrent first consumers of a
+    lazy checkpoint would race to compute it.
+
+    Callers never unpersist the result: a superseded one (e.g. the
+    previous round of an iterative loop) is freed by Spark's
+    ``ContextCleaner`` once it is garbage-collected.
     """
     if storage == "disk":
         out = df.persist(StorageLevel.DISK_ONLY)
@@ -130,62 +143,3 @@ def has_verbatim_copies(df, key_cols) -> bool:
     ).first()
     return n != nd
 
-
-class IterativeState:
-    """Round-state manager for iterative algorithms (star contraction,
-    greedy k-center): each round's frame is persisted LAZILY, so the
-    round's own first action materializes it — one job per round instead
-    of the eager-checkpoint-plus-action two — and superseded rounds are
-    unpersisted explicitly once their successor is materialized.  Every
-    ``chain_cut`` rounds one eager ``localCheckpoint`` truncates the
-    logical plan: persist alone does not cut lineage, and ~32 stacked
-    rounds overflow the JVM stack (measured, round 12); checkpointing
-    EVERY round was the coreset_select bench flip-flop culprit
-    (MEASUREMENTS.md — page-cache-sensitive and slower in both states).
-
-    Protocol::
-
-        state = IterativeState()
-        while ...:
-            frame = state.advance(build_next(frame))
-            ... run an action on frame ...   # materializes the persist
-            state.settle()                   # drop superseded rounds
-        # the NEWEST frame stays cached for downstream consumers;
-        # call close() instead when nothing downstream reads it.
-    """
-
-    def __init__(self, chain_cut: int = 8):
-        if chain_cut < 1:
-            raise ValueError(f"chain_cut must be >= 1, got {chain_cut}")
-        self.chain_cut = chain_cut
-        self._depth = 0
-        self._frames: list[DataFrame] = []  # oldest -> newest, all cached
-
-    def advance(self, df: DataFrame) -> DataFrame:
-        """Register the next round's frame.  Returns a lazily persisted
-        frame (or, at the depth cap, an eagerly checkpointed one — the
-        checkpoint must materialize BEFORE its parents are dropped)."""
-        if self._depth + 1 >= self.chain_cut:
-            out = df.localCheckpoint(eager=True)
-            self._drop_superseded(keep=0)  # lineage cut: parents disposable
-            self._depth = 0
-        else:
-            out = df.persist(StorageLevel.MEMORY_AND_DISK)
-            self._depth += 1
-        self._frames.append(out)
-        return out
-
-    def settle(self) -> None:
-        """Unpersist every frame except the newest — call AFTER an action
-        has materialized the newest frame (dropping a parent earlier
-        would force the child to recompute its lineage from scratch)."""
-        self._drop_superseded(keep=1)
-
-    def close(self) -> None:
-        """Unpersist everything, newest included — for algorithms whose
-        result is driver-side state rather than the final frame."""
-        self._drop_superseded(keep=0)
-
-    def _drop_superseded(self, keep: int) -> None:
-        while len(self._frames) > keep:
-            self._frames.pop(0).unpersist()

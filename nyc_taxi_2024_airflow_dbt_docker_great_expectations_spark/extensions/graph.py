@@ -35,7 +35,7 @@ import warnings
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..execution import IterativeState, materialize_once
+from ..execution import materialize_once
 
 
 class ConvergenceWarning(UserWarning):
@@ -92,13 +92,10 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
     a belt-and-braces check; each round is two aggregate+join passes over
     an edge set that only shrinks.
     """
-    # materialize the edge list ONCE: it is typically the output of an
-    # expensive similarity join, and the rounds below reference it
-    # repeatedly — without the checkpoint each action re-executes that join
     # checkpoint the raw edges BEFORE deriving anything: both the node set
     # and the contraction rounds read from it, and without the checkpoint
-    # each would re-execute the (typically expensive) upstream similarity
-    # join per action
+    # each action would re-execute the (typically expensive) upstream
+    # similarity join
     e_all = materialize_once(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     )
@@ -140,20 +137,16 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
         return int(row["bad"] or 0)
 
     converged = False
-    # round state: lazy persist per contraction round — the convergence
-    # test's own job materializes it (one job per round, not the eager
-    # checkpoint's two) — with a depth-capped localCheckpoint so the
-    # lineage can't grow unboundedly on slow-converging inputs
-    # (execution.IterativeState; the round-12 kcenter rework pattern)
-    state = IterativeState()
     for _ in range(max_iter):
         # contract FIRST, then test: almost every input needs at least one
         # round, so checking up front wastes a job; contraction is
-        # idempotent on an already-converged star forest.
-        e = state.advance(_small_star(_large_star(e)))
-        bad = _non_star_count(e)
-        state.settle()  # superseded rounds; the newest stays cached
-        if bad == 0:
+        # idempotent on an already-converged star forest.  Each round is a
+        # lazy checkpoint: the convergence count's own job materializes it
+        # (one job per round), and the next round's plan starts from that
+        # leaf — each round reads its input four times, so an uncut
+        # lineage would multiply the plan every round.
+        e = materialize_once(_small_star(_large_star(e)), storage="lazy")
+        if _non_star_count(e) == 0:
             converged = True
             break
     if not converged and _non_star_count(e) > 0:

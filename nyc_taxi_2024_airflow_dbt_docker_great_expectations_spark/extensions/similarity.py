@@ -1431,19 +1431,17 @@ def kcenter_select(corpus: DataFrame, k: int = 8,
     - ``materialize=True`` (default for k > 4): carries a running
       ``__dmin`` column, updated each round against only the NEWEST
       center — total work O(k * dim) per row-scan unit.  Round state is
-      a LAZY per-round ``persist(MEMORY_AND_DISK)`` (materialized by the
-      same top-1 job — one job per round), with one eager
-      ``localCheckpoint`` every ``_KCENTER_CHAIN_CUT`` rounds to cut the
-      logical-plan depth (see :func:`_kcenter_rounds_materialized` for
-      the measured rationale).  Cached/checkpointed blocks live in
-      executor storage until unpersisted round-over-round; a lost
-      executor recomputes persisted rounds from lineage but requires a
-      restart if it held checkpoint blocks (the trade for the k-fold
-      fold saving).
+      one lazy ``localCheckpoint`` per round (materialized by the same
+      top-1 job — one job per round — and cutting the lineage, so plan
+      size is constant at any k; see :func:`_kcenter_rounds_materialized`).
+      Checkpoint blocks live in executor storage until Spark's
+      ``ContextCleaner`` frees a superseded round; a lost executor that
+      held checkpoint blocks requires a restart (the trade for the
+      k-fold fold saving).
 
     ``materialize=None`` picks by the measured crossover
     (tools/kcenter_crossover.py; sf0.1 = 60k x 64-dim, warm best-of-3,
-    stateless vs materialized, round-12 hybrid): k=8 3.98/~1.7 s,
+    stateless vs materialized, round 12, 32 cores): k=8 3.98/~1.7 s,
     k=32 39.1/6.2 s, k=64 142.5/11.2 s — the O(k^2) fold cost
     dominates from k~6 up and the two forms are measurement noise
     apart below that, where the stateless form's operational purity
@@ -1516,14 +1514,6 @@ def kcenter_select(corpus: DataFrame, k: int = 8,
     return corpus.sparkSession.createDataFrame(picked, schema)
 
 
-# lineage-depth cap for _kcenter_rounds_materialized: how many per-round
-# persist() layers may stack before ONE localCheckpoint truncates the
-# chain.  Each round adds a filter+select pair; past ~32 stacked rounds
-# task/plan recursion overflows the JVM stack (measured: StackOverflowError
-# at k=32 with no truncation), so the cap must stay well below that.
-_KCENTER_CHAIN_CUT = 8
-
-
 def _kcenter_rounds_materialized(pts: DataFrame, k: int,
                                  picked: list, chosen: list) -> list:
     """The ``materialize=True`` round loop of :func:`kcenter_select`:
@@ -1532,52 +1522,43 @@ def _kcenter_rounds_materialized(pts: DataFrame, k: int,
     O(k * dim) fold work per row-scan unit instead of the stateless
     form's O(k^2 * dim).
 
-    Round state strategy (round-12, replacing eager per-round
-    ``localCheckpoint``): each round's frame is ``persist(
-    MEMORY_AND_DISK)`` — LAZY, so the same top-1 job that picks the next
-    center materializes it (one job per round, not two), and the
-    previous round's cache is unpersisted only after its successor is
-    materialized.  Every ``_KCENTER_CHAIN_CUT`` rounds one eager
-    ``localCheckpoint`` truncates the lineage: persist alone does not cut
-    the logical plan, and past ~32 stacked rounds plan recursion
-    overflows the JVM stack (measured), while checkpointing EVERY round
-    was the bench flip-flop culprit (verdict task 3 measurement, solo
-    k=8 sf0.1: per-round checkpoint 12.25 s cold / 2.6-5.0 s warm —
-    page-cache-state sensitive — vs this form 2.43 s cold / 2.1-2.5 s
-    warm, stable in both states and faster than every prior variant).
+    Round state: each round's frame is one lazy checkpoint
+    (``materialize_once(storage="lazy")``), so the same top-1 job that
+    picks the next center materializes it — one job per round — and the
+    next round's plan starts from that checkpoint leaf, so plan size
+    stays constant at any k (an uncut chain of per-round filter+select
+    pairs overflows the JVM stack past ~32 rounds).  Superseded rounds
+    are freed by Spark's ``ContextCleaner`` once garbage-collected.
+    The eager checkpoint costs a second job per round; measured at solo
+    k=8 sf0.1 it was 12.25 s cold / 2.6-5.0 s warm, page-cache-state
+    sensitive (MEASUREMENTS.md).
 
     The trajectory is bit-identical to the stateless form because min
     over finite doubles is associative (``least(least(d1,d2),d3) ==
     least(d1,least(d2,d3))``) and both forms apply the same per-center
     distance fold (property-tested).  Mutates and returns ``picked``;
     extends ``chosen`` alongside."""
-    from ..execution import IterativeState
-
-    state = IterativeState(chain_cut=_KCENTER_CHAIN_CUT)
-    cur = state.advance(
+    cur = (
         pts.filter(F.col("__id") != F.lit(chosen[0][0]))
         .select("__id", "__v",
                 _sq_dist_to(F.col("__v"), chosen[0][1]).alias("__dmin"))
     )
     while len(picked) < k:
+        cur = materialize_once(cur, storage="lazy")
         cand = (cur.orderBy(F.desc("__dmin"), F.asc("__id"))
                 .limit(1).collect())
-        state.settle()  # superseded rounds; the newest just materialized
         if not cand:
             break
         row = cand[0]
         cvec = [float(x) for x in row["__v"]]
         chosen.append((row["__id"], cvec))
         picked.append((len(picked) + 1, row["__id"], float(row["__dmin"])))
-        if len(picked) >= k:
-            break
-        cur = state.advance(
+        cur = (
             cur.filter(F.col("__id") != F.lit(row["__id"]))
             .select("__id", "__v",
                     F.least(F.col("__dmin"),
                             _sq_dist_to(F.col("__v"), cvec)).alias("__dmin"))
         )
-    state.close()  # result is the driver-side picked list
     return picked
 
 
@@ -1794,6 +1775,10 @@ def ranking_metrics(exact: DataFrame, approx: DataFrame, k: int = 10,
     dropped just as the old ex_agg-driven output did.  Queries with no
     approx hits score 0 (``first_hit_rank`` reported as 0, not NULL).
 
+    ``(query_id_col, id_col)`` must be unique on the approx side: the
+    join matches each approx copy of a pair to its exact row, so a
+    repeated pair would count its hit and DCG term twice.
+
     Returns one row per exact-side query: ``(query_id, n_exact, n_hits,
     recall_at_k, first_hit_rank, mrr_at_k, dcg_micro, idcg_micro,
     ndcg_at_k)``.
@@ -1823,8 +1808,10 @@ def ranking_metrics(exact: DataFrame, approx: DataFrame, k: int = 10,
         ).cast("long").alias("__dcg"),
         F.min(F.when(hit, F.col("__arank"))).alias("__first"),
     )
-    n_hits = F.coalesce(F.col("__hits"), F.lit(0).cast("long"))
-    dcg = F.coalesce(F.col("__dcg"), F.lit(0).cast("long"))
+    # __hits/__dcg sum otherwise(0) terms over non-empty groups, so never
+    # NULL; __first is NULL for a query without a hit
+    n_hits = F.col("__hits")
+    dcg = F.col("__dcg")
     first = F.coalesce(F.col("__first"), F.lit(0)).cast("long")
     idcg = F.element_at(icum, F.least(F.col("n_exact"), F.lit(k))
                         .cast("int")).cast("long")

@@ -378,6 +378,26 @@ def test_connected_components_long_chain_log_rounds(spark):
     assert got == {i: 0 for i in range(64)}
 
 
+def test_connected_components_plan_size_is_round_independent(spark):
+    """Each contraction round reads its input four times, so a lineage
+    that is not cut every round multiplies the plan per round and a long
+    chain exhausts the JVM heap in the optimizer.  With one checkpoint
+    per round, the output plan of a 24-node chain is as large as that of
+    a 4-node chain, although it needs more rounds."""
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.graph import (
+        connected_components,
+    )
+
+    def plan_lines(n: int) -> int:
+        df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                   "id_a long, id_b long")
+        out = connected_components(df, max_iter=10, strict=True)
+        return len(out._jdf.queryExecution().optimizedPlan()
+                   .treeString().splitlines())
+
+    assert plan_lines(24) == plan_lines(4)
+
+
 def test_connected_components_multi_parent_star(spark):
     """A child with two parents ((7,1),(7,2)) is chain-free but NOT a
     fixpoint: 1 and 2 are connected through 7 and must share label 1."""

@@ -38,3 +38,7 @@ def test_query_schema_smoke(spark, name):
     rows = df.limit(0).collect()
     assert rows == []
     assert len(df.schema.fields) > 0
+
+
+def test_registry_matches_oracle_keys():
+    assert set(entry.queries()) == set(entry.oracle_sql())

@@ -26,9 +26,8 @@ to rot.
 Two measurement modes (the plan-flip pass is whole-registry in BOTH —
 compiling a plan is cheap; only the timed execution is scoped):
 
-- default (``--changed-plus-headline``): times the round's changed keys
-  (`_GATE_CHANGED` in `__spark_entry__.py`, plus any names given after
-  the flag) and the top-20 slowest queries from the previous FULL
+- default (``--changed-plus-headline``): times the changed keys named
+  after the flag and the top-20 slowest queries from the previous FULL
   artifact, at full best-of-N; every other query's timings are carried
   from that artifact and disclosed (`env.mode`, `env.measured_n`,
   `env.carried_n`, `carried_queries`).  The top-20 cover ~35% of total
@@ -166,8 +165,7 @@ def main() -> None:
                   "--full", flush=True)
         elif prior_q:
             top20 = sorted(prior_q, key=prior_q.get, reverse=True)[:20]
-            measure = (set(top20) | set(extra)
-                       | set(getattr(entrymod, "_GATE_CHANGED", [])))
+            measure = set(top20) | set(extra)
         else:
             print("no prior full BENCH_sf1.json — running --full", flush=True)
     from bench import _buffcache_gb
