@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 from collections.abc import Callable
 
 # make the engine package importable regardless of the harness's cwd/sys.path
@@ -76,8 +77,16 @@ from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.tempora
 )
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
     salted_join,
-    table_if_absent,
     zorder_key,
+)
+from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.artifacts import (
+    Artifact,
+    ensure,
+    sf_suffix,
+)
+from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.execution import (
+    has_verbatim_copies,
+    rep_tags,
 )
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.sampling import (
     dsir_importance_weights,
@@ -86,14 +95,40 @@ from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.sampli
     weighted_sample,
 )
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.contamination import (
+    bloom_build_mask,
     ngram_contamination,
+)
+from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
+    GRAM_PROFILE_TABLES,
+    MINHASH_INDEX_TABLES,
+    NGRAM_INDEX_TABLES,
+    _check_no_ghost_ids,
+    _dropped_by_shingling,
+    _minhash_band_keys,
+    build_gram_profile,
+    build_minhash_index,
+    build_ngram_index,
+    simhash_table,
+)
+from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.search import (
+    BM25_INDEX_TABLES,
+    build_bm25_index,
+)
+from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.similarity import (
+    IVF_INDEX_TABLES,
+    build_ivf_index_tables,
+    validate_tags_coverage,
 )
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.sketches import (
     hll_distinct,
     kmv_distinct,
 )
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.text import (
+    WINNOW_INDEX_TABLES,
+    build_winnowing_index,
     redact_pii,
+    shingled_arrays,
+    tokens,
 )
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.timeseries import (
     gapfill_periods,
@@ -125,183 +160,11 @@ RETURNFLAG_MAP = {"R": "Returned", "A": "Accepted", "N": "Not returned"}
 LINESTATUS_MAP = {"O": "Open", "F": "Finalized"}
 
 
-def _sfx(sf_dir: str) -> str:
-    """Catalog-safe suffix for per-SF warehouse artifacts."""
-    import re
-
-    return re.sub(r"\W", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-
-
-def _neardup_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The near-dup pair graph (word-3-gram Jaccard >= 0.6) as a persisted,
-    build-once warehouse table shared by the whole dedup family
-    (ngram_jaccard_dedup, dedup_clusters, cluster_canonical_best,
-    dedup_rate_by_source).  The ~N shuffle-heavy PPJoin computation runs
-    once per warehouse; every consumer after that is a bucketed table
-    scan — the reference's build-once/merge-deltas incremental pattern
-    (dbt/nyc_taxi/models/bronze/bronze_yellow_tripdata.sql:1-5) applied to the
-    corpus's most expensive derived artifact.  Deterministic (md5-ordered
-    prefixes, exact verify), so the table is identical no matter which
-    query triggers the build."""
-    return table_if_absent(
-        spark, f"neardup_pairs_{_sfx(sf_dir)}",
-        lambda: ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"), k=3, threshold=0.6,
-            shingled=_corpus_shingles_table(spark, sf_dir),
-            tables_checked=True,
-        ),
-        keys=["id_a"],
-        props={"kind": "pair_table", "k": 3, "threshold": 0.6},
-    )
-
-
-def _neardup_labels_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster labels (star-contraction connected components over
-    the persisted pair graph) as a persisted table: the cluster family
-    (dedup_clusters / cluster_canonical_best / dedup_rate_by_source) pays
-    the iterative CC once per warehouse and reads labels after that."""
-    return table_if_absent(
-        spark, f"neardup_labels_{_sfx(sf_dir)}",
-        lambda: dedup_clusters(
-            _t(spark, sf_dir, "documents"),
-            _neardup_pairs_table(spark, sf_dir),
-        ).select("doc_id", "component", "is_canonical"),
-        keys=["doc_id"],
-    )
-
-
-def _ghost_check_once(spark: SparkSession, table_name: str,
-                      corpus: DataFrame, table: DataFrame, id_col: str,
-                      what: str, legit_missing=None) -> None:
-    """Once-per-session staleness guard for a persisted corpus artifact:
-    refuse tables carrying ids absent from the corpus (dedup.py:
-    _check_no_ghost_ids), memoized per (applicationId, table) — the
-    tables are immutable once built, so repeat queries skip the job and
-    pass ``tables_checked=True`` to the engines."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
-        _check_no_ghost_ids,
-    )
-
-    memo_key = (spark.sparkContext.applicationId, table_name)
-    if memo_key not in _TAGS_STATE:
-        _check_no_ghost_ids(corpus, table, id_col, what,
-                            legit_missing=legit_missing)
-        _TAGS_STATE[memo_key] = True
-
-
-def _corpus_shingles_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-corpus word-3-gram shingle sets (doc_id, shingles) as a
-    build-once warehouse table — "tokenize once per warehouse": the
-    MinHash band table, the 0.5-threshold pair table, and any other
-    shingle consumer read this instead of re-tokenizing the corpus."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
-        _dropped_by_shingling,
-    )
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.text import (
-        shingled_arrays,
-    )
-
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.execution import (
-        rep_tags,
-    )
-
-    def build():
-        # persist the multiplicity-collapse tagging (group rep = min id per
-        # distinct array + copy count) so every pair-engine consumer skips
-        # its per-query window over the shingle arrays
-        return rep_tags(
-            shingled_arrays(_t(spark, sf_dir, "documents"),
-                            "text", "doc_id", 3),
-            "shingles", "doc_id",
-        )
-
-    tbl = table_if_absent(
-        spark, f"doc_shingles3_{_sfx(sf_dir)}",
-        build,
-        keys=["doc_id"],
-        props={"kind": "shingle_table", "k": 3, "tagged": True},
-    )
-    _ghost_check_once(spark, f"doc_shingles3_{_sfx(sf_dir)}",
-                      _t(spark, sf_dir, "documents"), tbl, "doc_id",
-                      "shingle", legit_missing=_dropped_by_shingling("text", 3))
-    return tbl
-
-
-def _posting_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-corpus unigram posting list ``(doc_id, source, term, tf)``
-    as a build-once warehouse table, bucketed on the term — "tokenize
-    once per warehouse" for the token-statistics family the same way
-    ``_corpus_shingles_table`` is for shingles: ``cooccurrence_lift``,
-    ``tfidf_terms``, ``collocations`` (unigram side) and ``token_drift``
-    read this instead of each re-running explode(tokens(text)) over the
-    raw corpus (their r13 plans re-scanned ``documents`` 4–14x per
-    query; guide §6 "read once, reuse").
-
-    Semantics are EXACTLY one row per distinct (doc, whitespace-token)
-    with its occurrence count: blank documents contribute their single
-    ``''`` token (split('') = ['']) just like the inline explode did, so
-    every consumer's values are bit-identical to the re-tokenizing form;
-    ``source`` rides denormalized (it is functionally dependent on
-    doc_id) so per-source consumers never join back to the corpus."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.text import (
-        tokens,
-    )
-
-    return table_if_absent(
-        spark, f"tok_postings_{_sfx(sf_dir)}",
-        lambda: _t(spark, sf_dir, "documents")
-        .select("doc_id", "source", F.explode(tokens("text")).alias("term"))
-        .groupBy("doc_id", "source", "term")
-        .agg(F.count(F.lit(1)).alias("tf")),
-        keys=["term"],
-        props={"kind": "posting_table", "unit": "unigram"},
-    )
-
-
-def _minhash_bands_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-corpus MinHash band keys (doc_id, band_key), bucketed on the
-    band key — the candidate join's key — as a build-once warehouse
-    table: minhash_dedup and lsh_recall probe it instead of recomputing
-    12 signature mins per document per query."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
-        _dropped_by_shingling,
-        _minhash_band_keys,
-    )
-
-    tbl = table_if_absent(
-        spark, f"minhash_bands_{_sfx(sf_dir)}",
-        lambda: _minhash_band_keys(
-            _corpus_shingles_table(spark, sf_dir), "doc_id", 12, 4
-        ),
-        keys=["band_key"],
-        props={"kind": "band_table", "k": 3, "num_hashes": 12, "bands": 4},
-    )
-    _ghost_check_once(spark, f"minhash_bands_{_sfx(sf_dir)}",
-                      _t(spark, sf_dir, "documents"), tbl, "doc_id",
-                      "band-key",
-                      legit_missing=_dropped_by_shingling("text", 3))
-    return tbl
-
-
-def _lsh_exact_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard >= 0.5 pair graph as a build-once
-    warehouse table (the 0.5-threshold sibling of _neardup_pairs_table's
-    0.6 graph — a pair table is only probe-able at or above its build
-    threshold, so the recall gauge needs its own)."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    return table_if_absent(
-        spark, f"neardup_pairs05_{_sfx(sf_dir)}",
-        lambda: ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"), k=3, threshold=0.5,
-            shingled=_corpus_shingles_table(spark, sf_dir),
-            tables_checked=True,
-        ),
-        keys=["id_a"],
-        props={"kind": "pair_table", "k": 3, "threshold": 0.5},
-    )
+def _artifact(spark: SparkSession, sf_dir: str, name: str):
+    """``ensure`` the persisted artifact ``ARTIFACTS[name]`` (declared at
+    the end of this file) for ``sf_dir``: its table prefix, or a value
+    artifact's value."""
+    return ensure(spark, sf_dir, ARTIFACTS[name])
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1402,8 +1265,9 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard is >= 0.5 by construction, so the verify step of the full
     operator cannot reject it), so the semi-join against band collisions
     equals the original exact-AND-LSH intersection."""
-    exact = _lsh_exact_pairs_table(spark, sf_dir).select("id_a", "id_b")
-    bands_t = _minhash_bands_table(spark, sf_dir)
+    exact = spark.table(_artifact(spark, sf_dir, "neardup_pairs05")).select(
+        "id_a", "id_b")
+    bands_t = spark.table(_artifact(spark, sf_dir, "minhash_bands"))
     ba = bands_t.select(F.col("doc_id").alias("id_a"), "band_key")
     bb = bands_t.select(F.col("doc_id").alias("id_b"), "band_key")
     hit = (
@@ -1433,42 +1297,6 @@ WINNOW_K = 3
 WINNOW_W = 4
 
 
-def _winnow_index_if_absent(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted winnowing fingerprint index over the corpus
-    (extensions/text.py: build_winnowing_index); returns the table
-    prefix.  The gram explode + sliding-window selection — pure fixed
-    cost per corpus — is paid once per warehouse; q_winnowing (and any
-    fingerprint-join consumer) reads two bucketed scans after that."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.text import (
-        WINNOW_INDEX_TABLES,
-        build_winnowing_index,
-    )
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
-        adopt_bucketed_table,
-    )
-
-    prefix = f"winnow_fp_{_sfx(sf_dir)}"
-    idx_keys = {"fps": ["fp_hash"], "members": ["rep_id"]}
-    idx_props = {"kind": "winnow_index", "k": WINNOW_K, "w": WINNOW_W,
-                 "collapsed": True}
-    if not all(spark.catalog.tableExists(f"{prefix}_{t}")
-               or adopt_bucketed_table(spark, f"{prefix}_{t}", idx_keys[t],
-                                       props=idx_props)
-               for t in WINNOW_INDEX_TABLES):
-        build_winnowing_index(_t(spark, sf_dir, "documents"), prefix,
-                              k=WINNOW_K, w=WINNOW_W)
-    # same staleness contract as every other persisted corpus artifact:
-    # a surviving index whose member ids are no longer in the corpus
-    # would emit fingerprints for vanished documents
-    _ghost_check_once(
-        spark, f"{prefix}_members", _t(spark, sf_dir, "documents"),
-        spark.table(f"{prefix}_members")
-        .select(F.col("member_id").alias("doc_id")),
-        "doc_id", "winnowing-member",
-    )
-    return prefix
-
-
 def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (extensions/text.py:
     winnowing_fingerprints — the MOSS scheme, SIGMOD'03): per-window
@@ -1482,7 +1310,7 @@ def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnowing_from_index,
     )
 
-    prefix = _winnow_index_if_absent(spark, sf_dir)
+    prefix = _artifact(spark, sf_dir, "winnow_fp")
     return winnowing_from_index(spark, prefix)
 
 
@@ -1572,9 +1400,9 @@ pair_j AS (
 
 def q_ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PPJoin near-dup pairs, served from the build-once persisted pair
-    table (_neardup_pairs_table); probe ≡ rebuild is pytest-asserted
-    (tests/test_extensions.py)."""
-    return _neardup_pairs_table(spark, sf_dir)
+    table (the ``neardup_pairs`` artifact); probe ≡ rebuild is
+    pytest-asserted (tests/test_extensions.py)."""
+    return spark.table(_artifact(spark, sf_dir, "neardup_pairs"))
 
 
 ORACLE_NGRAM_JACCARD = f"""
@@ -1591,8 +1419,8 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), k=3, num_hashes=12, bands=4,
         threshold=0.5,
-        shingled=_corpus_shingles_table(spark, sf_dir),
-        band_keys=_minhash_bands_table(spark, sf_dir),
+        shingled=spark.table(_artifact(spark, sf_dir, "doc_shingles3")),
+        band_keys=spark.table(_artifact(spark, sf_dir, "minhash_bands")),
         tables_checked=True,
     )
 
@@ -1658,27 +1486,11 @@ def q_minhash_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle sets.  Same batch split as the rest of the incremental
     family."""
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
-        MINHASH_INDEX_TABLES,
-        build_minhash_index,
         probe_minhash_index,
     )
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
-        adopt_bucketed_table,
-    )
 
-    docs = _t(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 10 == 0)
-    prefix = f"minhash_idx_{_sfx(sf_dir)}"
-    mh_keys = {"bands": ["band_key"], "shingles": ["doc_id"],
-               "members": ["rep_id"]}
-    mh_props = {"kind": "minhash_index", "k": 3, "num_hashes": 12, "bands": 4,
-                "collapsed": True}
-    if not all(spark.catalog.tableExists(f"{prefix}_{t}")
-               or adopt_bucketed_table(spark, f"{prefix}_{t}", mh_keys[t],
-                                       props=mh_props)
-               for t in MINHASH_INDEX_TABLES):
-        corpus = docs.filter(F.col("doc_id") % 10 != 0)
-        build_minhash_index(corpus, prefix, k=3, num_hashes=12, bands=4)
+    new = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
+    prefix = _artifact(spark, sf_dir, "minhash_idx")
     return probe_minhash_index(new, prefix, k=3, num_hashes=12, bands=4,
                                threshold=0.5)
 
@@ -1703,33 +1515,13 @@ WHERE p.jaccard >= 0.5
 """
 
 
-def _simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-corpus (doc_id, simhash) as a build-once warehouse table —
-    signatures are pure per-document functions, so the persisted table
-    composes exactly; the md5+vote aggregation is paid once per corpus."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
-        simhash_table,
-    )
-
-    tbl = table_if_absent(
-        spark, f"simhash_{_sfx(sf_dir)}",
-        lambda: simhash_table(_t(spark, sf_dir, "documents")),
-        keys=["doc_id"],
-        props={"kind": "simhash_table", "bits": 32},
-    )
-    _ghost_check_once(spark, f"simhash_{_sfx(sf_dir)}",
-                      _t(spark, sf_dir, "documents"), tbl, "doc_id",
-                      "simhash", legit_missing=F.col("text").isNull())
-    return tbl
-
-
 def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs served from the persisted signature table
-    (extensions/dedup.py:simhash_pairs over _simhash_table): banded
+    (extensions/dedup.py:simhash_pairs over the ``simhash`` artifact): banded
     candidates + bit_count verify over a bucketed scan, no per-query
     token hashing."""
     return simhash_pairs(_t(spark, sf_dir, "documents"), max_hamming=3,
-                         sims=_simhash_table(spark, sf_dir),
+                         sims=spark.table(_artifact(spark, sf_dir, "simhash")),
                          tables_checked=True)
 
 
@@ -1880,7 +1672,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk_from_index,
     )
 
-    prefix = _ivf_index_if_absent(spark, sf_dir, emb)
+    prefix = _artifact(spark, sf_dir, "ivf_idx")
     approx = ivf_topk_from_index(spark, prefix, qs, k=10, n_probe=4).select(
         "query_id", F.col("vec_id").alias("approx_id")
     )
@@ -1976,37 +1768,8 @@ def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk_from_index,
     )
 
-    prefix = _ivf_index_if_absent(spark, sf_dir, emb)
+    prefix = _artifact(spark, sf_dir, "ivf_idx")
     return ivf_topk_from_index(spark, prefix, qs, k=10, n_probe=4)
-
-
-def _ivf_index_if_absent(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
-    """Ensure the persisted IVF index tables for ``sf_dir`` exist
-    (FAISS-on-disk layout: centroids + list-bucketed corpus) and return
-    their table prefix.  The Lloyd rounds and the assignment pass are
-    paid once per warehouse; every later call is probe-only with
-    identical results (the index is a pure function of the corpus,
-    probe==direct is pytest-asserted).  Shared by q_embedding_ivf_topk
-    and q_ann_recall, and warmed by warm_persisted."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.similarity import (
-        IVF_INDEX_TABLES,
-        build_ivf_index_tables,
-    )
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
-        adopt_bucketed_table,
-    )
-
-    prefix = f"ivf_idx_{_sfx(sf_dir)}"
-    ivf_keys = {"centroids": None, "lists": ["__list"]}
-    ivf_props = {"kind": "ivf_index", "n_lists": 16, "refine_iters": 2,
-                 "sample_size": 512}
-    if not all(spark.catalog.tableExists(f"{prefix}_{t}")
-               or adopt_bucketed_table(spark, f"{prefix}_{t}", ivf_keys[t],
-                                       props=ivf_props)
-               for t in IVF_INDEX_TABLES):
-        build_ivf_index_tables(emb, prefix, n_lists=16, refine_iters=2,
-                               sample_size=512)
-    return prefix
 
 
 def _duck_lloyd_iter(x: int) -> str:
@@ -2147,8 +1910,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    tags, has_copies = _embedding_tags_table(spark, sf_dir, corpus=emb)
-    if has_copies:
+    tags = spark.table(_artifact(spark, sf_dir, "emb_dup_tags"))
+    if _artifact(spark, sf_dir, "emb_dup_copies"):
         return semantic_dedup_pairs(emb, threshold=SEMANTIC_TAU, n_lists=4,
                                     refine_iters=2, sample_size=512,
                                     dup_tags=tags, dup_tags_checked=True)
@@ -2157,47 +1920,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_dedup_pairs(emb, threshold=SEMANTIC_TAU, n_lists=4,
                                 refine_iters=2, sample_size=512,
                                 no_copies=True)
-
-
-# per-session memo of (applicationId, table) -> whether the validated tags
-# table carries any duplicate group; tables are immutable once built, so
-# one validation + one __mult probe per session per table suffices
-_TAGS_STATE: dict[tuple[str, str], bool] = {}
-
-
-def _embedding_tags_table(spark: SparkSession, sf_dir: str,
-                          corpus: DataFrame):
-    """Persisted duplicate-vector tags (vec_id, __rep, __mult — rep = min
-    id per identical embedding): the build-once half of semantic dedup's
-    multiplicity collapse, so the per-query plan never shuffles the
-    vector arrays for grouping — only id-keyed joins.  Returns
-    ``(tags_df, has_copies)``: id coverage against ``corpus`` is checked
-    once per session per table (validate_tags_coverage), as is whether
-    any duplicate group exists at all — both memoized."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.execution import (
-        rep_tags,
-    )
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.similarity import (
-        validate_tags_coverage,
-    )
-
-    def build():
-        emb = _t(spark, sf_dir, "embeddings")
-        return rep_tags(
-            emb.select("vec_id", "embedding"), "embedding", "vec_id"
-        ).drop("embedding")
-
-    name = f"emb_dup_tags_{_sfx(sf_dir)}"
-    tags = table_if_absent(
-        spark, name, build, keys=["vec_id"], props={"kind": "dup_tags"},
-    )
-    memo_key = (spark.sparkContext.applicationId, name)
-    if memo_key not in _TAGS_STATE:
-        validate_tags_coverage(corpus, tags, "vec_id")
-        _TAGS_STATE[memo_key] = bool(
-            tags.filter(F.col("__mult") > 1).limit(1).count()
-        )
-    return tags, _TAGS_STATE[memo_key]
 
 
 ORACLE_SEMANTIC_DEDUP = f"""
@@ -2538,41 +2260,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pagerank_fixed,
     )
 
-    # integer node ids (2*partkey / 2*suppkey+1): the scan reads two int
-    # columns and every exchange keys on a long — the string-labeled form
-    # ('p'||key) measured ~2x slower across the build.  The symmetric edge
-    # list persists bucketed on src (build-once: the lineitem scan +
-    # distinct is the expensive part; iterations only ever read edges)
-    def _build_edges() -> DataFrame:
-        li = _t(spark, sf_dir, "lineitem")
-        pairs = li.select(
-            (F.col("l_partkey") * 2).alias("a"),
-            (F.col("l_suppkey") * 2 + 1).alias("b"),
-        ).distinct()
-        return pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")) \
-            .unionByName(pairs.select(F.col("b").alias("src"),
-                                      F.col("a").alias("dst")))
-
-    edges = table_if_absent(
-        spark, f"pagerank_edges_{_sfx(sf_dir)}", _build_edges, keys=["src"]
-    )
-    # the node set and the degree-annotated edge list are pure functions
-    # of the edge list — persist both (build-once) so per-call work is
-    # ONLY the iteration joins
-    nodes = table_if_absent(
-        spark, f"pagerank_nodes_{_sfx(sf_dir)}",
-        lambda: edges.select(F.col("src").alias("node")).unionByName(
-            edges.select(F.col("dst").alias("node"))).distinct(),
-        keys=["node"],
-    )
-    ann = table_if_absent(
-        spark, f"pagerank_ann_{_sfx(sf_dir)}",
-        lambda: edges.join(
-            edges.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg")),
-            "src",
-        ).select(F.col("src").alias("__src"), F.col("dst").alias("__dst"),
-                 "__outdeg"),
-        keys=["__src"],
+    # the edge list, node set and degree-annotated edges are persisted
+    # artifacts (ARTIFACTS), so per-call work is ONLY the iteration joins
+    edges, nodes, ann = (
+        spark.table(_artifact(spark, sf_dir, f"pagerank_{t}"))
+        for t in ("edges", "nodes", "ann")
     )
     # ranks broadcast: the node set is parts+suppliers — dimension-sized
     # at every SF — so each iteration ships the rank vector map-side and
@@ -3280,37 +2972,9 @@ def q_mutual_knn_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = _t(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < MUTUAL_KNN_UNIVERSE)
-    prefix = _mknn_ivf_index_if_absent(spark, sf_dir, emb)
+    prefix = _artifact(spark, sf_dir, "mknn_ivf_idx")
     return mutual_knn_from_index(spark, prefix, emb, k=MUTUAL_KNN_K,
                                  n_probe=4)
-
-
-def _mknn_ivf_index_if_absent(spark: SparkSession, sf_dir: str,
-                              universe: DataFrame) -> str:
-    """Persisted IVF index over the mutual-kNN bounded universe (distinct
-    from the full-corpus index of _ivf_index_if_absent: the exact twin
-    ranks within the universe, so the ANN twin must index the same rows
-    for recall to be comparable).  Build-once per warehouse; warmed by
-    warm_persisted."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.similarity import (
-        IVF_INDEX_TABLES,
-        build_ivf_index_tables,
-    )
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
-        adopt_bucketed_table,
-    )
-
-    prefix = f"mknn_ivf_idx_{_sfx(sf_dir)}"
-    ivf_keys = {"centroids": None, "lists": ["__list"]}
-    ivf_props = {"kind": "ivf_index", "n_lists": 16, "refine_iters": 2,
-                 "sample_size": 512}
-    if not all(spark.catalog.tableExists(f"{prefix}_{t}")
-               or adopt_bucketed_table(spark, f"{prefix}_{t}", ivf_keys[t],
-                                       props=ivf_props)
-               for t in IVF_INDEX_TABLES):
-        build_ivf_index_tables(universe, prefix, n_lists=16,
-                               refine_iters=2, sample_size=512)
-    return prefix
 
 
 ORACLE_MUTUAL_KNN_INDEX = f"""
@@ -3417,8 +3081,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster canonicalization: connected components over the
     n-gram-Jaccard pair graph (min-reachable-id labels); survivors of
     cluster dedup are rows with is_canonical = true.  Served from the
-    build-once persisted label table (_neardup_labels_table)."""
-    return _neardup_labels_table(spark, sf_dir)
+    build-once persisted label table (the ``neardup_labels`` artifact)."""
+    return spark.table(_artifact(spark, sf_dir, "neardup_labels"))
 
 
 ORACLE_DEDUP_CLUSTERS = f"""
@@ -3481,17 +3145,18 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/test contamination audit — the eval-integrity check every
     corpus split needs: a near-dup pair straddling the split leaks test
     content into training.  Composition of two persisted artifacts: the
-    build-once pair table (_neardup_pairs_table) joined twice against the
-    deterministic md5 split assignment (broadcast-sized expression, no
-    extra table), keeping only cross-split pairs.  At 100 TB this is two
-    map-side expression evaluations over the (already tiny) pair table —
-    the expensive similarity join was paid once at index-build time."""
+    build-once pair table (the ``neardup_pairs`` artifact) joined twice
+    against the deterministic md5 split assignment (broadcast-sized
+    expression, no extra table), keeping only cross-split pairs.  At
+    100 TB this is two map-side expression evaluations over the (already
+    tiny) pair table — the expensive similarity join was paid once at
+    index-build time."""
     split_expr = F.when(
         (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4),
                 16, 10).cast("int") % 100) < SPLIT_TEST_PCT,
         F.lit("test"),
     ).otherwise(F.lit("train"))
-    pairs = _neardup_pairs_table(spark, sf_dir)
+    pairs = spark.table(_artifact(spark, sf_dir, "neardup_pairs"))
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", split_expr.alias("split")
     )
@@ -3532,14 +3197,14 @@ def q_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode id-hash splits cannot prevent).
 
     Composition of persisted artifacts: the component label per doc is a
-    bucketed-table read (_neardup_labels_table — the pair join + star
-    contraction were paid once at index build), and the side assignment
+    bucketed-table read (the ``neardup_labels`` artifact — the pair join +
+    star contraction were paid once at index build), and the side assignment
     is one md5 expression over the label.  At 100 TB: one map-side
     projection over the label table; deterministic on any engine.  Note
     the test fraction is exact only in expectation over CLUSTERS —
     cluster-atomic assignment necessarily trades per-doc balance for
     leakage safety."""
-    labels = _neardup_labels_table(spark, sf_dir)
+    labels = spark.table(_artifact(spark, sf_dir, "neardup_labels"))
     bucket = (
         F.conv(F.substring(F.md5(F.col("component").cast("string")), 1, 4),
                16, 10).cast("int") % 100
@@ -3857,7 +3522,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same SF must not overwrite each other's output mid-read
     out = os.path.join(
         tempfile.gettempdir(),
-        f"jsonl_rt_{_sfx(sf_dir)}_{spark.sparkContext.applicationId}",
+        f"jsonl_rt_{sf_suffix(sf_dir)}_{spark.sparkContext.applicationId}",
     )
     docs.write.mode("overwrite").json(out)
     back = spark.read.schema(
@@ -4213,10 +3878,12 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.text import (
         tfidf_top_terms,
     )
-    # PERF (r14): tf/df aggregates read the persisted _posting_table
-    # (tokenize once per warehouse) instead of re-exploding the corpus
+    # PERF (r14): tf/df aggregates read the persisted ``tok_postings``
+    # artifact (tokenize once per warehouse) instead of re-exploding the
+    # corpus
+    postings = spark.table(_artifact(spark, sf_dir, "tok_postings"))
     return tfidf_top_terms(_t(spark, sf_dir, "documents"), k=5,
-                           postings=_posting_table(spark, sf_dir)).select(
+                           postings=postings).select(
         "doc_id", "term", "tf", "df", "rk"
     )
 
@@ -4604,25 +4271,8 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_match_pairs(
         _t(spark, sf_dir, "customer"), id_col="c_custkey",
         text_col="c_name", max_dist=1,
-        no_copies=not _cust_name_copies(spark, sf_dir),
+        no_copies=not _artifact(spark, sf_dir, "cust_names"),
     )
-
-
-def _cust_name_copies(spark: SparkSession, sf_dir: str) -> bool:
-    """Memoized once per session per sf_dir (the parquet inputs are
-    immutable): does the customer table carry duplicate names?  Feeds
-    fuzzy_match's no-copies fast path; warm_persisted fires it outside
-    the bench's timed region."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.execution import (
-        has_verbatim_copies,
-    )
-
-    memo_key = (spark.sparkContext.applicationId, f"cust_names_{sf_dir}")
-    if memo_key not in _TAGS_STATE:
-        _TAGS_STATE[memo_key] = has_verbatim_copies(
-            _t(spark, sf_dir, "customer").select("c_name"), "c_name"
-        )
-    return _TAGS_STATE[memo_key]
 
 
 ORACLE_FUZZY_MATCH = """
@@ -4854,9 +4504,9 @@ def q_cluster_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     document instead of the min-id — what production corpus dedup actually
     ships.  Composition of three operators (dedup pairs, graph clustering,
     quality scoring) into one argmax aggregate.  Cluster labels come from
-    the build-once persisted label table (_neardup_labels_table)."""
+    the build-once persisted label table (the ``neardup_labels`` artifact)."""
     docs = _t(spark, sf_dir, "documents")
-    clusters = _neardup_labels_table(spark, sf_dir)
+    clusters = spark.table(_artifact(spark, sf_dir, "neardup_labels"))
     qs = quality_scores(docs).select("doc_id", "quality_score")
     return (
         clusters.join(qs, "doc_id")
@@ -5141,26 +4791,7 @@ def q_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.filter(F.col("doc_id") % DECONTAM_BENCH_MOD != 0)
     return bloom_contamination(train, n=DECONTAM_N, m_bits=BLOOM_M,
                                k_hashes=BLOOM_K,
-                               mask=_bloom_mask(spark, sf_dir))
-
-
-def _bloom_mask(spark: SparkSession, sf_dir: str) -> list:
-    """The benchmark-split Bloom bitset, memoized once per session per
-    sf_dir — a pure function of the split, bounded by BLOOM_M as driver
-    metadata; warm_persisted fires it outside the bench's timed
-    region."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.contamination import (
-        bloom_build_mask,
-    )
-
-    memo_key = (spark.sparkContext.applicationId, f"bloom_mask_{sf_dir}")
-    if memo_key not in _TAGS_STATE:
-        bench = _t(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % DECONTAM_BENCH_MOD == 0
-        )
-        _TAGS_STATE[memo_key] = bloom_build_mask(
-            bench, n=DECONTAM_N, m_bits=BLOOM_M, k_hashes=BLOOM_K)
-    return _TAGS_STATE[memo_key]
+                               mask=_artifact(spark, sf_dir, "bloom_mask"))
 
 
 def _duck_bloom_position_list(col: str) -> list[str]:
@@ -5335,11 +4966,12 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph — triangle-rich components are true duplicate cliques, stars are
     template collisions.  Two hash equi-joins over canonically ordered
     edges; no adjacency lists anywhere.  Edges come from the build-once
-    persisted pair table (_neardup_pairs_table)."""
+    persisted pair table (the ``neardup_pairs`` artifact)."""
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.graph import (
         triangle_count,
     )
-    return triangle_count(_neardup_pairs_table(spark, sf_dir))
+    return triangle_count(
+        spark.table(_artifact(spark, sf_dir, "neardup_pairs")))
 
 
 ORACLE_TRIANGLE_COUNT = f"""
@@ -6477,7 +6109,7 @@ def q_cross_source_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalized (least, greatest) so each unordered feed pair is one
     row."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    pairs = _neardup_pairs_table(spark, sf_dir)
+    pairs = spark.table(_artifact(spark, sf_dir, "neardup_pairs"))
     j = (
         pairs
         .join(docs.select(F.col("doc_id").alias("id_a"),
@@ -6511,9 +6143,10 @@ def q_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup observability composition: near-dup clusters (star-contraction
     components over the n-gram-Jaccard graph) rolled up per source —
     which ingestion feeds carry the duplicate mass.  Cluster labels come
-    from the build-once persisted label table (_neardup_labels_table)."""
+    from the build-once persisted label table (the ``neardup_labels``
+    artifact)."""
     docs = _t(spark, sf_dir, "documents")
-    labels = _neardup_labels_table(spark, sf_dir)
+    labels = spark.table(_artifact(spark, sf_dir, "neardup_labels"))
     j = docs.select("doc_id", "source").join(labels, "doc_id")
     return j.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -6614,36 +6247,8 @@ def q_neardup_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = _t(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 0)
-    prefix = _ngram_index_if_absent(spark, sf_dir)
+    prefix = _artifact(spark, sf_dir, "neardup_idx")
     return probe_ngram_index(new, prefix, k=3, threshold=0.6)
-
-
-def _ngram_index_if_absent(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted n-gram near-dup index over the CORPUS side of
-    the batch split (doc_id % 10 != 0); returns the table prefix.  Shared
-    by neardup_vs_index and incremental_clusters."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
-        NGRAM_INDEX_TABLES,
-        build_ngram_index,
-    )
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
-        adopt_bucketed_table,
-    )
-
-    prefix = f"neardup_idx_{_sfx(sf_dir)}"
-    idx_keys = {"prefix_postings": ["shingle"], "shingle_df": ["shingle"],
-                "doc_shingles": ["doc_id"], "doc_members": ["rep_id"]}
-    idx_props = {"kind": "ngram_index", "k": 3, "threshold": 0.6,
-                 "max_df": None, "collapsed": True}
-    if not all(spark.catalog.tableExists(f"{prefix}_{t}")
-               or adopt_bucketed_table(spark, f"{prefix}_{t}", idx_keys[t],
-                                       props=idx_props)
-               for t in NGRAM_INDEX_TABLES):
-        corpus = _t(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 10 != 0
-        )
-        build_ngram_index(corpus, prefix, k=3, threshold=0.6)
-    return prefix
 
 
 def q_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6662,27 +6267,12 @@ def q_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_ngram_index,
     )
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.graph import (
-        dedup_clusters,
         incremental_components,
     )
     docs = _t(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 0)
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    # corpus-internal pairs are a FILTER of the family's shared persisted
-    # pair table (both endpoints on the corpus side) — never a second
-    # PPJoin: one warehouse pays the similarity join exactly once for the
-    # whole dedup family including this incremental path
-    labels = table_if_absent(
-        spark, f"incr_corpus_labels_{_sfx(sf_dir)}",
-        lambda: dedup_clusters(
-            corpus,
-            _neardup_pairs_table(spark, sf_dir).filter(
-                (F.col("id_a") % 10 != 0) & (F.col("id_b") % 10 != 0)
-            ),
-        ).select(F.col("doc_id").alias("node"), "component"),
-        keys=["node"],
-    )
-    prefix = _ngram_index_if_absent(spark, sf_dir)
+    labels = spark.table(_artifact(spark, sf_dir, "incr_corpus_labels"))
+    prefix = _artifact(spark, sf_dir, "neardup_idx")
     cross = probe_ngram_index(new, prefix, k=3, threshold=0.6).select(
         F.col("new_id").alias("id_a"), F.col("corpus_id").alias("id_b")
     )
@@ -6734,7 +6324,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_bm25_index,
     )
 
-    prefix = _bm25_index_if_absent(spark, sf_dir)
+    prefix = _artifact(spark, sf_dir, "bm25_idx")
     return probe_bm25_index(spark, prefix, BM25_TERMS, k=BM25_K,
                             k1=BM25_K1, b=BM25_B)
 
@@ -6838,33 +6428,6 @@ ORACLE_MIXTURE_SAMPLE = _oracle_mixture()
 SUBSTR_N = 4  # matches DECONTAM_N: the corpus's longest cross-doc runs
 
 
-def _gram_profile_if_absent(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted substring-dedup gram profile over the corpus
-    (extensions/dedup.py: build_gram_profile); returns the table prefix.
-    Shared by substring_dedup and substring_dedup_dfcut — the gram-keyed
-    window exchange (the posting-volume shuffle) is paid once per
-    warehouse, every df-cut variant then aggregates the doc-bucketed
-    profile."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
-        GRAM_PROFILE_TABLES,
-        build_gram_profile,
-    )
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
-        adopt_bucketed_table,
-    )
-
-    prefix = f"substr_profile_{_sfx(sf_dir)}"
-    idx_keys = {"df_profile": ["doc_id"], "members": ["rep_id"]}
-    idx_props = {"kind": "gram_profile", "n": SUBSTR_N, "collapsed": True}
-    if not all(spark.catalog.tableExists(f"{prefix}_{t}")
-               or adopt_bucketed_table(spark, f"{prefix}_{t}", idx_keys[t],
-                                       props=idx_props)
-               for t in GRAM_PROFILE_TABLES):
-        build_gram_profile(_t(spark, sf_dir, "documents"), prefix,
-                           n=SUBSTR_N)
-    return prefix
-
-
 def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated-substring audit (extensions/dedup.py:
     duplicated_ngram_stats): per document, the fraction of its distinct
@@ -6877,7 +6440,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats_from_gram_profile,
     )
 
-    prefix = _gram_profile_if_absent(spark, sf_dir)
+    prefix = _artifact(spark, sf_dir, "substr_profile")
     return stats_from_gram_profile(spark, prefix)
 
 
@@ -6914,7 +6477,7 @@ def q_substring_dedup_dfcut(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats_from_gram_profile,
     )
 
-    prefix = _gram_profile_if_absent(spark, sf_dir)
+    prefix = _artifact(spark, sf_dir, "substr_profile")
     return stats_from_gram_profile(spark, prefix, max_df=SUBSTR_MAX_DF)
 
 
@@ -6941,29 +6504,6 @@ FROM o WHERE df_cnt <= {SUBSTR_MAX_DF} GROUP BY doc_id
 """
 
 
-def _bm25_index_if_absent(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted BM25 inverted index for this sf_dir; returns
-    the table prefix.  Shared by bm25_vs_index and hybrid_rrf."""
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.search import (
-        BM25_INDEX_TABLES,
-        build_bm25_index,
-    )
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
-        adopt_bucketed_table,
-    )
-
-    prefix = f"bm25_idx_{_sfx(sf_dir)}"
-    # keys per table: postings bucket on term; stats is a 1-row table
-    bm25_keys = {"postings": ["term"], "stats": None, "members": ["rep_id"]}
-    bm25_props = {"kind": "bm25_index", "collapsed": True}
-    if not all(spark.catalog.tableExists(f"{prefix}_{t}")
-               or adopt_bucketed_table(spark, f"{prefix}_{t}", bm25_keys[t],
-                                       props=bm25_props)
-               for t in BM25_INDEX_TABLES):
-        build_bm25_index(_t(spark, sf_dir, "documents"), prefix)
-    return prefix
-
-
 def q_bm25_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 against the PERSISTED inverted index (extensions/search.py:
     build_bm25_index / probe_bm25_index): the corpus tokenizes once into
@@ -6976,7 +6516,7 @@ def q_bm25_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_bm25_index,
     )
 
-    prefix = _bm25_index_if_absent(spark, sf_dir)
+    prefix = _artifact(spark, sf_dir, "bm25_idx")
     return probe_bm25_index(spark, prefix, BM25_TERMS, k=BM25_K,
                             k1=BM25_K1, b=BM25_B)
 
@@ -7071,11 +6611,12 @@ def q_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_drift_chisq,
     )
 
-    # PERF (r14): tf-weighted sums over the persisted _posting_table
+    # PERF (r14): tf-weighted sums over the persisted ``tok_postings`` artifact
     # (source rides denormalized) — no corpus scan at all
     return token_drift_chisq(_t(spark, sf_dir, "documents"),
                              source_col="source", top_k=DRIFT_TOP_K,
-                             postings=_posting_table(spark, sf_dir))
+                             postings=spark.table(
+                                 _artifact(spark, sf_dir, "tok_postings")))
 
 
 def _oracle_token_drift() -> str:
@@ -7445,7 +6986,7 @@ def q_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     token) tiebreaks.
 
     PERF (r14): the distinct (doc, token) posting list comes from the
-    persisted ``_posting_table`` — the r13 plan re-planned the
+    persisted ``tok_postings`` artifact — the r13 plan re-planned the
     explode+distinct subtree for the df branch and BOTH self-join sides
     (14 parquet scans of ``documents``); now the corpus tokenizes once
     per warehouse and the only corpus scan left is the 1-row doc count."""
@@ -7453,7 +6994,7 @@ def q_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d_total = docs.agg(F.count(F.lit(1)).alias("__d"))
     # one row per distinct (doc, token) by construction — the posting
     # table's groupBy is the old explode().distinct()
-    doc_tok = _posting_table(spark, sf_dir).select(
+    doc_tok = spark.table(_artifact(spark, sf_dir, "tok_postings")).select(
         "doc_id", F.col("term").alias("tok")
     )
     df_cnt = doc_tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -7673,7 +7214,7 @@ def q_winnow_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnowing_fingerprints,
     )
 
-    prefix = _winnow_index_if_absent(spark, sf_dir)
+    prefix = _artifact(spark, sf_dir, "winnow_fp")
     names = {t: f"{prefix}_{t}" for t in WINNOW_INDEX_TABLES}
     docs = _t(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % WINNOW_PROBE_MOD == 7
@@ -7958,7 +7499,7 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return ngram_containment_pairs(
         _t(spark, sf_dir, "documents"), k=3, threshold=CONTAINMENT_TAU,
-        shingled=_corpus_shingles_table(spark, sf_dir),
+        shingled=spark.table(_artifact(spark, sf_dir, "doc_shingles3")),
         tables_checked=True,
     )
 
@@ -7992,7 +7533,7 @@ def q_winnow_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnow_match_from_index,
     )
 
-    prefix = _winnow_index_if_absent(spark, sf_dir)
+    prefix = _artifact(spark, sf_dir, "winnow_fp")
     return winnow_match_from_index(spark, prefix,
                                    min_shared=WINNOW_MIN_SHARED)
 
@@ -8161,7 +7702,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_bm25_index,
     )
 
-    prefix = _bm25_index_if_absent(spark, sf_dir)
+    prefix = _artifact(spark, sf_dir, "bm25_idx")
     lex = probe_bm25_index(spark, prefix, BM25_TERMS, k=RRF_DEPTH,
                            k1=BM25_K1, b=BM25_B)
     # rank windows run over <= RRF_DEPTH rows — bounded by the parameter,
@@ -9244,7 +8785,7 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = cosine_topk(emb, qs, k=10)
-    prefix = _ivf_index_if_absent(spark, sf_dir, emb)
+    prefix = _artifact(spark, sf_dir, "ivf_idx")
     approx = ivf_topk_from_index(spark, prefix, qs, k=10, n_probe=4)
     return ranking_metrics(exact, approx, k=10)
 
@@ -9425,35 +8966,286 @@ LEFT JOIN bi b ON t.source = b.source
 """
 
 
-def warm_persisted(spark: SparkSession, sf_dir: str) -> None:
-    """Touch every build-once warehouse artifact for ``sf_dir``: builds
-    any absent table OUTSIDE a timed region, performs the per-session
-    catalog adoption, and fires the once-per-session staleness memos
-    (_ghost_check_once / _embedding_tags_table) — so bench timings
-    measure steady-state query execution, not first-use artifact
-    plumbing.  Invoked by bench.py before its timed pass; queries behave
-    identically without it (they build/adopt on demand)."""
-    _corpus_shingles_table(spark, sf_dir)
-    _posting_table(spark, sf_dir)
-    _minhash_bands_table(spark, sf_dir)
-    _lsh_exact_pairs_table(spark, sf_dir)
-    _neardup_pairs_table(spark, sf_dir)
-    _neardup_labels_table(spark, sf_dir)
-    _simhash_table(spark, sf_dir)
-    _embedding_tags_table(spark, sf_dir,
-                          corpus=_t(spark, sf_dir, "embeddings"))
-    _gram_profile_if_absent(spark, sf_dir)
-    _winnow_index_if_absent(spark, sf_dir)
-    _ngram_index_if_absent(spark, sf_dir)
-    _bm25_index_if_absent(spark, sf_dir)
-    _cust_name_copies(spark, sf_dir)
-    _bloom_mask(spark, sf_dir)
-    _ivf_index_if_absent(spark, sf_dir, _t(spark, sf_dir, "embeddings"))
-    _mknn_ivf_index_if_absent(
-        spark, sf_dir,
-        _t(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") < MUTUAL_KNN_UNIVERSE))
-    q_pagerank(spark, sf_dir)  # builds the edges/nodes/degree tables
+# --------------------------------------------------------------------------
+# persisted warehouse artifacts
+# --------------------------------------------------------------------------
+# Every build-once table (and per-session value) the registry reads,
+# declared once; artifacts.py:ensure names, adopts, builds and checks them.
+# Builds are deterministic pure functions of the inputs, so the query that
+# happens to trigger a build never changes a table.  A build that reads
+# another artifact ensures it first, and the block is in dependency order,
+# so warm_persisted's per-artifact seconds are each artifact's own cost.
+
+
+def _no_ghost_docs(spark: SparkSession, sf_dir: str, table: DataFrame,
+                   what: str, legit_missing=None) -> None:
+    """Staleness check of a doc-keyed artifact (dedup.py:
+    _check_no_ghost_ids): refuse a table whose ids disagree with the
+    corpus in either direction."""
+    _check_no_ghost_ids(_t(spark, sf_dir, "documents"), table, "doc_id",
+                        what, legit_missing=legit_missing)
+
+
+def _pair_graph(name: str, threshold: float) -> Artifact:
+    """Exact word-3-gram Jaccard >= ``threshold`` pair graph over the
+    persisted shingle sets.  A pair table only answers probes at or above
+    its build threshold, so each threshold is its own artifact."""
+    return Artifact(
+        name,
+        lambda spark, sf, _: ngram_jaccard_pairs(
+            _t(spark, sf, "documents"), k=3, threshold=threshold,
+            shingled=spark.table(_artifact(spark, sf, "doc_shingles3")),
+            tables_checked=True,
+        ),
+        tables={"": ["id_a"]},
+        props={"kind": "pair_table", "k": 3, "threshold": threshold},
+    )
+
+
+def _ivf(name: str, universe: int | None) -> Artifact:
+    """IVF index (centroids + list-bucketed vectors) over the embeddings,
+    or over ``vec_id < universe``: the Lloyd rounds and the assignment
+    pass are paid once per warehouse, probes read only their lists."""
+    def build(spark: SparkSession, sf_dir: str, prefix: str):
+        emb = _t(spark, sf_dir, "embeddings")
+        if universe is not None:
+            emb = emb.filter(F.col("vec_id") < universe)
+        build_ivf_index_tables(emb, prefix, n_lists=16, refine_iters=2,
+                               sample_size=512)
+
+    return Artifact(name, build, tables=IVF_INDEX_TABLES,
+                    props={"kind": "ivf_index", "n_lists": 16,
+                           "refine_iters": 2, "sample_size": 512})
+
+
+def _pagerank_edges(spark: SparkSession, sf_dir: str, _) -> DataFrame:
+    # integer node ids (2*partkey / 2*suppkey+1): the scan reads two int
+    # columns and every exchange keys on a long — the string-labeled form
+    # ('p'||key) measured ~2x slower across the build.  The lineitem scan
+    # + distinct is the expensive part; iterations only ever read edges
+    pairs = _t(spark, sf_dir, "lineitem").select(
+        (F.col("l_partkey") * 2).alias("a"),
+        (F.col("l_suppkey") * 2 + 1).alias("b"),
+    ).distinct()
+    return pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")) \
+        .unionByName(pairs.select(F.col("b").alias("src"),
+                                  F.col("a").alias("dst")))
+
+
+def _pagerank_nodes(spark: SparkSession, sf_dir: str, _) -> DataFrame:
+    e = spark.table(_artifact(spark, sf_dir, "pagerank_edges"))
+    return e.select(F.col("src").alias("node")).unionByName(
+        e.select(F.col("dst").alias("node"))).distinct()
+
+
+def _pagerank_ann(spark: SparkSession, sf_dir: str, _) -> DataFrame:
+    # the degree-annotated edge list the iterations join on
+    e = spark.table(_artifact(spark, sf_dir, "pagerank_edges"))
+    return e.join(
+        e.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg")), "src",
+    ).select(F.col("src").alias("__src"), F.col("dst").alias("__dst"),
+             "__outdeg")
+
+
+def _incr_corpus_labels(spark: SparkSession, sf_dir: str, _) -> DataFrame:
+    # corpus-internal pairs are a FILTER of the family's shared pair graph
+    # (both endpoints on the corpus side) — never a second PPJoin
+    corpus_side = (F.col("id_a") % 10 != 0) & (F.col("id_b") % 10 != 0)
+    return dedup_clusters(
+        _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0),
+        spark.table(_artifact(spark, sf_dir, "neardup_pairs"))
+        .filter(corpus_side),
+    ).select(F.col("doc_id").alias("node"), "component")
+
+
+ARTIFACTS: dict[str, Artifact] = {a.name: a for a in (
+    # word-3-gram shingle sets, rep-tagged (group rep = min id per distinct
+    # array + copy count): "tokenize once per warehouse" for the MinHash
+    # band table, both pair graphs and the containment engine
+    Artifact(
+        "doc_shingles3",
+        lambda spark, sf, _: rep_tags(
+            shingled_arrays(_t(spark, sf, "documents"), "text", "doc_id", 3),
+            "shingles", "doc_id",
+        ),
+        tables={"": ["doc_id"]},
+        props={"kind": "shingle_table", "k": 3, "tagged": True},
+        check=lambda spark, sf, name: _no_ghost_docs(
+            spark, sf, spark.table(name), "shingle",
+            _dropped_by_shingling("text", 3)),
+    ),
+    # unigram posting list (doc_id, source, term, tf), bucketed on the
+    # term: exactly one row per distinct (doc, whitespace token) — a blank
+    # document keeps its single '' token, as the inline explode did — and
+    # source rides denormalized, so the token-statistics family neither
+    # re-tokenizes nor joins back to the corpus
+    Artifact(
+        "tok_postings",
+        lambda spark, sf, _: _t(spark, sf, "documents")
+        .select("doc_id", "source", F.explode(tokens("text")).alias("term"))
+        .groupBy("doc_id", "source", "term")
+        .agg(F.count(F.lit(1)).alias("tf")),
+        tables={"": ["term"]},
+        props={"kind": "posting_table", "unit": "unigram"},
+    ),
+    # MinHash band keys (doc_id, band_key), bucketed on the candidate
+    # join's key: 12 signature mins per document, computed once
+    Artifact(
+        "minhash_bands",
+        lambda spark, sf, _: _minhash_band_keys(
+            spark.table(_artifact(spark, sf, "doc_shingles3")),
+            "doc_id", 12, 4),
+        tables={"": ["band_key"]},
+        props={"kind": "band_table", "k": 3, "num_hashes": 12, "bands": 4},
+        check=lambda spark, sf, name: _no_ghost_docs(
+            spark, sf, spark.table(name), "band-key",
+            _dropped_by_shingling("text", 3)),
+    ),
+    _pair_graph("neardup_pairs05", 0.5),
+    # the near-dup graph the whole dedup family shares: the PPJoin runs
+    # once per warehouse, every consumer after that is a bucketed scan
+    _pair_graph("neardup_pairs", 0.6),
+    # near-dup cluster labels: star-contraction components over the 0.6
+    # graph, paid once instead of per cluster-family query
+    Artifact(
+        "neardup_labels",
+        lambda spark, sf, _: dedup_clusters(
+            _t(spark, sf, "documents"),
+            spark.table(_artifact(spark, sf, "neardup_pairs")),
+        ).select("doc_id", "component", "is_canonical"),
+        tables={"": ["doc_id"]},
+    ),
+    # (doc_id, simhash): signatures are per-document pure functions
+    Artifact(
+        "simhash",
+        lambda spark, sf, _: simhash_table(_t(spark, sf, "documents")),
+        tables={"": ["doc_id"]},
+        props={"kind": "simhash_table", "bits": 32},
+        check=lambda spark, sf, name: _no_ghost_docs(
+            spark, sf, spark.table(name), "simhash", F.col("text").isNull()),
+    ),
+    # duplicate-vector tags (vec_id, __rep, __mult — rep = min id per
+    # identical embedding): the build-once half of semantic dedup's
+    # multiplicity collapse, so its plan never groups vector arrays
+    Artifact(
+        "emb_dup_tags",
+        lambda spark, sf, _: rep_tags(
+            _t(spark, sf, "embeddings").select("vec_id", "embedding"),
+            "embedding", "vec_id",
+        ).drop("embedding"),
+        tables={"": ["vec_id"]},
+        props={"kind": "dup_tags"},
+        check=lambda spark, sf, name: validate_tags_coverage(
+            _t(spark, sf, "embeddings"), spark.table(name), "vec_id"),
+    ),
+    # does any duplicate-vector group exist?  (semantic dedup's fast path)
+    Artifact(
+        "emb_dup_copies",
+        lambda spark, sf, _: bool(
+            spark.table(_artifact(spark, sf, "emb_dup_tags"))
+            .filter(F.col("__mult") > 1).limit(1).count()),
+    ),
+    # substring-dedup gram profile (dedup.py:build_gram_profile): the
+    # gram-keyed window exchange is paid once, every df cut aggregates
+    # the doc-bucketed profile
+    Artifact(
+        "substr_profile",
+        lambda spark, sf, prefix: build_gram_profile(
+            _t(spark, sf, "documents"), prefix, n=SUBSTR_N),
+        tables=GRAM_PROFILE_TABLES,
+        props={"kind": "gram_profile", "n": SUBSTR_N, "collapsed": True},
+    ),
+    # winnowing fingerprint index (text.py:build_winnowing_index); a
+    # member id missing from the corpus would emit fingerprints for a
+    # vanished document
+    Artifact(
+        "winnow_fp",
+        lambda spark, sf, prefix: build_winnowing_index(
+            _t(spark, sf, "documents"), prefix, k=WINNOW_K, w=WINNOW_W),
+        tables=WINNOW_INDEX_TABLES,
+        props={"kind": "winnow_index", "k": WINNOW_K, "w": WINNOW_W,
+               "collapsed": True},
+        check=lambda spark, sf, prefix: _no_ghost_docs(
+            spark, sf, spark.table(f"{prefix}_members")
+            .select(F.col("member_id").alias("doc_id")), "winnowing-member"),
+    ),
+    # n-gram near-dup index over the CORPUS side of the batch split
+    # (doc_id % 10 != 0): neardup_vs_index and incremental_clusters probe it
+    Artifact(
+        "neardup_idx",
+        lambda spark, sf, prefix: build_ngram_index(
+            _t(spark, sf, "documents").filter(F.col("doc_id") % 10 != 0),
+            prefix, k=3, threshold=0.6),
+        tables=NGRAM_INDEX_TABLES,
+        props={"kind": "ngram_index", "k": 3, "threshold": 0.6,
+               "max_df": None, "collapsed": True},
+    ),
+    # BM25 inverted index: bm25_vs_index and hybrid_rrf probe it
+    Artifact(
+        "bm25_idx",
+        lambda spark, sf, prefix: build_bm25_index(
+            _t(spark, sf, "documents"), prefix),
+        tables=BM25_INDEX_TABLES,
+        props={"kind": "bm25_index", "collapsed": True},
+    ),
+    # does the customer table carry duplicate names?  (fuzzy_match's
+    # no-copies fast path)
+    Artifact(
+        "cust_names",
+        lambda spark, sf, _: has_verbatim_copies(
+            _t(spark, sf, "customer").select("c_name"), "c_name"),
+    ),
+    # the benchmark-split Bloom bitset: a pure function of the split,
+    # bounded by BLOOM_M as driver metadata
+    Artifact(
+        "bloom_mask",
+        lambda spark, sf, _: bloom_build_mask(
+            _t(spark, sf, "documents")
+            .filter(F.col("doc_id") % DECONTAM_BENCH_MOD == 0),
+            n=DECONTAM_N, m_bits=BLOOM_M, k_hashes=BLOOM_K),
+    ),
+    # full-corpus IVF index (embedding_ivf_topk, ann_recall,
+    # retrieval_eval) and its twin over the mutual-kNN universe: the exact
+    # mutual_knn ranks within the universe, so the ANN twin indexes the
+    # same rows for recall to be comparable
+    _ivf("ivf_idx", None),
+    _ivf("mknn_ivf_idx", MUTUAL_KNN_UNIVERSE),
+    # PageRank's symmetric edge list, bucketed on src, and the two pure
+    # functions of it, so per-call work is only the iteration joins
+    Artifact("pagerank_edges", _pagerank_edges, tables={"": ["src"]}),
+    Artifact("pagerank_nodes", _pagerank_nodes, tables={"": ["node"]}),
+    Artifact("pagerank_ann", _pagerank_ann, tables={"": ["__src"]}),
+    # MinHash band index over the corpus side of the batch split
+    # (minhash_vs_index)
+    Artifact(
+        "minhash_idx",
+        lambda spark, sf, prefix: build_minhash_index(
+            _t(spark, sf, "documents").filter(F.col("doc_id") % 10 != 0),
+            prefix, k=3, num_hashes=12, bands=4),
+        tables=MINHASH_INDEX_TABLES,
+        props={"kind": "minhash_index", "k": 3, "num_hashes": 12,
+               "bands": 4, "collapsed": True},
+    ),
+    # corpus-side cluster labels incremental_clusters merges batches into
+    Artifact("incr_corpus_labels", _incr_corpus_labels,
+             tables={"": ["node"]}),
+)}
+
+
+def warm_persisted(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+    """``ensure`` every artifact in ``ARTIFACTS`` for ``sf_dir``: build
+    each absent table, adopt surviving ones into this session's catalog,
+    and run each staleness check and value memo once — so a timed region
+    after this measures query execution, not first-use artifact work.
+    Queries behave identically without it (they ensure on demand).
+    Returns ``{artifact: seconds}``, the build (or adoption) cost of each
+    artifact in declaration order."""
+    seconds = {}
+    for name, artifact in ARTIFACTS.items():
+        t0 = time.perf_counter()
+        ensure(spark, sf_dir, artifact)
+        seconds[name] = round(time.perf_counter() - t0, 3)
+    return seconds
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

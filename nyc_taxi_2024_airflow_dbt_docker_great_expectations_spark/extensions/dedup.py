@@ -521,8 +521,12 @@ def ngram_jaccard_pairs_vs(new: DataFrame, corpus: DataFrame,
 # the prefix join, and the exact verify keeps the RESULT identical to the
 # rebuild form (property-tested in tests/test_extensions.py).
 
-NGRAM_INDEX_TABLES = ("prefix_postings", "shingle_df", "doc_shingles",
-                      "doc_members")
+#: index table suffix -> bucket keys; the one declaration the builder writes
+#: and the warehouse artifact spec adopts against
+NGRAM_INDEX_TABLES = {"prefix_postings": ["shingle"],
+                      "shingle_df": ["shingle"],
+                      "doc_shingles": ["doc_id"],
+                      "doc_members": ["rep_id"]}
 
 
 def _index_table_names(prefix: str) -> dict[str, str]:
@@ -530,7 +534,7 @@ def _index_table_names(prefix: str) -> dict[str, str]:
 
 
 def build_ngram_index(corpus: DataFrame, table_prefix: str,
-                      text_col: str = "text", id_col: str = "doc_id",
+                      text_col: str = "text",
                       k: int = 3, threshold: float = 0.6,
                       max_df: int | None = None,
                       num_buckets: int = 8) -> dict[str, str]:
@@ -559,11 +563,14 @@ def build_ngram_index(corpus: DataFrame, table_prefix: str,
     recall, so :func:`probe_ngram_index` rejects it.  Returns the table
     names.  One tokenize pass + one df window — the same work the
     self-contained operator spends per query, paid once per corpus.
+    The corpus id column is ``doc_id``, a bucket key of the layout.
     """
     from pyspark.sql import Window as W
 
     from ..operators.layout import write_bucketed
 
+    id_col = "doc_id"
+    keys = NGRAM_INDEX_TABLES
     names = _index_table_names(table_prefix)
     # the probe replays the build's tokenization and prefix theorem, so a
     # probe under different hyperparameters is silently wrong (mostly-empty
@@ -580,14 +587,15 @@ def build_ngram_index(corpus: DataFrame, table_prefix: str,
     write_bucketed(
         tagged.select(F.col("__rep").alias("rep_id"),
                       F.col(id_col).alias("member_id")),
-        names["doc_members"], ["rep_id"], num_buckets, props=props,
+        names["doc_members"], keys["doc_members"], num_buckets, props=props,
     )
     base = tagged.filter(F.col(id_col) == F.col("__rep")).select(
         id_col, "shingles", "__mult"
     )
     write_bucketed(
         base.select(id_col, F.size("shingles").alias("n_sh"), "shingles"),
-        names["doc_shingles"], [id_col], num_buckets, props=props,
+        names["doc_shingles"], keys["doc_shingles"], num_buckets,
+        props=props,
     )
     posts = base.select(
         F.col(id_col), F.col("__mult"), F.size("shingles").alias("n_sh"),
@@ -603,7 +611,7 @@ def build_ngram_index(corpus: DataFrame, table_prefix: str,
     ))
     write_bucketed(
         ranked.groupBy("shingle").agg(F.first("df_cnt").alias("df_cnt")),
-        names["shingle_df"], ["shingle"], num_buckets, props=props,
+        names["shingle_df"], keys["shingle_df"], num_buckets, props=props,
     )
     if max_df is not None:
         ranked = ranked.filter(F.col("df_cnt") <= max_df)
@@ -616,7 +624,8 @@ def build_ngram_index(corpus: DataFrame, table_prefix: str,
         ranked.filter(F.col("rn") <= prefix_len).select(
             "shingle", id_col, "n_sh"
         ),
-        names["prefix_postings"], ["shingle"], num_buckets, props=props,
+        names["prefix_postings"], keys["prefix_postings"], num_buckets,
+        props=props,
     )
     return names
 
@@ -1203,11 +1212,12 @@ def duplicated_ngram_stats(df: DataFrame, n: int = 5,
 
 # --- persisted substring-dedup gram profile --------------------------------
 
-GRAM_PROFILE_TABLES = ("df_profile", "members")
+#: profile table suffix -> bucket keys (see NGRAM_INDEX_TABLES)
+GRAM_PROFILE_TABLES = {"df_profile": ["doc_id"], "members": ["rep_id"]}
 
 
 def build_gram_profile(corpus: DataFrame, table_prefix: str, n: int = 5,
-                       text_col: str = "text", id_col: str = "doc_id",
+                       text_col: str = "text",
                        num_buckets: int = 8) -> dict[str, str]:
     """Persist the :func:`duplicated_ngram_stats` sufficient statistic as
     warehouse tables, so the substring-dedup audit (and EVERY ``max_df``
@@ -1230,13 +1240,16 @@ def build_gram_profile(corpus: DataFrame, table_prefix: str, n: int = 5,
     dbt/nyc_taxi/models/bronze/bronze_yellow_tripdata.sql:1-5 incremental model, applied to
     the Lee et al. substring signal): the gram-keyed window exchange —
     the posting-list-volume shuffle that dominates the from-scratch
-    query — is paid once per corpus.
+    query — is paid once per corpus.  The corpus id column is ``doc_id``,
+    a bucket key of the layout.
     """
     from pyspark.sql import Window
 
     from ..execution import rep_tags
     from ..operators.layout import write_bucketed
 
+    id_col = "doc_id"
+    keys = GRAM_PROFILE_TABLES
     names = {t: f"{table_prefix}_{t}" for t in GRAM_PROFILE_TABLES}
     props = {"kind": "gram_profile", "n": n, "collapsed": True}
     tagged = materialize_once(
@@ -1246,7 +1259,7 @@ def build_gram_profile(corpus: DataFrame, table_prefix: str, n: int = 5,
     write_bucketed(
         tagged.select(F.col("__rep").alias("rep_id"),
                       F.col(id_col).alias("member_id")),
-        names["members"], ["rep_id"], num_buckets, props=props,
+        names["members"], keys["members"], num_buckets, props=props,
     )
     reps = tagged.filter(F.col(id_col) == F.col("__rep"))
     grams = reps.select(
@@ -1265,8 +1278,8 @@ def build_gram_profile(corpus: DataFrame, table_prefix: str, n: int = 5,
             "n_dup_grams"
         ),
     )
-    write_bucketed(profile, names["df_profile"], [id_col], num_buckets,
-                   props=props)
+    write_bucketed(profile, names["df_profile"], keys["df_profile"],
+                   num_buckets, props=props)
     return names
 
 
@@ -1306,7 +1319,9 @@ def stats_from_gram_profile(spark, table_prefix: str,
 
 # --- persisted MinHash index -----------------------------------------------
 
-MINHASH_INDEX_TABLES = ("bands", "shingles", "members")
+#: index table suffix -> bucket keys (see NGRAM_INDEX_TABLES)
+MINHASH_INDEX_TABLES = {"bands": ["band_key"], "shingles": ["doc_id"],
+                        "members": ["rep_id"]}
 
 
 def _minhash_table_names(prefix: str) -> dict[str, str]:
@@ -1314,7 +1329,7 @@ def _minhash_table_names(prefix: str) -> dict[str, str]:
 
 
 def build_minhash_index(corpus: DataFrame, table_prefix: str,
-                        text_col: str = "text", id_col: str = "doc_id",
+                        text_col: str = "text",
                         k: int = 3, num_hashes: int = 12, bands: int = 4,
                         num_buckets: int = 8) -> dict[str, str]:
     """Persist the MinHash-LSH side of the dedup family as warehouse
@@ -1331,11 +1346,14 @@ def build_minhash_index(corpus: DataFrame, table_prefix: str,
     bands and shingles hold one row-set per DISTINCT shingle array (rep =
     min member id) and ``<prefix>_members`` (rep_id, member_id) is the
     expansion map probes fan matched reps back out with — verbatim copies
-    cost one signature, one set of band rows, and one verify set."""
+    cost one signature, one set of band rows, and one verify set.  The
+    corpus id column is ``doc_id``, a bucket key of the layout."""
     from pyspark.sql import Window as W
 
     from ..operators.layout import write_bucketed
 
+    id_col = "doc_id"
+    keys = MINHASH_INDEX_TABLES
     names = _minhash_table_names(table_prefix)
     # band keys are scheme-dependent (k, num_hashes, bands): a probe under
     # a different scheme joins disjoint key spaces and silently finds
@@ -1349,18 +1367,18 @@ def build_minhash_index(corpus: DataFrame, table_prefix: str,
     write_bucketed(
         tagged.select(F.col("__rep").alias("rep_id"),
                       F.col(id_col).alias("member_id")),
-        names["members"], ["rep_id"], num_buckets, props=props,
+        names["members"], keys["members"], num_buckets, props=props,
     )
     base = tagged.filter(F.col(id_col) == F.col("__rep")).select(
         id_col, "shingles"
     )
     write_bucketed(
         _minhash_band_keys(base, id_col, num_hashes, bands),
-        names["bands"], ["band_key"], num_buckets, props=props,
+        names["bands"], keys["bands"], num_buckets, props=props,
     )
     write_bucketed(
-        base.select(id_col, "shingles"), names["shingles"], [id_col],
-        num_buckets, props=props,
+        base.select(id_col, "shingles"), names["shingles"],
+        keys["shingles"], num_buckets, props=props,
     )
     return names
 

@@ -108,7 +108,9 @@ def bm25_topk(df: DataFrame, terms: tuple[str, ...], k: int = 20,
     )
 
 
-BM25_INDEX_TABLES = ("postings", "stats", "members")
+#: index table suffix -> bucket keys (stats is a 1-row unbucketed table)
+BM25_INDEX_TABLES = {"postings": ["term"], "stats": None,
+                     "members": ["rep_id"]}
 
 
 def _bm25_table_names(prefix: str) -> dict[str, str]:
@@ -154,7 +156,8 @@ def build_bm25_index(corpus: DataFrame, table_prefix: str,
     write_bucketed(
         tagged.select(F.col("__rep").alias("rep_id"),
                       F.col("id").alias("member_id")),
-        names["members"], ["rep_id"], num_buckets, props=props,
+        names["members"], BM25_INDEX_TABLES["members"], num_buckets,
+        props=props,
     )
     base = tagged.filter(F.col("id") == F.col("__rep")).select(
         "id", "__txt", "mult"
@@ -169,7 +172,8 @@ def build_bm25_index(corpus: DataFrame, table_prefix: str,
         toks.filter(F.col("term").isNotNull())
         .groupBy("term", "id", "dl", "mult")
         .agg(F.count(F.lit(1)).alias("tf")),
-        names["postings"], ["term"], num_buckets, props=props,
+        names["postings"], BM25_INDEX_TABLES["postings"], num_buckets,
+        props=props,
     )
     stats = base.agg(
         F.sum("mult").cast("long").alias("n_docs"),

@@ -1564,7 +1564,8 @@ def _kcenter_rounds_materialized(pts: DataFrame, k: int,
 
 # --- persisted IVF index ---------------------------------------------------
 
-IVF_INDEX_TABLES = ("centroids", "lists")
+#: index table suffix -> bucket keys (centroids: n_lists rows, unbucketed)
+IVF_INDEX_TABLES = {"centroids": None, "lists": ["__list"]}
 
 
 def _ivf_table_names(prefix: str) -> dict[str, str]:
@@ -1605,8 +1606,8 @@ def build_ivf_index_tables(corpus: DataFrame, table_prefix: str,
         ),
         names["centroids"], props=props,
     )
-    write_bucketed(assign, names["lists"], ["__list"], num_buckets,
-                   props=props)
+    write_bucketed(assign, names["lists"], IVF_INDEX_TABLES["lists"],
+                   num_buckets, props=props)
     return names
 
 

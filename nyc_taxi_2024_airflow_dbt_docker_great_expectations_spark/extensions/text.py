@@ -721,7 +721,8 @@ def _rep_winnow_fps(reps: DataFrame, text_col: str, id_col: str,
     )
 
 
-WINNOW_INDEX_TABLES = ("fps", "members")
+#: index table suffix -> bucket keys
+WINNOW_INDEX_TABLES = {"fps": ["fp_hash"], "members": ["rep_id"]}
 
 
 def build_winnowing_index(corpus: DataFrame, table_prefix: str,
@@ -755,12 +756,13 @@ def build_winnowing_index(corpus: DataFrame, table_prefix: str,
     write_bucketed(
         tagged.select(F.col("__rep").alias("rep_id"),
                       F.col(id_col).alias("member_id")),
-        names["members"], ["rep_id"], num_buckets, props=props,
+        names["members"], WINNOW_INDEX_TABLES["members"], num_buckets,
+        props=props,
     )
     reps = tagged.filter(F.col(id_col) == F.col("__rep"))
     write_bucketed(
         _rep_winnow_fps(reps, text_col, id_col, k, w),
-        names["fps"], ["fp_hash"], num_buckets, props=props,
+        names["fps"], WINNOW_INDEX_TABLES["fps"], num_buckets, props=props,
     )
     return names
 
@@ -874,7 +876,7 @@ def collocations(df: DataFrame, text_col: str = "text",
     before the joins — the df-cut that keeps the bigram table sparse at
     100 TB.
     PERF note (r14, measured): serving the unigram side from the persisted
-    posting table (the r14 ``_posting_table`` pattern) was tried and
+    posting table (the r14 ``tok_postings`` artifact) was tried and
     REVERTED — head-to-head warm A/B at sf0.1/local[32] read 0.84–0.88 s
     for this form vs 1.0–1.3 s for the posting-fed split: the bigram
     branch needs the token arrays regardless, so the one checkpointed

@@ -155,8 +155,9 @@ def adopt_bucketed_table(spark, table: str, keys: list[str] | None = None,
     bucketed joins and return wrong rows.  ``keys``/``num_buckets``/
     ``props`` are the caller's expectation — any mismatch with the sidecar
     (including a missing sidecar when bucketing is expected) refuses
-    adoption and returns False, so :func:`table_if_absent` falls through
-    to a clean rebuild under the new spec.  Returns True on adoption.
+    adoption and returns False, so the caller (``artifacts.ensure``) falls
+    through to a clean rebuild under the new spec.  Returns True on
+    adoption.
     """
     loc = _warehouse_location(spark, table)
     jvm = spark._jvm
@@ -211,28 +212,6 @@ def adopt_bucketed_table(spark, table: str, keys: list[str] | None = None,
         f"LOCATION '{loc}'"
     )
     return True
-
-
-def table_if_absent(spark, table: str, build, keys: list[str],
-                    num_buckets: int = 8,
-                    sort_by: list[str] | None = None,
-                    props: dict | None = None) -> DataFrame:
-    """Build-once / read-many materialization: if ``table`` is not in the
-    catalog, evaluate ``build()`` (a thunk returning a DataFrame) and
-    persist it bucketed on ``keys``; either way return the table scan.
-
-    This is the reference's incremental-materialization pattern
-    (dbt/nyc_taxi/models/bronze/bronze_yellow_tripdata.sql:1-5 — build the
-    expensive artifact once, reuse it) applied to derived artifacts: a
-    family of queries sharing one expensive intermediate (e.g. the near-dup
-    pair graph) pays its computation once per warehouse instead of once per
-    query.  Deterministic builds make the result independent of which
-    query triggered it.
-    """
-    if not spark.catalog.tableExists(table):
-        if not adopt_bucketed_table(spark, table, keys, num_buckets, props):
-            write_bucketed(build(), table, keys, num_buckets, sort_by, props)
-    return spark.table(table)
 
 
 def zorder_key(x, y, bits: int = 16):

@@ -1130,10 +1130,14 @@ def test_ivf_params_scaling_law_and_recall_two_sfs(spark):
 
 def test_persisted_pair_and_label_tables_equal_rebuild(spark):
     """The build-once pair/label tables the dedup query family shares
-    (__spark_entry__._neardup_pairs_table / _neardup_labels_table) must be
-    row-identical to the self-contained rebuild, and the second access must
-    be a pure table scan (no shingle explode, no re-tokenization)."""
+    (the ``neardup_pairs`` / ``neardup_labels`` artifacts of
+    ``__spark_entry__.ARTIFACTS``) must be row-identical to the
+    self-contained rebuild, and the second access must be a pure table
+    scan (no shingle explode, no re-tokenization)."""
     import __spark_entry__ as entry
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.artifacts import (
+        sf_suffix,
+    )
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
         ngram_jaccard_pairs,
     )
@@ -1146,7 +1150,8 @@ def test_persisted_pair_and_label_tables_equal_rebuild(spark):
 
     got_pairs = sorted(
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in entry._neardup_pairs_table(spark, sf).collect()
+        for r in spark.table(entry._artifact(spark, sf, "neardup_pairs"))
+        .collect()
     )
     want_pairs = sorted(
         (r["id_a"], r["id_b"], r["jaccard"])
@@ -1156,7 +1161,8 @@ def test_persisted_pair_and_label_tables_equal_rebuild(spark):
 
     got_labels = sorted(
         (r["doc_id"], r["component"], r["is_canonical"])
-        for r in entry._neardup_labels_table(spark, sf).collect()
+        for r in spark.table(entry._artifact(spark, sf, "neardup_labels"))
+        .collect()
     )
     want_labels = sorted(
         (r["doc_id"], r["component"], r["is_canonical"])
@@ -1167,9 +1173,10 @@ def test_persisted_pair_and_label_tables_equal_rebuild(spark):
     assert got_labels == want_labels
 
     # second access is a catalog-table scan, not a recomputation
-    plan = (entry._neardup_pairs_table(spark, sf)
+    name = entry._artifact(spark, sf, "neardup_pairs")
+    plan = (spark.table(name)
             ._jdf.queryExecution().executedPlan().toString())
-    assert f"neardup_pairs_{entry._sfx(sf)}" in plan
+    assert name == f"neardup_pairs_{sf_suffix(sf)}" and name in plan
     assert "Generate explode" not in plan
 
 

@@ -178,8 +178,8 @@ def test_round6_addition_plan_shapes(spark):
 
 def test_posting_family_served_from_posting_table(spark):
     """r14: the token-statistics family (cooccurrence_lift, tfidf_terms,
-    token_drift) reads the persisted unigram posting table
-    (``_posting_table`` — tokenize once per warehouse) instead of
+    token_drift) reads the persisted unigram posting table (the
+    ``tok_postings`` artifact — tokenize once per warehouse) instead of
     re-exploding the raw corpus per consumer subtree: their r13 plans
     re-scanned ``documents`` 4–14x with a regex split in every scan.
     Guard: the posting scan is present and NO tokenizing split() remains
@@ -590,6 +590,44 @@ def test_whole_registry_nested_loop_and_global_window_invariants(spark):
     assert not offenders, offenders
 
 
+def test_warm_persisted_covers_every_artifact(spark):
+    """``warm_persisted`` ensures every persisted artifact, so building
+    the queries that once built tables inline (minhash_vs_index,
+    incremental_clusters, pagerank) afterwards registers no new table.
+    The session catalog is the witness, not the warehouse directory,
+    which survives between runs."""
+    entry.warm_persisted(spark, SF)
+    before = {t.name for t in spark.catalog.listTables()}
+    qs = entry.queries()
+    for name in ("minhash_vs_index", "incremental_clusters", "pagerank"):
+        qs[name](spark, SF)
+    assert {t.name for t in spark.catalog.listTables()} - before == set()
+
+
+def test_artifact_specs_match_their_sidecars(spark):
+    """Each declared table's ``_table_meta.json`` carries exactly the
+    spec's bucket keys, bucket count and props.  A builder that drifted
+    from its spec would have every later session refuse adoption and
+    rebuild the index, with a warning as the only sign."""
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.artifacts import (
+        table_name,
+    )
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
+        read_table_meta,
+    )
+
+    entry.warm_persisted(spark, SF)
+    n_tables = 0
+    for art in entry.ARTIFACTS.values():
+        for t, keys in art.tables.items():
+            meta = read_table_meta(spark, table_name(art, SF, t))
+            assert meta is not None, (art.name, t)
+            assert (meta["keys"], meta["num_buckets"], meta["props"]) == (
+                keys or [], 8 if keys else 0, art.props), (art.name, t)
+            n_tables += 1
+    assert n_tables == 30
+
+
 def test_range_window_and_unpivot_plan_shapes(spark):
     """range_window_revenue: ONE supplier-keyed exchange feeds both the
     daily aggregate and the RANGE-frame window (same key, Catalyst
@@ -766,7 +804,7 @@ def test_quality_family_staged_single_tokenize(spark):
     reference (Catalyst does not CSE across lambda bodies): lang_id
     carried 20 splits per row, quality_threshold_sweep 72, filter_funnel
     28, gopher_rules 52 — measured 1.2-2.3x per query at sf0.1 when
-    staged (plans/r13/*_before|after.txt)."""
+    staged."""
     qs = entry.queries()
     expected = {
         "lang_id": 1,

@@ -3,8 +3,8 @@
 Times a named subset of ``__spark_entry__.queries()`` with the exact bench
 methodology (compile-warm at sf0.001, ``warm_persisted``, noop sink,
 whole-subset rounds, best-of-N) in a dedicated session, and optionally
-writes ``explain('formatted')`` plans for each query — the before/after
-evidence files the optimization rounds commit under ``plans/rNN/``.
+writes ``explain('formatted')`` plans for each query into ``--plans DIR``
+(before/after evidence for an optimization).
 
 Usage:
     python tools/profile_queries.py [--rounds N] [--plans DIR --suffix before]
