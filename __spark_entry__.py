@@ -1,10 +1,13 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Each ``queries()`` entry exercises one operator family from SURVEY.md section 2
+Each ``QUERIES`` entry exercises one operator family from SURVEY.md section 2
 through the engine package
 (``nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark``), applied to the
 driver's TPC-H-ish testdata (FIXTURES.md section 3 maps the trip-table roles
-onto orders/lineitem).  ``oracle_sql()`` holds the DuckDB-equivalent ANSI SQL.
+onto orders/lineitem), and pairs the query function with its
+DuckDB-equivalent ANSI SQL oracle.  ``queries()`` and ``oracle_sql()`` are the
+two views of that one dict; ``tests/test_oracle.py`` checks every entry
+against its oracle in both ANSI modes.
 
 Determinism policy (so value-hashes match the oracle):
 - money/double aggregations go through ``exact_sum``/``exact_avg`` — exact
@@ -9248,381 +9251,218 @@ def warm_persisted(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     return seconds
 
 
+# One declaration per registry query: name -> (query function, DuckDB
+# oracle SQL).  ``queries()`` and ``oracle_sql()`` are views of this dict
+# in its order, so the two can never disagree on a key.
+QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "silver_clean": (q_silver_clean, ORACLE_SILVER_CLEAN),
+    "daily_summary": (q_daily_summary, ORACLE_DAILY_SUMMARY),
+    "monthly_summary": (q_monthly_summary, ORACLE_MONTHLY_SUMMARY),
+    "zone_summary": (q_zone_summary, ORACLE_ZONE_SUMMARY),
+    "vendor_summary": (q_vendor_summary, ORACLE_VENDOR_SUMMARY),
+    "payment_summary": (q_payment_summary, ORACLE_PAYMENT_SUMMARY),
+    "month_filter": (q_month_filter, ORACLE_MONTH_FILTER),
+    "watermark_filter": (q_watermark_filter, ORACLE_WATERMARK_FILTER),
+    "merge_upsert": (q_merge_upsert, ORACLE_MERGE_UPSERT),
+    "append_if_absent": (q_append_if_absent, ORACLE_APPEND_IF_ABSENT),
+    "referential_check": (q_referential_check, ORACLE_REFERENTIAL_CHECK),
+    "unique_check": (q_unique_check, ORACLE_UNIQUE_CHECK),
+    "quality_metrics": (q_quality_metrics, ORACLE_QUALITY_METRICS),
+    "decode_join": (q_decode_join, ORACLE_DECODE_JOIN),
+    "tumbling_window": (q_tumbling_window, ORACLE_TUMBLING_WINDOW),
+    "sessionization": (q_sessionization, ORACLE_SESSIONIZATION),
+    "stateful_sessions": (q_stateful_sessions, ORACLE_STATEFUL_SESSIONS),
+    "asof_last_error": (q_asof_last_error, ORACLE_ASOF_LAST_ERROR),
+    "range_join_incidents": (
+        q_range_join_incidents, ORACLE_RANGE_JOIN_INCIDENTS),
+    "stratified_sample": (q_stratified_sample, ORACLE_STRATIFIED_SAMPLE),
+    "hash_sample": (q_hash_sample, ORACLE_HASH_SAMPLE),
+    "embedding_ivf_topk": (q_embedding_ivf_topk, ORACLE_EMBEDDING_IVF_TOPK),
+    "ann_recall": (q_ann_recall, ORACLE_ANN_RECALL),
+    "label_centroids": (q_label_centroids, ORACLE_LABEL_CENTROIDS),
+    "profile_orders": (q_profile_orders, ORACLE_PROFILE_ORDERS),
+    "skew_profile": (q_skew_profile, ORACLE_SKEW_PROFILE),
+    "cube_summary": (q_cube_summary, ORACLE_CUBE_SUMMARY),
+    "top_revenue_orders": (q_top_revenue_orders, ORACLE_TOP_REVENUE_ORDERS),
+    "inactive_customers": (q_inactive_customers, ORACLE_INACTIVE_CUSTOMERS),
+    "urgent_customers": (q_urgent_customers, ORACLE_URGENT_CUSTOMERS),
+    "price_quartiles": (q_price_quartiles, ORACLE_PRICE_QUARTILES),
+    "text_stats": (q_text_stats, ORACLE_TEXT_STATS),
+    "quality_scores": (q_quality_scores, ORACLE_QUALITY_SCORES),
+    "adaptive_quality_filter": (
+        q_adaptive_quality_filter, ORACLE_ADAPTIVE_QUALITY),
+    "lang_id": (q_lang_id, ORACLE_LANG_ID),
+    "langid_confusion": (q_langid_confusion, ORACLE_LANGID_CONFUSION),
+    "lsh_recall": (q_lsh_recall, ORACLE_LSH_RECALL),
+    "fingerprints": (q_fingerprints, ORACLE_FINGERPRINTS),
+    "winnowing": (q_winnowing, ORACLE_WINNOWING),
+    "exact_dedup": (q_exact_dedup, ORACLE_EXACT_DEDUP),
+    "ngram_jaccard_dedup": (q_ngram_jaccard_dedup, ORACLE_NGRAM_JACCARD),
+    "minhash_dedup": (q_minhash_dedup, ORACLE_MINHASH),
+    "minhash_vs_index": (q_minhash_vs_index, ORACLE_MINHASH_VS_INDEX),
+    "simhash_dedup": (q_simhash_dedup, ORACLE_SIMHASH),
+    "embedding_topk": (q_embedding_topk, ORACLE_EMBEDDING_TOPK),
+    "hard_negatives": (q_hard_negatives, ORACLE_HARD_NEGATIVES),
+    "embedding_neardup": (q_embedding_neardup, ORACLE_EMBEDDING_NEARDUP),
+    "rollup_summary": (q_rollup_summary, ORACLE_ROLLUP_SUMMARY),
+    "topk_orders": (q_topk_orders, ORACLE_TOPK_ORDERS),
+    "embedding_lsh_topk": (q_embedding_lsh_topk, ORACLE_EMBEDDING_LSH_TOPK),
+    "set_ops": (q_set_ops, ORACLE_SET_OPS),
+    "bpe_token_count": (q_bpe_token_count, ORACLE_BPE_TOKEN_COUNT),
+    "bpe_encode": (q_bpe_encode, ORACLE_BPE_ENCODE),
+    "repetition_scores": (q_repetition_scores, ORACLE_REPETITION_SCORES),
+    "json_extract": (q_json_extract, ORACLE_JSON_EXTRACT),
+    "jsonl_roundtrip": (q_jsonl_roundtrip, ORACLE_JSONL_ROUNDTRIP),
+    "user_erasure": (q_user_erasure, ORACLE_USER_ERASURE),
+    "k_anonymity_audit": (q_k_anonymity_audit, ORACLE_K_ANONYMITY),
+    "l_diversity_audit": (q_l_diversity_audit, ORACLE_L_DIVERSITY),
+    "generalization_ladder": (
+        q_generalization_ladder, ORACLE_GENERALIZATION_LADDER),
+    "truncation_loss": (q_truncation_loss, ORACLE_TRUNCATION_LOSS),
+    "shard_manifest": (q_shard_manifest, ORACLE_SHARD_MANIFEST),
+    "funnel": (q_funnel, ORACLE_FUNNEL),
+    "dedup_clusters": (q_dedup_clusters, ORACLE_DEDUP_CLUSTERS),
+    "train_test_split": (q_train_test_split, ORACLE_TRAIN_TEST_SPLIT),
+    "split_leakage_audit": (q_split_leakage_audit, ORACLE_SPLIT_LEAKAGE),
+    "cluster_safe_split": (q_cluster_safe_split, ORACLE_CLUSTER_SAFE_SPLIT),
+    "moving_avg": (q_moving_avg, ORACLE_MOVING_AVG),
+    "pivot_status_by_year": (
+        q_pivot_status_by_year, ORACLE_PIVOT_STATUS_BY_YEAR),
+    "binary_meta": (q_binary_meta, ORACLE_BINARY_META),
+    "audio_meta": (q_audio_meta, ORACLE_AUDIO_META),
+    "salted_skew_join": (q_salted_skew_join, ORACLE_SALTED_SKEW_JOIN),
+    "zorder_key": (q_zorder_key, ORACLE_ZORDER_KEY),
+    "tfidf_terms": (q_tfidf_terms, ORACLE_TFIDF_TERMS),
+    "collocations": (q_collocations, ORACLE_COLLOCATIONS),
+    "next_token_model": (q_next_token_model, ORACLE_NEXT_TOKEN_MODEL),
+    "sequence_pack": (q_sequence_pack, ORACLE_SEQUENCE_PACK),
+    "bpe_sequence_pack": (q_bpe_sequence_pack, ORACLE_BPE_SEQUENCE_PACK),
+    "corpus_shuffle": (q_corpus_shuffle, ORACLE_CORPUS_SHUFFLE),
+    "stream_dedup": (q_stream_dedup, ORACLE_STREAM_DEDUP),
+    "stream_enrich": (q_stream_enrich, ORACLE_STREAM_ENRICH),
+    "stream_interval_join": (
+        q_stream_interval_join, ORACLE_STREAM_INTERVAL_JOIN),
+    "scd2_history": (q_scd2_history, ORACLE_SCD2_HISTORY),
+    "fuzzy_match": (q_fuzzy_match, ORACLE_FUZZY_MATCH),
+    "training_corpus": (q_training_corpus, ORACLE_TRAINING_CORPUS),
+    "cohort_retention": (q_cohort_retention, ORACLE_COHORT_RETENTION),
+    "sql_gold_priority": (q_sql_gold_priority, GOLD_PRIORITY_SQL),
+    "triangle_count": (q_triangle_count, ORACLE_TRIANGLE_COUNT),
+    "value_outliers": (q_value_outliers, ORACLE_VALUE_OUTLIERS),
+    "frame_sample": (q_frame_sample, ORACLE_FRAME_SAMPLE),
+    "image_resize": (q_image_resize, ORACLE_IMAGE_RESIZE),
+    "price_histogram": (q_price_histogram, ORACLE_PRICE_HISTOGRAM),
+    "embedding_quantize": (q_embedding_quantize, ORACLE_EMBEDDING_QUANTIZE),
+    "coreset_select": (q_coreset_select, ORACLE_CORESET_SELECT),
+    "embedding_covariance": (
+        q_embedding_covariance, ORACLE_EMBEDDING_COVARIANCE),
+    "cluster_canonical_best": (
+        q_cluster_canonical_best, ORACLE_CLUSTER_CANONICAL_BEST),
+    "regional_revenue": (q_regional_revenue, ORACLE_REGIONAL_REVENUE),
+    "top_customer_per_nation": (
+        q_top_customer_per_nation, ORACLE_TOP_CUSTOMER_PER_NATION),
+    "median_price": (q_median_price, ORACLE_MEDIAN_PRICE),
+    "decontamination": (q_decontamination, ORACLE_DECONTAMINATION),
+    "weighted_sample": (q_weighted_sample, ORACLE_WEIGHTED_SAMPLE),
+    "kmv_distinct": (q_kmv_distinct, ORACLE_KMV_DISTINCT),
+    "hll_distinct": (q_hll_distinct, ORACLE_HLL_DISTINCT),
+    "dsir_weights": (q_dsir_weights, ORACLE_DSIR_WEIGHTS),
+    "jl_projection": (q_jl_projection, ORACLE_JL_PROJECTION),
+    "dialog_assembly": (q_dialog_assembly, ORACLE_DIALOG_ASSEMBLY),
+    "snapshot_diff": (q_snapshot_diff, ORACLE_SNAPSHOT_DIFF),
+    "range_window_revenue": (
+        q_range_window_revenue, ORACLE_RANGE_WINDOW_REVENUE),
+    "unpivot_metrics": (q_unpivot_metrics, ORACLE_UNPIVOT_METRICS),
+    "gopher_rules": (q_gopher_rules, ORACLE_GOPHER_RULES),
+    "temporal_split": (q_temporal_split, ORACLE_TEMPORAL_SPLIT),
+    "kmv_set_ops": (q_kmv_set_ops, ORACLE_KMV_SET_OPS),
+    "revenue_growth": (q_revenue_growth, ORACLE_REVENUE_GROWTH),
+    "fulfillment_concurrency": (
+        q_fulfillment_concurrency, ORACLE_FULFILLMENT_CONCURRENCY),
+    "rfm_features": (q_rfm_features, ORACLE_RFM_FEATURES),
+    "winsorized_stats": (q_winsorized_stats, ORACLE_WINSORIZED_STATS),
+    "revenue_gini": (q_revenue_gini, ORACLE_REVENUE_GINI),
+    "zipf_slope": (q_zipf_slope, ORACLE_ZIPF_SLOPE),
+    "revenue_lorenz": (q_revenue_lorenz, ORACLE_REVENUE_LORENZ),
+    "image_histogram": (q_image_histogram, ORACLE_IMAGE_HISTOGRAM),
+    "mutual_knn": (q_mutual_knn, ORACLE_MUTUAL_KNN),
+    "mutual_knn_from_index": (
+        q_mutual_knn_from_index, ORACLE_MUTUAL_KNN_INDEX),
+    "quality_threshold_sweep": (
+        q_quality_threshold_sweep, ORACLE_QUALITY_THRESHOLD_SWEEP),
+    "quality_percentile": (q_quality_percentile, ORACLE_QUALITY_PERCENTILE),
+    "source_entropy": (q_source_entropy, ORACLE_SOURCE_ENTROPY),
+    "source_lang_mi": (q_source_lang_mi, ORACLE_SOURCE_LANG_MI),
+    "retrieval_eval": (q_retrieval_eval, ORACLE_RETRIEVAL_EVAL),
+    "quantile_normalize": (q_quantile_normalize, ORACLE_QUANTILE_NORMALIZE),
+    "distinct_ngrams": (q_distinct_ngrams, ORACLE_DISTINCT_NGRAMS),
+    "kfold_assign": (q_kfold_assign, ORACLE_KFOLD_ASSIGN),
+    "transition_entropy": (q_transition_entropy, ORACLE_TRANSITION_ENTROPY),
+    "source_vocab_overlap": (
+        q_source_vocab_overlap, ORACLE_SOURCE_VOCAB_OVERLAP),
+    "substring_removal": (q_substring_removal, ORACLE_SUBSTRING_REMOVAL),
+    "daily_gapfill": (q_daily_gapfill, ORACLE_DAILY_GAPFILL),
+    "value_anomalies": (q_value_anomalies, ORACLE_VALUE_ANOMALIES),
+    "pii_redact": (q_pii_redact, ORACLE_PII_REDACT),
+    "markup_strip": (q_markup_strip, ORACLE_MARKUP_STRIP),
+    "cdc_chunks": (q_cdc_chunks, ORACLE_CDC_CHUNKS),
+    "cdc_dedup_stats": (q_cdc_dedup_stats, ORACLE_CDC_DEDUP_STATS),
+    "sliding_window": (q_sliding_window, ORACLE_SLIDING_WINDOW),
+    "vocab_build": (q_vocab_build, ORACLE_VOCAB_BUILD),
+    "oov_rate": (q_oov_rate, ORACLE_OOV_RATE),
+    "doc_chunks": (q_doc_chunks, ORACLE_DOC_CHUNKS),
+    "bigram_novelty": (q_bigram_novelty, ORACLE_BIGRAM_NOVELTY),
+    "scd2_hard_delete": (q_scd2_hard_delete, ORACLE_SCD2_HARD_DELETE),
+    "filter_funnel": (q_filter_funnel, ORACLE_FILTER_FUNNEL),
+    "dedup_rate_by_source": (
+        q_dedup_rate_by_source, ORACLE_DEDUP_RATE_BY_SOURCE),
+    "cross_source_dupes": (q_cross_source_dupes, ORACLE_CROSS_SOURCE_DUPES),
+    "incremental_neardup": (q_incremental_neardup, ORACLE_INCREMENTAL_NEARDUP),
+    "neardup_vs_index": (q_neardup_vs_index, ORACLE_NEARDUP_VS_INDEX),
+    "incremental_clusters": (q_incremental_clusters, ORACLE_DEDUP_CLUSTERS),
+    "bm25_search": (q_bm25_search, ORACLE_BM25_SEARCH),
+    "mixture_sample": (q_mixture_sample, ORACLE_MIXTURE_SAMPLE),
+    "substring_dedup": (q_substring_dedup, ORACLE_SUBSTRING_DEDUP),
+    "substring_dedup_dfcut": (
+        q_substring_dedup_dfcut, ORACLE_SUBSTRING_DEDUP_DFCUT),
+    "semantic_dedup": (q_semantic_dedup, ORACLE_SEMANTIC_DEDUP),
+    "pagerank": (q_pagerank, ORACLE_PAGERANK),
+    "bpe_train": (q_bpe_train, ORACLE_BPE_TRAIN),
+    "ols_trend": (q_ols_trend, ORACLE_OLS_TREND),
+    "price_qty_corr": (q_price_qty_corr, ORACLE_PRICE_QTY_CORR),
+    "event_transitions": (q_event_transitions, ORACLE_EVENT_TRANSITIONS),
+    "cms_topk": (q_cms_topk, ORACLE_CMS_TOPK),
+    "overlap_join": (q_overlap_join, ORACLE_OVERLAP_JOIN),
+    "bloom_decontamination": (
+        q_bloom_decontamination, ORACLE_BLOOM_DECONTAMINATION),
+    "bm25_vs_index": (q_bm25_vs_index, ORACLE_BM25_VS_INDEX),
+    "hybrid_rrf": (q_hybrid_rrf, _oracle_hybrid_rrf()),
+    "linear_probe": (q_linear_probe, _oracle_linear_probe()),
+    "token_drift": (q_token_drift, _oracle_token_drift()),
+    "length_quartiles": (q_length_quartiles, ORACLE_LENGTH_QUARTILES),
+    "source_quality_cap": (q_source_quality_cap, ORACLE_SOURCE_QUALITY_CAP),
+    "exact_quantiles": (q_exact_quantiles, ORACLE_EXACT_QUANTILES),
+    "curriculum_order": (q_curriculum_order, ORACLE_CURRICULUM_ORDER),
+    "winnow_match": (q_winnow_match, ORACLE_WINNOW_MATCH),
+    "containment_dedup": (q_containment_dedup, ORACLE_CONTAINMENT_DEDUP),
+    "knn_predict": (q_knn_predict, ORACLE_KNN_PREDICT),
+    "decayed_engagement": (q_decayed_engagement, ORACLE_DECAYED_ENGAGEMENT),
+    "lm_coverage": (q_lm_coverage, ORACLE_LM_COVERAGE),
+    "mixture_weights": (q_mixture_weights, ORACLE_MIXTURE_WEIGHTS),
+    "winnow_probe": (q_winnow_probe, ORACLE_WINNOW_PROBE),
+    "last_touch_attribution": (
+        q_last_touch_attribution, ORACLE_LAST_TOUCH_ATTRIBUTION),
+    "cooccurrence_lift": (q_cooccurrence_lift, ORACLE_COOCCURRENCE_LIFT),
+    "packing_efficiency": (q_packing_efficiency, ORACLE_PACKING_EFFICIENCY),
+    "quantization_error": (q_quantization_error, ORACLE_QUANTIZATION_ERROR),
+    "rank_correlation": (q_rank_correlation, ORACLE_RANK_CORRELATION),
+    "ab_test": (q_ab_test, ORACLE_AB_TEST),
+}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "silver_clean": q_silver_clean,
-        "daily_summary": q_daily_summary,
-        "monthly_summary": q_monthly_summary,
-        "zone_summary": q_zone_summary,
-        "vendor_summary": q_vendor_summary,
-        "payment_summary": q_payment_summary,
-        "month_filter": q_month_filter,
-        "watermark_filter": q_watermark_filter,
-        "merge_upsert": q_merge_upsert,
-        "append_if_absent": q_append_if_absent,
-        "referential_check": q_referential_check,
-        "unique_check": q_unique_check,
-        "quality_metrics": q_quality_metrics,
-        "decode_join": q_decode_join,
-        "tumbling_window": q_tumbling_window,
-        "sessionization": q_sessionization,
-        "stateful_sessions": q_stateful_sessions,
-        "asof_last_error": q_asof_last_error,
-        "range_join_incidents": q_range_join_incidents,
-        "stratified_sample": q_stratified_sample,
-        "hash_sample": q_hash_sample,
-        "embedding_ivf_topk": q_embedding_ivf_topk,
-        "ann_recall": q_ann_recall,
-        "label_centroids": q_label_centroids,
-        "profile_orders": q_profile_orders,
-        "skew_profile": q_skew_profile,
-        "cube_summary": q_cube_summary,
-        "top_revenue_orders": q_top_revenue_orders,
-        "inactive_customers": q_inactive_customers,
-        "urgent_customers": q_urgent_customers,
-        "price_quartiles": q_price_quartiles,
-        "text_stats": q_text_stats,
-        "quality_scores": q_quality_scores,
-        "adaptive_quality_filter": q_adaptive_quality_filter,
-        "lang_id": q_lang_id,
-        "langid_confusion": q_langid_confusion,
-        "lsh_recall": q_lsh_recall,
-        "fingerprints": q_fingerprints,
-        "winnowing": q_winnowing,
-        "exact_dedup": q_exact_dedup,
-        "ngram_jaccard_dedup": q_ngram_jaccard_dedup,
-        "minhash_dedup": q_minhash_dedup,
-        "minhash_vs_index": q_minhash_vs_index,
-        "simhash_dedup": q_simhash_dedup,
-        "embedding_topk": q_embedding_topk,
-        "hard_negatives": q_hard_negatives,
-        "embedding_neardup": q_embedding_neardup,
-        "rollup_summary": q_rollup_summary,
-        "topk_orders": q_topk_orders,
-        "embedding_lsh_topk": q_embedding_lsh_topk,
-        "set_ops": q_set_ops,
-        "bpe_token_count": q_bpe_token_count,
-        "bpe_encode": q_bpe_encode,
-        "repetition_scores": q_repetition_scores,
-        "json_extract": q_json_extract,
-        "jsonl_roundtrip": q_jsonl_roundtrip,
-        "user_erasure": q_user_erasure,
-        "k_anonymity_audit": q_k_anonymity_audit,
-        "l_diversity_audit": q_l_diversity_audit,
-        "generalization_ladder": q_generalization_ladder,
-        "truncation_loss": q_truncation_loss,
-        "shard_manifest": q_shard_manifest,
-        "funnel": q_funnel,
-        "dedup_clusters": q_dedup_clusters,
-        "train_test_split": q_train_test_split,
-        "split_leakage_audit": q_split_leakage_audit,
-        "cluster_safe_split": q_cluster_safe_split,
-        "moving_avg": q_moving_avg,
-        "pivot_status_by_year": q_pivot_status_by_year,
-        "binary_meta": q_binary_meta,
-        "audio_meta": q_audio_meta,
-        "salted_skew_join": q_salted_skew_join,
-        "zorder_key": q_zorder_key,
-        "tfidf_terms": q_tfidf_terms,
-        "collocations": q_collocations,
-        "next_token_model": q_next_token_model,
-        "sequence_pack": q_sequence_pack,
-        "bpe_sequence_pack": q_bpe_sequence_pack,
-        "corpus_shuffle": q_corpus_shuffle,
-        "stream_dedup": q_stream_dedup,
-        "stream_enrich": q_stream_enrich,
-        "stream_interval_join": q_stream_interval_join,
-        "scd2_history": q_scd2_history,
-        "fuzzy_match": q_fuzzy_match,
-        "training_corpus": q_training_corpus,
-        "cohort_retention": q_cohort_retention,
-        "sql_gold_priority": q_sql_gold_priority,
-        "triangle_count": q_triangle_count,
-        "value_outliers": q_value_outliers,
-        "frame_sample": q_frame_sample,
-        "image_resize": q_image_resize,
-        "price_histogram": q_price_histogram,
-        "embedding_quantize": q_embedding_quantize,
-        "coreset_select": q_coreset_select,
-        "embedding_covariance": q_embedding_covariance,
-        "cluster_canonical_best": q_cluster_canonical_best,
-        "regional_revenue": q_regional_revenue,
-        "top_customer_per_nation": q_top_customer_per_nation,
-        "median_price": q_median_price,
-        "decontamination": q_decontamination,
-        "weighted_sample": q_weighted_sample,
-        "kmv_distinct": q_kmv_distinct,
-        "hll_distinct": q_hll_distinct,
-        "dsir_weights": q_dsir_weights,
-        "jl_projection": q_jl_projection,
-        "dialog_assembly": q_dialog_assembly,
-        "snapshot_diff": q_snapshot_diff,
-        "range_window_revenue": q_range_window_revenue,
-        "unpivot_metrics": q_unpivot_metrics,
-        "gopher_rules": q_gopher_rules,
-        "temporal_split": q_temporal_split,
-        "kmv_set_ops": q_kmv_set_ops,
-        "revenue_growth": q_revenue_growth,
-        "fulfillment_concurrency": q_fulfillment_concurrency,
-        "rfm_features": q_rfm_features,
-        "winsorized_stats": q_winsorized_stats,
-        "revenue_gini": q_revenue_gini,
-        "zipf_slope": q_zipf_slope,
-        "revenue_lorenz": q_revenue_lorenz,
-        "image_histogram": q_image_histogram,
-        "mutual_knn": q_mutual_knn,
-        "mutual_knn_from_index": q_mutual_knn_from_index,
-        "quality_threshold_sweep": q_quality_threshold_sweep,
-        "quality_percentile": q_quality_percentile,
-        "source_entropy": q_source_entropy,
-        "source_lang_mi": q_source_lang_mi,
-        "retrieval_eval": q_retrieval_eval,
-        "quantile_normalize": q_quantile_normalize,
-        "distinct_ngrams": q_distinct_ngrams,
-        "kfold_assign": q_kfold_assign,
-        "transition_entropy": q_transition_entropy,
-        "source_vocab_overlap": q_source_vocab_overlap,
-        "substring_removal": q_substring_removal,
-        "daily_gapfill": q_daily_gapfill,
-        "value_anomalies": q_value_anomalies,
-        "pii_redact": q_pii_redact,
-        "markup_strip": q_markup_strip,
-        "cdc_chunks": q_cdc_chunks,
-        "cdc_dedup_stats": q_cdc_dedup_stats,
-        "sliding_window": q_sliding_window,
-        "vocab_build": q_vocab_build,
-        "oov_rate": q_oov_rate,
-        "doc_chunks": q_doc_chunks,
-        "bigram_novelty": q_bigram_novelty,
-        "scd2_hard_delete": q_scd2_hard_delete,
-        "filter_funnel": q_filter_funnel,
-        "dedup_rate_by_source": q_dedup_rate_by_source,
-        "cross_source_dupes": q_cross_source_dupes,
-        "incremental_neardup": q_incremental_neardup,
-        "neardup_vs_index": q_neardup_vs_index,
-        "incremental_clusters": q_incremental_clusters,
-        "bm25_search": q_bm25_search,
-        "mixture_sample": q_mixture_sample,
-        "substring_dedup": q_substring_dedup,
-        "substring_dedup_dfcut": q_substring_dedup_dfcut,
-        "semantic_dedup": q_semantic_dedup,
-        "pagerank": q_pagerank,
-        "bpe_train": q_bpe_train,
-        "ols_trend": q_ols_trend,
-        "price_qty_corr": q_price_qty_corr,
-        "event_transitions": q_event_transitions,
-        "cms_topk": q_cms_topk,
-        "overlap_join": q_overlap_join,
-        "bloom_decontamination": q_bloom_decontamination,
-        "bm25_vs_index": q_bm25_vs_index,
-        "hybrid_rrf": q_hybrid_rrf,
-        "linear_probe": q_linear_probe,
-        "token_drift": q_token_drift,
-        "length_quartiles": q_length_quartiles,
-        "source_quality_cap": q_source_quality_cap,
-        "exact_quantiles": q_exact_quantiles,
-        "curriculum_order": q_curriculum_order,
-        "winnow_match": q_winnow_match,
-        "containment_dedup": q_containment_dedup,
-        "knn_predict": q_knn_predict,
-        "decayed_engagement": q_decayed_engagement,
-        "lm_coverage": q_lm_coverage,
-        "mixture_weights": q_mixture_weights,
-        "winnow_probe": q_winnow_probe,
-        "last_touch_attribution": q_last_touch_attribution,
-        "cooccurrence_lift": q_cooccurrence_lift,
-        "packing_efficiency": q_packing_efficiency,
-        "quantization_error": q_quantization_error,
-        "rank_correlation": q_rank_correlation,
-        "ab_test": q_ab_test,
-    }
+    return {name: build for name, (build, _) in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "silver_clean": ORACLE_SILVER_CLEAN,
-        "daily_summary": ORACLE_DAILY_SUMMARY,
-        "monthly_summary": ORACLE_MONTHLY_SUMMARY,
-        "zone_summary": ORACLE_ZONE_SUMMARY,
-        "vendor_summary": ORACLE_VENDOR_SUMMARY,
-        "payment_summary": ORACLE_PAYMENT_SUMMARY,
-        "month_filter": ORACLE_MONTH_FILTER,
-        "watermark_filter": ORACLE_WATERMARK_FILTER,
-        "merge_upsert": ORACLE_MERGE_UPSERT,
-        "append_if_absent": ORACLE_APPEND_IF_ABSENT,
-        "referential_check": ORACLE_REFERENTIAL_CHECK,
-        "unique_check": ORACLE_UNIQUE_CHECK,
-        "quality_metrics": ORACLE_QUALITY_METRICS,
-        "decode_join": ORACLE_DECODE_JOIN,
-        "tumbling_window": ORACLE_TUMBLING_WINDOW,
-        "sessionization": ORACLE_SESSIONIZATION,
-        "stateful_sessions": ORACLE_STATEFUL_SESSIONS,
-        "asof_last_error": ORACLE_ASOF_LAST_ERROR,
-        "range_join_incidents": ORACLE_RANGE_JOIN_INCIDENTS,
-        "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
-        "hash_sample": ORACLE_HASH_SAMPLE,
-        "embedding_ivf_topk": ORACLE_EMBEDDING_IVF_TOPK,
-        "ann_recall": ORACLE_ANN_RECALL,
-        "label_centroids": ORACLE_LABEL_CENTROIDS,
-        "profile_orders": ORACLE_PROFILE_ORDERS,
-        "skew_profile": ORACLE_SKEW_PROFILE,
-        "cube_summary": ORACLE_CUBE_SUMMARY,
-        "top_revenue_orders": ORACLE_TOP_REVENUE_ORDERS,
-        "inactive_customers": ORACLE_INACTIVE_CUSTOMERS,
-        "urgent_customers": ORACLE_URGENT_CUSTOMERS,
-        "price_quartiles": ORACLE_PRICE_QUARTILES,
-        "text_stats": ORACLE_TEXT_STATS,
-        "quality_scores": ORACLE_QUALITY_SCORES,
-        "adaptive_quality_filter": ORACLE_ADAPTIVE_QUALITY,
-        "lang_id": ORACLE_LANG_ID,
-        "langid_confusion": ORACLE_LANGID_CONFUSION,
-        "lsh_recall": ORACLE_LSH_RECALL,
-        "fingerprints": ORACLE_FINGERPRINTS,
-        "winnowing": ORACLE_WINNOWING,
-        "exact_dedup": ORACLE_EXACT_DEDUP,
-        "ngram_jaccard_dedup": ORACLE_NGRAM_JACCARD,
-        "minhash_dedup": ORACLE_MINHASH,
-        "minhash_vs_index": ORACLE_MINHASH_VS_INDEX,
-        "simhash_dedup": ORACLE_SIMHASH,
-        "embedding_topk": ORACLE_EMBEDDING_TOPK,
-        "hard_negatives": ORACLE_HARD_NEGATIVES,
-        "embedding_neardup": ORACLE_EMBEDDING_NEARDUP,
-        "rollup_summary": ORACLE_ROLLUP_SUMMARY,
-        "topk_orders": ORACLE_TOPK_ORDERS,
-        "embedding_lsh_topk": ORACLE_EMBEDDING_LSH_TOPK,
-        "set_ops": ORACLE_SET_OPS,
-        "bpe_token_count": ORACLE_BPE_TOKEN_COUNT,
-        "bpe_encode": ORACLE_BPE_ENCODE,
-        "repetition_scores": ORACLE_REPETITION_SCORES,
-        "json_extract": ORACLE_JSON_EXTRACT,
-        "jsonl_roundtrip": ORACLE_JSONL_ROUNDTRIP,
-        "user_erasure": ORACLE_USER_ERASURE,
-        "k_anonymity_audit": ORACLE_K_ANONYMITY,
-        "l_diversity_audit": ORACLE_L_DIVERSITY,
-        "generalization_ladder": ORACLE_GENERALIZATION_LADDER,
-        "truncation_loss": ORACLE_TRUNCATION_LOSS,
-        "shard_manifest": ORACLE_SHARD_MANIFEST,
-        "funnel": ORACLE_FUNNEL,
-        "dedup_clusters": ORACLE_DEDUP_CLUSTERS,
-        "train_test_split": ORACLE_TRAIN_TEST_SPLIT,
-        "split_leakage_audit": ORACLE_SPLIT_LEAKAGE,
-        "cluster_safe_split": ORACLE_CLUSTER_SAFE_SPLIT,
-        "moving_avg": ORACLE_MOVING_AVG,
-        "pivot_status_by_year": ORACLE_PIVOT_STATUS_BY_YEAR,
-        "binary_meta": ORACLE_BINARY_META,
-        "audio_meta": ORACLE_AUDIO_META,
-        "salted_skew_join": ORACLE_SALTED_SKEW_JOIN,
-        "zorder_key": ORACLE_ZORDER_KEY,
-        "tfidf_terms": ORACLE_TFIDF_TERMS,
-        "collocations": ORACLE_COLLOCATIONS,
-        "next_token_model": ORACLE_NEXT_TOKEN_MODEL,
-        "sequence_pack": ORACLE_SEQUENCE_PACK,
-        "bpe_sequence_pack": ORACLE_BPE_SEQUENCE_PACK,
-        "corpus_shuffle": ORACLE_CORPUS_SHUFFLE,
-        "stream_dedup": ORACLE_STREAM_DEDUP,
-        "stream_enrich": ORACLE_STREAM_ENRICH,
-        "stream_interval_join": ORACLE_STREAM_INTERVAL_JOIN,
-        "scd2_history": ORACLE_SCD2_HISTORY,
-        "fuzzy_match": ORACLE_FUZZY_MATCH,
-        "training_corpus": ORACLE_TRAINING_CORPUS,
-        "cohort_retention": ORACLE_COHORT_RETENTION,
-        "sql_gold_priority": GOLD_PRIORITY_SQL,
-        "triangle_count": ORACLE_TRIANGLE_COUNT,
-        "value_outliers": ORACLE_VALUE_OUTLIERS,
-        "frame_sample": ORACLE_FRAME_SAMPLE,
-        "image_resize": ORACLE_IMAGE_RESIZE,
-        "price_histogram": ORACLE_PRICE_HISTOGRAM,
-        "embedding_quantize": ORACLE_EMBEDDING_QUANTIZE,
-        "coreset_select": ORACLE_CORESET_SELECT,
-        "embedding_covariance": ORACLE_EMBEDDING_COVARIANCE,
-        "cluster_canonical_best": ORACLE_CLUSTER_CANONICAL_BEST,
-        "regional_revenue": ORACLE_REGIONAL_REVENUE,
-        "top_customer_per_nation": ORACLE_TOP_CUSTOMER_PER_NATION,
-        "median_price": ORACLE_MEDIAN_PRICE,
-        "decontamination": ORACLE_DECONTAMINATION,
-        "weighted_sample": ORACLE_WEIGHTED_SAMPLE,
-        "kmv_distinct": ORACLE_KMV_DISTINCT,
-        "hll_distinct": ORACLE_HLL_DISTINCT,
-        "dsir_weights": ORACLE_DSIR_WEIGHTS,
-        "jl_projection": ORACLE_JL_PROJECTION,
-        "dialog_assembly": ORACLE_DIALOG_ASSEMBLY,
-        "snapshot_diff": ORACLE_SNAPSHOT_DIFF,
-        "range_window_revenue": ORACLE_RANGE_WINDOW_REVENUE,
-        "unpivot_metrics": ORACLE_UNPIVOT_METRICS,
-        "gopher_rules": ORACLE_GOPHER_RULES,
-        "temporal_split": ORACLE_TEMPORAL_SPLIT,
-        "kmv_set_ops": ORACLE_KMV_SET_OPS,
-        "revenue_growth": ORACLE_REVENUE_GROWTH,
-        "fulfillment_concurrency": ORACLE_FULFILLMENT_CONCURRENCY,
-        "rfm_features": ORACLE_RFM_FEATURES,
-        "winsorized_stats": ORACLE_WINSORIZED_STATS,
-        "revenue_gini": ORACLE_REVENUE_GINI,
-        "zipf_slope": ORACLE_ZIPF_SLOPE,
-        "revenue_lorenz": ORACLE_REVENUE_LORENZ,
-        "image_histogram": ORACLE_IMAGE_HISTOGRAM,
-        "mutual_knn": ORACLE_MUTUAL_KNN,
-        "mutual_knn_from_index": ORACLE_MUTUAL_KNN_INDEX,
-        "quality_threshold_sweep": ORACLE_QUALITY_THRESHOLD_SWEEP,
-        "quality_percentile": ORACLE_QUALITY_PERCENTILE,
-        "source_entropy": ORACLE_SOURCE_ENTROPY,
-        "source_lang_mi": ORACLE_SOURCE_LANG_MI,
-        "retrieval_eval": ORACLE_RETRIEVAL_EVAL,
-        "quantile_normalize": ORACLE_QUANTILE_NORMALIZE,
-        "distinct_ngrams": ORACLE_DISTINCT_NGRAMS,
-        "kfold_assign": ORACLE_KFOLD_ASSIGN,
-        "transition_entropy": ORACLE_TRANSITION_ENTROPY,
-        "source_vocab_overlap": ORACLE_SOURCE_VOCAB_OVERLAP,
-        "substring_removal": ORACLE_SUBSTRING_REMOVAL,
-        "daily_gapfill": ORACLE_DAILY_GAPFILL,
-        "value_anomalies": ORACLE_VALUE_ANOMALIES,
-        "pii_redact": ORACLE_PII_REDACT,
-        "markup_strip": ORACLE_MARKUP_STRIP,
-        "cdc_chunks": ORACLE_CDC_CHUNKS,
-        "cdc_dedup_stats": ORACLE_CDC_DEDUP_STATS,
-        "sliding_window": ORACLE_SLIDING_WINDOW,
-        "vocab_build": ORACLE_VOCAB_BUILD,
-        "oov_rate": ORACLE_OOV_RATE,
-        "doc_chunks": ORACLE_DOC_CHUNKS,
-        "bigram_novelty": ORACLE_BIGRAM_NOVELTY,
-        "scd2_hard_delete": ORACLE_SCD2_HARD_DELETE,
-        "filter_funnel": ORACLE_FILTER_FUNNEL,
-        "dedup_rate_by_source": ORACLE_DEDUP_RATE_BY_SOURCE,
-        "cross_source_dupes": ORACLE_CROSS_SOURCE_DUPES,
-        "incremental_neardup": ORACLE_INCREMENTAL_NEARDUP,
-        "neardup_vs_index": ORACLE_NEARDUP_VS_INDEX,
-        "incremental_clusters": ORACLE_DEDUP_CLUSTERS,
-        "bm25_search": ORACLE_BM25_SEARCH,
-        "mixture_sample": ORACLE_MIXTURE_SAMPLE,
-        "substring_dedup": ORACLE_SUBSTRING_DEDUP,
-        "substring_dedup_dfcut": ORACLE_SUBSTRING_DEDUP_DFCUT,
-        "semantic_dedup": ORACLE_SEMANTIC_DEDUP,
-        "pagerank": ORACLE_PAGERANK,
-        "bpe_train": ORACLE_BPE_TRAIN,
-        "ols_trend": ORACLE_OLS_TREND,
-        "price_qty_corr": ORACLE_PRICE_QTY_CORR,
-        "event_transitions": ORACLE_EVENT_TRANSITIONS,
-        "cms_topk": ORACLE_CMS_TOPK,
-        "overlap_join": ORACLE_OVERLAP_JOIN,
-        "bloom_decontamination": ORACLE_BLOOM_DECONTAMINATION,
-        "bm25_vs_index": ORACLE_BM25_VS_INDEX,
-        "hybrid_rrf": _oracle_hybrid_rrf(),
-        "linear_probe": _oracle_linear_probe(),
-        "token_drift": _oracle_token_drift(),
-        "length_quartiles": ORACLE_LENGTH_QUARTILES,
-        "source_quality_cap": ORACLE_SOURCE_QUALITY_CAP,
-        "exact_quantiles": ORACLE_EXACT_QUANTILES,
-        "curriculum_order": ORACLE_CURRICULUM_ORDER,
-        "winnow_match": ORACLE_WINNOW_MATCH,
-        "containment_dedup": ORACLE_CONTAINMENT_DEDUP,
-        "knn_predict": ORACLE_KNN_PREDICT,
-        "decayed_engagement": ORACLE_DECAYED_ENGAGEMENT,
-        "lm_coverage": ORACLE_LM_COVERAGE,
-        "mixture_weights": ORACLE_MIXTURE_WEIGHTS,
-        "winnow_probe": ORACLE_WINNOW_PROBE,
-        "last_touch_attribution": ORACLE_LAST_TOUCH_ATTRIBUTION,
-        "cooccurrence_lift": ORACLE_COOCCURRENCE_LIFT,
-        "packing_efficiency": ORACLE_PACKING_EFFICIENCY,
-        "quantization_error": ORACLE_QUANTIZATION_ERROR,
-        "rank_correlation": ORACLE_RANK_CORRELATION,
-        "ab_test": ORACLE_AB_TEST,
-    }
+    return {name: oracle for name, (_, oracle) in QUERIES.items()}

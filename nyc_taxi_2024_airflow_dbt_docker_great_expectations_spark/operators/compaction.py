@@ -84,22 +84,28 @@ def _is_aside(name: str) -> bool:
 _MARKER_SUFFIX = "__COMPACTION_SWAP"
 
 
-def _swap_marker(fs, spark: SparkSession, path: str, tmp: str, old: str):
-    """Create the visible swap-window marker file next to ``path`` and
-    return its Hadoop Path.  Its content IS the recovery runbook, so an
-    operator who finds it after a crash needs no source access."""
+def _marker_path(spark: SparkSession, path: str):
     p = path.rstrip("/")
     parent, sep, base = p.rpartition("/")
     # "_" prefix: Spark file indexes skip it (like _SUCCESS) so a reader
     # of a table ROOT never chokes on it, but unlike the dot-hidden
     # asides it DOES show up in a plain ls
-    _, marker_path = _fs_and_path(
-        spark, f"{parent}{sep}_{base}{_MARKER_SUFFIX}")
+    return _fs_and_path(spark, f"{parent}{sep}_{base}{_MARKER_SUFFIX}")[1]
+
+
+def _swap_marker(fs, spark: SparkSession, path: str, tmp: str, old: str):
+    """Create the visible swap-window marker file next to ``path`` and
+    return its Hadoop Path.  Its content IS the recovery runbook, so an
+    operator who finds it after a crash needs no source access."""
+    p = path.rstrip("/")
+    marker_path = _marker_path(spark, path)
     msg = (
-        f"compaction swap in progress for {p}\n"
+        f"swap in progress for {p}\n"
         f"If this file outlived the job, the swap crashed mid-flight.\n"
-        f"Recovery: if {p} is missing, rename the hidden live copy back:\n"
-        f"  {old} -> {p}   (pre-compaction data), or if absent\n"
+        f"The next compact_parquet or merge_write_path call on {p}\n"
+        f"restores the old copy itself.  By hand: if {p} is missing,\n"
+        f"rename the hidden live copy back:\n"
+        f"  {old} -> {p}   (pre-swap data), or if absent\n"
         f"  {tmp} -> {p}   (the completed rewrite)\n"
         f"If {p} exists, delete leftover hidden asides and this marker.\n"
     )
@@ -109,6 +115,65 @@ def _swap_marker(fs, spark: SparkSession, path: str, tmp: str, old: str):
     finally:
         out.close()
     return marker_path
+
+
+def recover_swap(spark: SparkSession, path: str) -> None:
+    """Undo a swap that crashed between its two renames: if ``path`` is
+    missing and its old aside exists, rename the aside back (the table as
+    it was before the swap) and drop the marker.  Otherwise a no-op.
+    Callers run this before any other step, so a crashed swap can never
+    be mistaken for a table that was never written."""
+    fs, hpath = _fs_and_path(spark, path)
+    if fs.exists(hpath):
+        return
+    _, old_path = _fs_and_path(spark, _aside_name(path, _OLD_SUFFIX))
+    if fs.exists(old_path) and fs.rename(old_path, hpath):
+        fs.delete(_marker_path(spark, path), False)
+
+
+def write_swap(spark: SparkSession, path: str, df: DataFrame) -> None:
+    """Write ``df`` to a hidden aside and swap it in as the directory at
+    ``path`` (which ``df`` may read: Spark cannot overwrite a path that
+    feeds the running plan).
+
+    The swap is rename-aside, never delete-then-rename: the table path
+    must hold data at every instant.  path -> .path__old, tmp -> path,
+    then drop the old dir; a crash mid-swap leaves either the old data
+    live or both dirs present, and recovery is a rename
+    (``recover_swap``) — not a restore from backup.  Both aside dirs are
+    HIDDEN siblings: concurrent root readers skip dot-dirs, so neither
+    the in-flight rewrite nor the renamed-aside old partition ever shows
+    up as a duplicate hive partition, and a crashed run's leftovers are
+    ignored by _leaf_partition_dirs/dir_stats instead of being compacted
+    into place as real data."""
+    tmp = _aside_name(path, _TMP_SUFFIX)
+    df.write.mode("overwrite").parquet(tmp)
+    old = _aside_name(path, _OLD_SUFFIX)
+    fs, hpath = _fs_and_path(spark, path)
+    _, tmp_path = _fs_and_path(spark, tmp)
+    _, old_path = _fs_and_path(spark, old)
+    if fs.exists(old_path):  # leftover from a crashed previous swap
+        fs.delete(old_path, True)
+    # a VISIBLE marker exists for exactly the swap window: the asides are
+    # dot-hidden, so after a crash mid-swap a plain ls of the parent looks
+    # empty — the marker (with recovery instructions inline) is what makes
+    # the hidden live copy discoverable
+    marker = _swap_marker(fs, spark, path, tmp, old)
+    if not fs.rename(hpath, old_path):
+        fs.delete(marker, False)
+        raise IOError(f"rename {path} -> {old} failed; table untouched, "
+                      f"new data is in {tmp}")
+    if not fs.rename(tmp_path, hpath):
+        fs.rename(old_path, hpath)  # roll back: restore the live table
+        fs.delete(marker, False)
+        raise IOError(f"rename {tmp} -> {path} failed; old data restored")
+    fs.delete(old_path, True)
+    fs.delete(marker, False)
+    # the swap happened outside Spark's writers: drop the session's shared
+    # file-listing cache entries or a same-session read would chase the
+    # deleted part files
+    spark.catalog.refreshByPath(path)
+    spark.catalog.refreshByPath(tmp)
 
 
 def migrate_compaction_asides(spark: SparkSession, path: str,
@@ -213,8 +278,9 @@ def compact_parquet(spark: SparkSession, path: str,
     data is safe.  A marker file ``_<base>__COMPACTION_SWAP`` (visible to
     ls; skipped by Spark readers like ``_SUCCESS``) exists in the parent
     for exactly the swap window, containing these same instructions, so
-    the state is discoverable.  To recover:
-    if ``path`` is missing, the live copy is the hidden sibling —
+    the state is discoverable.  The next call recovers by itself
+    (``recover_swap``: a missing ``path`` gets its old aside back).  By
+    hand: if ``path`` is missing, the live copy is the hidden sibling —
     ``rename parent/.base__compact_old -> path`` (old data) or, if only
     ``parent/.base__compact_tmp`` exists, rename that instead (the
     completed rewrite).  If ``path`` exists, delete any leftover hidden
@@ -222,6 +288,7 @@ def compact_parquet(spark: SparkSession, path: str,
     """
     if target_bytes < 1:
         raise ValueError(f"target_bytes must be >= 1, got {target_bytes}")
+    recover_swap(spark, path)
     fs, hpath = _fs_and_path(spark, path)
     leaves = _leaf_partition_dirs(fs, hpath)
     if leaves:
@@ -262,43 +329,7 @@ def compact_parquet(spark: SparkSession, path: str,
         out = df.repartition(n_out)
     else:
         out = df.coalesce(n_out)
-    tmp = _aside_name(path, _TMP_SUFFIX)
-    out.write.mode("overwrite").parquet(tmp)
-
-    # Swap via rename-aside, never delete-then-rename: the table path must
-    # hold data at every instant.  path -> .path__old, tmp -> path, then
-    # drop the old dir; a crash mid-swap leaves either the old data live or
-    # both dirs present, and recovery is a rename — not a restore from
-    # backup.  Both aside dirs are HIDDEN siblings: concurrent root readers
-    # skip dot-dirs, so neither the in-flight rewrite nor the renamed-aside
-    # old partition ever shows up as a duplicate hive partition, and a
-    # crashed run's leftovers are ignored by _leaf_partition_dirs/dir_stats
-    # instead of being compacted into place as real data.
-    old = _aside_name(path, _OLD_SUFFIX)
-    _, tmp_path = _fs_and_path(spark, tmp)
-    _, old_path = _fs_and_path(spark, old)
-    if fs.exists(old_path):  # leftover from a crashed previous compaction
-        fs.delete(old_path, True)
-    # a VISIBLE marker exists for exactly the swap window: the asides are
-    # dot-hidden, so after a crash mid-swap a plain ls of the parent looks
-    # empty — the marker (with recovery instructions inline) is what makes
-    # the hidden live copy discoverable
-    marker = _swap_marker(fs, spark, path, tmp, old)
-    if not fs.rename(hpath, old_path):
-        fs.delete(marker, False)
-        raise IOError(f"rename {path} -> {old} failed; table untouched, "
-                      f"new data is in {tmp}")
-    if not fs.rename(tmp_path, hpath):
-        fs.rename(old_path, hpath)  # roll back: restore the live table
-        fs.delete(marker, False)
-        raise IOError(f"rename {tmp} -> {path} failed; old data restored")
-    fs.delete(old_path, True)
-    fs.delete(marker, False)
-    # the swap happened outside Spark's writers: drop the session's shared
-    # file-listing cache entries or a same-session read would chase the
-    # deleted part files (same hazard merge_write_path documents)
-    spark.catalog.refreshByPath(path)
-    spark.catalog.refreshByPath(tmp)
+    write_swap(spark, path, out)
     after, _ = dir_stats(spark, path)
     return {"files_before": before, "files_after": after,
             "total_bytes": total, "rewritten": True,

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructType
 
+from .compaction import recover_swap, write_swap
+
 
 def quoted_col(name: str) -> Column:
     """Exact-name column reference: backtick-quote so a column whose NAME
@@ -145,8 +147,11 @@ def merge_write_path(spark, path: str, delta: DataFrame, keys: list[str],
                      order_col: str | None = None,
                      target: DataFrame | None = None) -> StructType:
     """Merge ``delta`` into the parquet table at ``path`` by key (S8/S9) with
-    a write-aside-and-swap, because Spark cannot overwrite a path that feeds
-    the running plan.  First write (no target yet) is a plain write.
+    a write-aside-and-swap (``compaction.write_swap``), because Spark cannot
+    overwrite a path that feeds the running plan.  First write (no target
+    yet) is a plain write.  A swap that crashed between its renames is
+    undone first (``compaction.recover_swap``), so a crash can never make
+    the next call take the first-write branch and drop the earlier rows.
     ``target`` is the table at ``path`` as the caller already read it (with
     a known schema, a read runs no inference job); by default it is read
     here.  Returns the schema written: the merge moves the key columns to
@@ -159,8 +164,8 @@ def merge_write_path(spark, path: str, delta: DataFrame, keys: list[str],
     (``month_partition_overwrite``) — it rewrites only affected partitions.
     """
     import os
-    import shutil
 
+    recover_swap(spark, path)
     if not os.path.isdir(path):
         delta.write.mode("overwrite").parquet(path)
         return delta.schema
@@ -170,14 +175,7 @@ def merge_write_path(spark, path: str, delta: DataFrame, keys: list[str],
         target,
         delta.select(*[quoted_col(c).alias(c) for c in target.columns]),
         keys, order_col=order_col)
-    tmp = path + ".__merge_tmp__"
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    # the rename happened outside Spark's writers, so the session's shared
-    # file-listing cache still points at the deleted part files — refresh it
-    spark.catalog.refreshByPath(path)
-    spark.catalog.refreshByPath(tmp)
+    write_swap(spark, path, merged)
     return merged.schema
 
 

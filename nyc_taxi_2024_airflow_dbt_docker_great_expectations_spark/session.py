@@ -8,8 +8,8 @@ Parity notes (reference -> Spark):
   (``pd.to_numeric(errors='coerce')``,
   reference ``dags/nyc_taxi_pipeline.py:148-150``) uses ``try_cast`` — so
   the whole registry runs bit-identically under a vanilla ANSI-on Spark 4
-  session (enforced: ``tools/check_oracle.py --ansi`` full sweep +
-  ``tests/test_ansi.py``).  ANSI's checked arithmetic, however, costs
+  session (enforced: ``tests/test_oracle.py`` runs every query in both
+  modes, ``tests/test_ansi.py`` the synthetic edge shapes).  ANSI's checked arithmetic, however, costs
   10-150% on hot vectorized loops (measured at sf0.1: rank_correlation
   2.7->4.4s, semantic_dedup 1.45->3.6s — overflow checks on every add/mul
   in higher-order array functions and integer rank arithmetic), so the

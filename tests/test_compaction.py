@@ -296,3 +296,72 @@ def test_migrate_compaction_asides(spark, tmp_warehouse):
     assert len(report["paths"]) == 1
     assert report["paths"][0].endswith("part=1__compact_tmp")
     assert not os.path.exists(legacy1)
+
+
+def test_merge_recovers_from_crash_between_swap_renames(spark, tmp_warehouse,
+                                                        monkeypatch):
+    """A crash after the live table left ``path`` and before the merged
+    copy took its place must not lose the table: the next
+    ``merge_write_path`` first restores the old copy, so re-running the
+    same delta gives exactly the rows of a run that never crashed (not
+    just the delta's, which a first-write into an empty path would keep).
+    The fault is raised by whichever rename moves data onto ``path``."""
+    import hashlib
+
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators import (
+        compaction,
+    )
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.merge import (
+        merge_write_path,
+    )
+
+    def digest(p):
+        rows = sorted(tuple(r) for r in spark.read.parquet(p).collect())
+        return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(10)],
+                                 "id long, v string")
+    delta = spark.createDataFrame([(i, f"w{i}") for i in range(8, 13)],
+                                  "id long, v string")
+    clean = os.path.join(tmp_warehouse, "clean")
+    path = os.path.join(tmp_warehouse, "crashed")
+    for p in (clean, path):
+        merge_write_path(spark, p, base, ["id"])
+    merge_write_path(spark, clean, delta, ["id"])
+
+    class Crash(Exception):
+        pass
+
+    real_rename, real_fs_and_path = os.rename, compaction._fs_and_path
+
+    def os_rename(src, dst, *args, **kwargs):
+        if dst == path:
+            raise Crash
+        return real_rename(src, dst, *args, **kwargs)
+
+    class CrashingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            if dst.toString() == path:
+                raise Crash
+            return self._fs.rename(src, dst)
+
+    def fs_and_path(spark_, p):
+        fs, hpath = real_fs_and_path(spark_, p)
+        return CrashingFs(fs), hpath
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", os_rename)
+        m.setattr(compaction, "_fs_and_path", fs_and_path)
+        with pytest.raises(Crash):
+            merge_write_path(spark, path, delta, ["id"])
+    assert not os.path.exists(path)  # the crash window: no live table
+
+    merge_write_path(spark, path, delta, ["id"])
+    assert digest(path) == digest(clean)
+    assert spark.read.parquet(path).count() == 13

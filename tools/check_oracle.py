@@ -1,11 +1,13 @@
-"""Local replica of the driver's correctness gate.
+"""The DuckDB oracle for ``__spark_entry__.QUERIES``, for any SF dir.
 
-Runs every ``__spark_entry__.queries()`` entry on Spark and its
-``oracle_sql()`` on DuckDB at the given SF dir, then compares row count,
-column names, and order-insensitive values (exact on non-floats, tight
-tolerance + exactness report on floats).
+Runs each entry's query on Spark and its oracle SQL on DuckDB at the
+given SF dir, then compares row count, column names, and
+order-insensitive values (exact on non-floats, tight tolerance +
+exactness report on floats).  ``tests/test_oracle.py`` runs the same
+comparison (``compare``) for every key in both ANSI modes at sf0.001;
+this CLI is for other SFs and key subsets.
 
-Usage: python tools/check_oracle.py [--ansi] [sf_dir] [query ...]
+Usage: python tools/check_oracle.py [--ansi|--no-ansi] [sf_dir] [query ...]
 
 ``--ansi`` force-sets ``spark.sql.ansi.enabled=true`` at runtime — the
 DRIVER gate runs a vanilla Spark 4 session (ANSI on), while the repo
@@ -19,9 +21,8 @@ bit-identical across modes (ANSI-neutrality), only speed may differ.
 from __future__ import annotations
 
 import math
+import os
 import sys
-
-sys.path.insert(0, ".")
 
 import duckdb
 import pandas as pd
@@ -132,6 +133,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.session import get_spark
 
@@ -142,29 +144,25 @@ def main() -> int:
         # legacy-mode sweep: queries must not DEPEND on strict semantics
         spark.conf.set("spark.sql.ansi.enabled", "false")
     con = duck_connection(sf_dir)
-    qs, oracles = e.queries(), e.oracle_sql()
     # a mistyped key (or an imagined flag like --keys) must not shrink
     # the sweep to nothing and print a vacuous "all passed"
-    unknown = only - set(qs)
+    unknown = only - set(e.QUERIES)
     if unknown:
         print(f"ERROR: unknown key(s): {', '.join(sorted(unknown))}")
         return 2
 
     failures = 0
-    for name, fn in qs.items():
+    for name, (build, oracle) in e.QUERIES.items():
         if only and name not in only:
             continue
         try:
-            spark_pdf = fn(spark, sf_dir).toPandas()
+            spark_pdf = build(spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {exc}")
             failures += 1
             continue
-        if name not in oracles:
-            print(f"SKIP {name}: no oracle (rows-only) -> {len(spark_pdf)} rows")
-            continue
         try:
-            duck_pdf = con.execute(oracles[name]).fetchdf()
+            duck_pdf = con.execute(oracle).fetchdf()
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {exc}")
             failures += 1
