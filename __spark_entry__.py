@@ -4443,12 +4443,10 @@ def q_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     = min vec_id, each of the K rounds is one distributed top-1
     (TakeOrderedAndProject), ties by min id — fully deterministic, no
     RNG.  min_dist_sq is the coverage-radius sequence (NULL for the
-    seed).  At k=8 the materialize=None default picks the running-min
-    variant (carried __dmin updated against only the newest center,
-    one lazy checkpoint per round, so each round is one job and its plan
-    starts from the previous round's checkpoint — timings vs the
-    stateless form in MEASUREMENTS.md); trajectory is bit-identical to
-    the stateless form (property-tested).  The oracle replays the same
+    seed).  Each round carries a running __dmin updated against only
+    the newest center, with one lazy checkpoint per round, so each round
+    is one job and its plan starts from the previous round's checkpoint
+    (timings in MEASUREMENTS.md).  The oracle replays the same
     trajectory as an unrolled CTE chain (same left-fold distance, same
     (dist DESC, id ASC) argmax); no reference analog — LLM-pipeline
     brief surface."""

@@ -1,19 +1,32 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline.  The
-  query set is broadcast (it's small); each partition of the corpus computes
-  its local scores, and only the per-query top-k rows survive the final
-  shuffle (window + filter).  Linear scan, embarrassingly parallel — at
-  100 TB this is the *verification* path, not the serving path.
-- ``hyperplane_lsh_buckets`` / ``lsh_topk``: the scale path — random
-  hyperplane (sign) LSH.  The planes are derived deterministically from md5
-  (no RNG, reproducible across engines/runs), each vector gets a b-bit
-  bucket; candidates are restricted to equal buckets (optionally multi-probe
-  by Hamming-adjacent buckets).  Bucketing turns a quadratic scan into a
-  hash-partitioned equi-join.
+Three families of cosine retrieval, all scored by the same kernel:
 
-All arithmetic is explicit double-precision in a fixed fold order so scores
-are bit-deterministic and oracle-checkable.
+- **Exact**: ``cosine_topk`` (and ``hard_negative_topk``,
+  ``mutual_knn_pairs``) hash-block the corpus, replicate the queries to
+  every block in-plan, and score each block against its queries in one
+  cogrouped ``applyInPandas``; only the block-local top-k per query
+  survives to the final ranking window.  ``neardup_pairs`` finds every
+  pair above a threshold on a block grid (BLAS candidates, exact
+  re-score).  At 100 TB these are the *verification* paths.
+- **LSH**: ``hyperplane_lsh_buckets`` / ``lsh_topk`` — random-hyperplane
+  (sign) buckets from md5-derived planes (no RNG); candidates are the
+  query's bucket, so a quadratic scan becomes a hash-partitioned
+  equi-join.
+- **IVF**: ``ivf_topk`` / ``ivf_topk_from_index`` /
+  ``mutual_knn_from_index`` / ``semantic_dedup_pairs`` — a deterministic
+  coarse quantizer (md5 seed draw, integer-exact sampled Lloyd),
+  inverted lists, probe selection and exact re-score within the probed
+  lists; ``build_ivf_index_tables`` persists the index.
+
+The scoring kernel: every numpy cosine is ``_fold_dot`` — ONE loop that
+accumulates products over dimensions in index order, the left fold of
+``F.aggregate`` that the HOF ``dot``/``norm``/``cosine`` (the oracle-parity
+reference) evaluate — so every score is bit-identical to the SQL
+expression and to the DuckDB oracle.  Broadcasting gives row-aligned
+pairs, a query against a matrix, and a chunk of queries against a matrix
+from the same loop; query chunks are capped at ``SCORE_CELLS`` cells.
+Every ``(-sim, id)`` ranking, NaN scores dropped, is ``_rank``.
 """
 
 from __future__ import annotations
@@ -32,7 +45,6 @@ from ..execution import (
     has_verbatim_copies,
     materialize_once,
 )
-
 
 
 def _to_double(arr: Column) -> Column:
@@ -59,136 +71,119 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_arrow(a: Column, b: Column) -> Column:
-    """Arrow-batched cosine, bit-identical to :func:`cosine`.
-
-    The higher-order-function form (``cosine``) is interpreted per row —
-    no whole-stage codegen, ~10x slower — so it stays as the oracle-parity
-    *reference* while this is the hot-path scorer.  Bit-identity holds
-    because the accumulation replays the exact left-fold order of
-    ``F.aggregate``: float->double widening first, then one fused
-    multiply-add per dimension in index order (vectorized across rows,
-    sequential across dims), then ``dot / (norm_a * norm_b)`` in the same
-    expression order.  ``tests/test_extensions.py`` asserts exact equality
-    against the HOF form on the embeddings corpus.
-    """
-    @pandas_udf("double")
-    def _cos(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        n = len(sa)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        mask = sa.notna() & sb.notna()
-        out = np.full(n, np.nan)
-        if mask.any():
-            ma = np.stack(sa[mask].to_numpy()).astype(np.float64)
-            mb = np.stack(sb[mask].to_numpy()).astype(np.float64)
-            d = ma.shape[1]
-            dot_ = np.zeros(len(ma))
-            na = np.zeros(len(ma))
-            nb = np.zeros(len(ma))
-            # sequential per-dim accumulation == F.aggregate's left fold
-            for k in range(d):
-                dot_ += ma[:, k] * mb[:, k]
-                na += ma[:, k] * ma[:, k]
-                nb += mb[:, k] * mb[:, k]
-            out[mask.to_numpy()] = dot_ / (np.sqrt(na) * np.sqrt(nb))
-        res = pd.Series(out)
-        return res.where(pd.Series(mask.to_numpy()), None)
-
-    return _cos(a, b)
+#: most cells (queries x rows) one score buffer holds; larger query sets
+#: are scored in successive chunks of queries.  Read when a plan is built
+#: and shipped in the task closure, so the driver's value is the one the
+#: Python workers use.
+SCORE_CELLS = 1 << 20
 
 
-def _fold_dot_norms(ma: np.ndarray) -> np.ndarray:
-    """Per-row norms of ``ma`` with the left-fold accumulation order of
-    ``F.aggregate`` (sequential across dims) — bit-identical to the HOF
-    ``norm`` and to ``cosine_arrow``'s internal accumulation."""
-    na = np.zeros(len(ma))
-    for kd in range(ma.shape[1]):
-        na += ma[:, kd] * ma[:, kd]
-    return np.sqrt(na)
+def _matrix(vecs) -> np.ndarray:
+    """Stack non-NULL vectors into a float64 matrix (float->double
+    widening is value-exact)."""
+    return np.stack(vecs).astype(np.float64)
 
 
-def _fold_scores(ma: np.ndarray, sna: np.ndarray, qv: np.ndarray) -> np.ndarray:
-    """Deterministic cosine of every row of ``ma`` against one query vector,
-    replaying ``cosine_arrow``'s exact accumulation order: one multiply-add
-    per dimension in index order (vectorized across rows), then
-    ``dot / (sqrt(na) * sqrt(nb))``.  Bit-identical to scoring each pair
-    with ``cosine_arrow`` because every elementwise operation sees the same
-    operands in the same order (scalar-vs-vector broadcast does not change
-    IEEE results)."""
-    dot_ = np.zeros(len(ma))
-    nb = np.float64(0.0)
-    for kd in range(ma.shape[1]):
-        dot_ += ma[:, kd] * qv[kd]
-        nb += qv[kd] * qv[kd]
-    return dot_ / (sna * np.sqrt(nb))
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Sum of ``a[..., d] * b[..., d]`` over the last axis, accumulated
+    from 0.0 one dimension at a time in index order: the left fold of
+    ``dot``/``norm``.  The leading axes broadcast, and elementwise IEEE
+    products and sums in the same order do not change under
+    broadcasting, so row-aligned pairs (``(n, d)`` with ``(n, d)``), a
+    query against a matrix and a chunk of queries against a matrix
+    (``(q, 1, d)`` with ``(n, d)`` -> ``(q, n)``) all give the same bits
+    for the same pair."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for d in range(a.shape[-1]):
+        acc += a[..., d] * b[..., d]
+    return acc
+
+
+def _cosine(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``dot / (norm_a * norm_b)`` in the HOF ``cosine``'s expression
+    order, broadcast like :func:`_fold_dot`.  A zero-norm side gives
+    NaN."""
+    return _fold_dot(a, b) / (np.sqrt(_fold_dot(a, a))
+                              * np.sqrt(_fold_dot(b, b)))
+
+
+def _cosine_rows(qm: np.ndarray, m: np.ndarray, cells: int):
+    """Yield ``(lo, sims)`` over chunks of the query rows ``qm``:
+    ``sims[i, j]`` is the cosine of ``qm[lo + i]`` and ``m[j]``, and no
+    chunk holds more than ``cells`` cells (at least one query)."""
+    step = max(1, cells // max(1, len(m)))
+    for lo in range(0, len(qm), step):
+        yield lo, _cosine(qm[lo:lo + step, None, :], m)
+
+
+def _rank(sims: np.ndarray, ids: np.ndarray, k: int):
+    """Per row of ``sims`` (``(q, n)``), the positions of its top-``k``
+    scores in ``(-sim, id)`` order, NaN scores dropped.
+
+    NaN drops because a lexsort ranks it LAST while SQL engines'
+    ``ORDER BY sim DESC`` rank it FIRST; a zero-norm vector (or an
+    excluded self-match) has no signal, so it never belongs in a top-k,
+    exactly like a NULL embedding.  Returns ``(rows, cols)`` in
+    (row, rank) order — positions, not values: a value array of string
+    ids would get a fixed ``'<U n'`` dtype and truncate longer ids."""
+    order = np.lexsort((np.broadcast_to(ids, sims.shape), -sims),
+                       axis=-1)[:, :k]
+    keep = ~np.isnan(np.take_along_axis(sims, order, axis=-1))
+    rows = np.broadcast_to(np.arange(len(sims))[:, None], order.shape)
+    return rows[keep], order[keep]
+
+
+def _topk(qm: np.ndarray, m: np.ndarray, ids: np.ndarray, k: int,
+          cells: int, qids: np.ndarray | None = None):
+    """The top-``k`` rows of ``m`` (ids ``ids``) for every query row of
+    ``qm``, scored in chunks: ``(query_rows, positions, sims)`` in
+    (query, rank) order.  With ``qids``, a row whose id equals the
+    query's id is excluded (self-match)."""
+    out = []
+    for lo, sims in _cosine_rows(qm, m, cells):
+        if qids is not None:
+            sims[qids[lo:lo + len(sims), None] == ids] = np.nan
+        r, c = _rank(sims, ids, k)
+        out.append((lo + r, c, sims[r, c]))
+    return tuple(np.concatenate(x) for x in zip(*out))
 
 
 def _grouped_topk_scores(corpus_pairs: DataFrame, query_pairs: DataFrame,
-                         k: int | None, exclude_self: bool,
+                         k: int, exclude_self: bool,
                          id_type: str, qid_type: str) -> DataFrame:
-    """ONE Arrow-batched scorer per candidate group (the round-2 fix for the
-    per-pair ``cosine_arrow`` stages that dominated ANN wall-clock).
+    """ONE Arrow-batched scorer per candidate group.
 
     ``corpus_pairs``: (__g, __id, __vec); ``query_pairs``: (__g, __qid,
     __qvec).  The two sides cogroup on ``__g`` — each task receives one
     candidate group (an LSH bucket, an IVF list, or a hash block of the
     brute-force scan) plus the queries probing it, stacks the group ONCE
-    into a matrix, and scores every (row, query) pair with the
-    deterministic left-fold cosine.  Each corpus vector crosses the Arrow
-    boundary exactly once per group instead of once per (pair, stage), and
-    only the group-local top-k per query survives, so the downstream global
-    window sees O(groups x queries x k) rows.
+    into a matrix, and scores it against chunks of its queries with the
+    left-fold cosine (:func:`_topk`).  Each corpus vector crosses the
+    Arrow boundary exactly once per group, and only the group-local top-k
+    per query survives, so the downstream global window sees
+    O(groups x queries x k) rows.
 
-    Determinism: scores are bit-identical to ``cosine_arrow`` (see
-    ``_fold_scores``); group-local top-k orders by (-sim, id) — the same
-    total order as the final ranking window — so the global top-k is a
-    subset of the union of group-local top-ks and the result is a pure
-    function of the data.
+    Determinism: scores are bit-identical to the HOF ``cosine``;
+    group-local top-k orders by (-sim, id) — the same total order as the
+    final ranking window — so the global top-k is a subset of the union
+    of group-local top-ks and the result is a pure function of the data.
     """
+    cells = SCORE_CELLS
+
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # dtype-agnostic empty frame: Arrow casts empty object columns to
-        # the declared schema types, so non-long ids work too
-        empty = pd.DataFrame({"__qid": [], "__id": [],
-                              "__sim": pd.array([], dtype="float64")})
-        # NULL embeddings score NULL in the old per-pair cosine_arrow form
-        # and a NULL sim never survives a DESC top-k — dropping the rows is
-        # result-identical and keeps np.stack rectangular
+        # NULL embeddings never score, like NaN ones (see _rank)
         left = left[left["__vec"].notna()]
         right = right[right["__qvec"].notna()]
         if len(left) == 0 or len(right) == 0:
-            return empty
+            # dtype-agnostic empty frame: Arrow casts empty object columns
+            # to the declared schema types, so non-long ids work too
+            return pd.DataFrame({"__qid": [], "__id": [],
+                                 "__sim": pd.array([], dtype="float64")})
         ids = left["__id"].to_numpy()
-        ma = np.stack(left["__vec"].to_numpy()).astype(np.float64)
-        sna = _fold_dot_norms(ma)
-        frames = []
-        for qid, qvec in zip(right["__qid"].to_numpy(),
-                             right["__qvec"].to_numpy()):
-            sims = _fold_scores(ma, sna, np.asarray(qvec, dtype=np.float64))
-            if exclude_self:
-                keep = ids != qid
-                sid, ssim = ids[keep], sims[keep]
-            else:
-                sid, ssim = ids, sims
-            # a zero-norm vector (corpus or query side) scores NaN against
-            # everything; np.lexsort ranks NaN LAST while SQL engines'
-            # ORDER BY sim DESC rank it FIRST — drop the rows outright
-            # (same treatment as NULL embeddings: a no-signal score never
-            # belongs in a cosine top-k), keeping Spark and oracle aligned
-            # even on degenerate inputs.
-            ok = ~np.isnan(ssim)
-            sid, ssim = sid[ok], ssim[ok]
-            if len(sid) == 0:
-                continue
-            order = np.lexsort((sid, -ssim))
-            if k is not None:
-                order = order[:k]
-            frames.append(pd.DataFrame({
-                "__qid": np.full(len(order), qid),
-                "__id": sid[order],
-                "__sim": ssim[order],
-            }))
-        return pd.concat(frames) if frames else empty
+        qids = right["__qid"].to_numpy()
+        r, c, sims = _topk(_matrix(right["__qvec"]), _matrix(left["__vec"]),
+                           ids, k, cells, qids if exclude_self else None)
+        return pd.DataFrame({"__qid": qids[r], "__id": ids[c], "__sim": sims})
 
     return (
         corpus_pairs.groupBy("__g")
@@ -437,12 +432,12 @@ def neardup_pairs(corpus: DataFrame, threshold: float,
        as a candidate and decided by phase 2.  No driver collect, no
        whole-corpus broadcast — per-task memory is one block pair.
     2. **Exact verification**: IN THE SAME TASK, each grid cell re-scores
-       its own candidates with the deterministic left-fold order (the
-       per-dim accumulation of ``cosine_arrow``) — bit-identical to the HOF
-       ``cosine`` expression, so oracle-checkable.  Fusing verify into the
-       cell removes the round-2 shape (two joins back to the vectors + a
-       per-pair pandas_udf stage): the whole operator is one explode, one
-       shuffle, one ``applyInPandas``.
+       its own candidates with the deterministic left-fold cosine
+       (``_cosine``) — bit-identical to the HOF ``cosine`` expression, so
+       oracle-checkable.  Fusing verify into the cell removes the round-2
+       shape (two joins back to the vectors + a per-pair pandas_udf
+       stage): the whole operator is one explode, one shuffle, one
+       ``applyInPandas``.
 
     This is ~100x the throughput of evaluating the cosine expression on the
     full half-matrix, and the grid shape is the same at 10k or 10B vectors —
@@ -529,14 +524,14 @@ def _blas_candidate_pairs(corpus: DataFrame, guard_threshold: float,
             return empty
         ids_l = left["__id"].to_numpy()
         ids_r = right["__id"].to_numpy()
-        raw_l = np.stack(left["__vec"].to_numpy()).astype(np.float64)
+        raw_l = _matrix(left["__vec"])
         ml = raw_l / np.maximum(
             np.linalg.norm(raw_l, axis=1, keepdims=True), 1e-300
         )
         if i == j:
             raw_r, mr = raw_l, ml
         else:
-            raw_r = np.stack(right["__vec"].to_numpy()).astype(np.float64)
+            raw_r = _matrix(right["__vec"])
             mr = raw_r / np.maximum(
                 np.linalg.norm(raw_r, axis=1, keepdims=True), 1e-300
             )
@@ -548,19 +543,9 @@ def _blas_candidate_pairs(corpus: DataFrame, guard_threshold: float,
             ia, ja = ia[keep], ja[keep]
             id_a, id_b = id_a[keep], id_b[keep]
         # exact verify, fused: re-score only the candidates with the
-        # deterministic left-fold accumulation (one multiply-add per dim in
-        # index order — cosine_arrow's order).  dot and the norm product
-        # are commutative, so the min/max orientation below does not change
-        # a single bit of the score.
-        va, vb = raw_l[ia], raw_r[ja]
-        dot_ = np.zeros(len(va))
-        na = np.zeros(len(va))
-        nb = np.zeros(len(va))
-        for kd in range(va.shape[1] if len(va) else 0):
-            dot_ += va[:, kd] * vb[:, kd]
-            na += va[:, kd] * va[:, kd]
-            nb += vb[:, kd] * vb[:, kd]
-        exact = dot_ / (np.sqrt(na) * np.sqrt(nb)) if len(va) else dot_
+        # left-fold cosine.  dot and the norm product are commutative, so
+        # the min/max orientation below does not change a single bit.
+        exact = _cosine(raw_l[ia], raw_r[ja])
         if i != j:
             id_a, id_b = np.minimum(id_a, id_b), np.maximum(id_a, id_b)
         return pd.DataFrame({"id_a": id_a, "id_b": id_b, "cosine_sim": exact})
@@ -595,50 +580,24 @@ def deterministic_planes(n_planes: int, dim: int) -> list[list[float]]:
                                        plus_on_odd=False)]
 
 
-def _bucket_col_hof(vec_col: str, n_planes: int, dim: int) -> Column:
-    """Sign-pattern bucket as a pure HOF expression — the oracle-parity
-    REFERENCE form (interpreted per row, slow; kept for the bit-identity
-    test against the Arrow form)."""
-    planes = deterministic_planes(n_planes, dim)
-    v = _to_double(F.col(vec_col))
-    bits = []
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(x) for x in planes[p]])
-        proj = dot(v, plane)
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def _bucket_col(vec_col: str, n_planes: int, dim: int) -> Column:
     """The n-bit sign-pattern bucket as a column expression, so callers
     project it inline instead of joining back a derived (id, bucket) table
     (a needless self-join of the corpus).
 
-    Arrow-batched, bit-identical to ``_bucket_col_hof``: each plane's
-    projection replays ``dot``'s left fold (one multiply-add per dimension
-    in index order, vectorized across rows), and the sign test sees the
-    same double — the HOF form is a per-row interpreted expression tree of
-    n_planes x dim literals, ~1000x slower per batch.
+    Arrow-batched: each plane's projection is :func:`_fold_dot` of the
+    vector and the plane — ``dot``'s left fold, vectorized across rows
+    and planes — and bit ``p`` is ``projection >= 0``.
     """
     pl = np.asarray(deterministic_planes(n_planes, dim), dtype=np.float64)
 
     @pandas_udf("string")
     def _b(sv: pd.Series) -> pd.Series:
-        n = len(sv)
-        if n == 0:
-            return pd.Series([], dtype="object")
-        mask = sv.notna()
-        out = np.full(n, None, dtype=object)
+        mask = sv.notna().to_numpy()
+        out = np.full(len(sv), None, dtype=object)
         if mask.any():
-            ma = np.stack(sv[mask].to_numpy()).astype(np.float64)
-            bits = None
-            for p in range(pl.shape[0]):
-                proj = np.zeros(len(ma))
-                for d in range(pl.shape[1]):
-                    proj += ma[:, d] * pl[p, d]
-                bit = np.where(proj >= 0, "1", "0")
-                bits = bit if bits is None else np.char.add(bits, bit)
-            out[mask.to_numpy()] = bits.astype(object)
+            signs = _fold_dot(pl, _matrix(sv[mask])[:, None, :]) >= 0
+            out[mask] = ["".join(row) for row in np.where(signs, "1", "0")]
         return pd.Series(out)
 
     return _b(F.col(vec_col))
@@ -752,8 +711,8 @@ def _lloyd_refine(corpus: DataFrame, cents: DataFrame, refine_iters: int,
     per iteration for work a single numpy pass does in microseconds.
     Bit-identity with the oracle is preserved because every operation
     replays the distributed arithmetic exactly: the same left-fold cosine
-    (``_fold_scores``), the same ``np.lexsort`` tie order, the same
-    integer quantization, and the same single double division.
+    and (-sim, cid) ranking (:func:`_topk`), the same integer
+    quantization, and the same single double division.
 
     Returns the refined centroids as LOCAL ``(cid, vec)`` tuples — they
     are metadata-sized and the caller needs them both as a DataFrame (for
@@ -790,38 +749,22 @@ def _lloyd_refine(corpus: DataFrame, cents: DataFrame, refine_iters: int,
              for r in cent_rows}
     samp_rows = [r for r in samp_rows if r["__svec"] is not None]
     if samp_rows and cent_rows:
-        sm = np.stack([np.asarray(r["__svec"], dtype=np.float64)
-                       for r in samp_rows])
+        sm = _matrix([r["__svec"] for r in samp_rows])
         # integer micro-units; exact in int64 (|u| <= 1e6 * max|x| << 2^53)
         su = np.floor(sm * float(LLOYD_SCALE) + 0.5).astype(np.int64)
         cids = np.array(cids_list, dtype=object)
         for _ in range(refine_iters):
             cm = np.stack([cvecs[c] for c in cids_list])
-            cna = _fold_dot_norms(cm)
-            # per-cluster exact integer sums + counts over assigned samples
-            sums: dict = {}
-            counts: dict = {}
-            for si in range(len(sm)):
-                sims = _fold_scores(cm, cna, sm[si])
-                ok = ~np.isnan(sims)
-                if not ok.any():
-                    continue  # zero-norm sample: no assignment (NaN drop)
-                order = np.lexsort((cids[ok], -sims[ok]))
-                win = cids[ok][order[0]]
-                if win in sums:
-                    sums[win] = sums[win] + su[si]
-                    counts[win] += 1
-                else:
-                    sums[win] = su[si].copy()
-                    counts[win] = 1
-            for c, s in sums.items():
-                n = counts[c]
+            # top-1 centroid per sample; a zero-norm sample ranks none
+            # (NaN drop) and is not assigned
+            si, ci, _ = _topk(sm, cm, cids, 1, SCORE_CELLS)
+            wins = cids[ci]
+            for c in dict.fromkeys(wins):
+                won = si[wins == c]
                 # sum/(n*1e6): ONE double division of exact integers —
                 # identical to the SQL oracle's decimal->double cast
-                cvecs[c] = np.array(
-                    [float(int(v)) / float(n * LLOYD_SCALE) for v in s],
-                    dtype=np.float64,
-                )
+                cvecs[c] = (su[won].sum(axis=0)
+                            / float(len(won) * LLOYD_SCALE))
     return [(c, [float(x) for x in cvecs[c]]) for c in cids_list]
 
 
@@ -871,10 +814,10 @@ def _ivf_index(corpus: DataFrame, n_lists: int, refine_iters: int,
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
     )
     if cent_local:
-        acm = np.stack([np.asarray(v, dtype=np.float64)
-                        for _, v in cent_local])
+        acm = _matrix([v for _, v in cent_local])
         acids = np.array([c for c, _ in cent_local], dtype=object)
-        aorder = np.argsort(acids, kind="stable")
+        smallest = np.argsort(acids, kind="stable")[0]
+    cells = SCORE_CELLS
 
     def assign_fn(it):
         # a batch with nothing to emit yields NOTHING (not an empty frame:
@@ -884,29 +827,16 @@ def _ivf_index(corpus: DataFrame, n_lists: int, refine_iters: int,
             left = left[left["__vec"].notna()]  # NULL vectors join no list
             if len(left) == 0:
                 continue
-            ids = left["__id"].to_numpy()
-            ma = np.stack(left["__vec"].to_numpy()).astype(np.float64)
-            sna = _fold_dot_norms(ma)
-            # iterate centroids in ascending cid with a strict > update:
-            # the winner is the max-sim centroid, ties to the smallest cid
-            # — the exact max_by((sim, -cid)) order of the round-2 form,
-            # decided on bit-identical scores.  The winner is tracked as an
-            # INDEX into cids, never as a value array: np.full(...,
-            # cids[order[0]]) would infer a fixed-width '<U n' dtype from
-            # the first (smallest) string id and silently truncate longer
-            # ids on update.  Initializes to the SMALLEST cid, so a
-            # zero-norm vector (NaN against every centroid — 'NaN > x' is
-            # false) still lands in a REAL inverted list instead of a
-            # fabricated id.
-            best_sim = np.full(len(ma), -np.inf)
-            best_idx = np.full(len(ma), aorder[0])
-            for idx in aorder:
-                sims = _fold_scores(ma, sna, acm[idx])
-                upd = sims > best_sim
-                best_sim[upd] = sims[upd]
-                best_idx[upd] = idx
-            yield pd.DataFrame({"__id": ids, "__list": acids[best_idx],
-                                "__vec": left["__vec"].to_numpy()})
+            vecs = left["__vec"].to_numpy()
+            # the top-1 centroid by (-sim, cid), tracked as an INDEX into
+            # acids (see _rank).  A zero-norm vector ranks no centroid and
+            # keeps the SMALLEST cid, so it still lands in a REAL
+            # inverted list instead of a fabricated id.
+            best = np.full(len(left), smallest)
+            rows, pos, _ = _topk(_matrix(vecs), acm, acids, 1, cells)
+            best[rows] = pos
+            yield pd.DataFrame({"__id": left["__id"].to_numpy(),
+                                "__list": acids[best], "__vec": vecs})
 
     vec_t = corpus.schema[vec_col].dataType.simpleString()
     if cent_local:
@@ -1050,6 +980,8 @@ def semantic_dedup_pairs(corpus: DataFrame, threshold: float,
                              F.lit(1).cast("long").alias("__mult"))
         memb = None
 
+    cells = SCORE_CELLS
+
     def pair_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"id_a": [], "id_b": [],
                               "cosine_sim": pd.array([], dtype="float64")})
@@ -1057,34 +989,25 @@ def semantic_dedup_pairs(corpus: DataFrame, threshold: float,
             return empty
         pdf = pdf.sort_values("__id", kind="mergesort")
         ids = pdf["__id"].to_numpy()
-        mult = pdf["__mult"].to_numpy()
-        ma = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
-        sna = _fold_dot_norms(ma)
+        dup = pdf["__mult"].to_numpy() > 1
+        ma = _matrix(pdf["__vec"])
         frames = []
-        for i in range(len(ids)):
-            # row i vs the j > i tail: fold dot is dimension-ordered and
-            # multiplication commutes, so sims[j] is bit-identical to the
-            # oracle's cos(e_a, e_b) regardless of which side is "query"
-            sims = _fold_scores(ma, sna, ma[i])
-            if mult[i] > 1:
-                # duplicate group: the (rep, rep) marker row carries the
-                # group's self-similarity (cos(v, v) — same formula, NOT
-                # assumed 1.0: sqrt(s)*sqrt(s) may round away from s) for
-                # expansion into its member pairs
-                self_sim = sims[i]
-                if self_sim >= threshold:
-                    frames.append(pd.DataFrame({
-                        "id_a": [ids[i]], "id_b": [ids[i]],
-                        "cosine_sim": [self_sim],
-                    }))
-            tail = sims[i + 1:]
-            keep = tail >= threshold  # NaN (zero-norm) compares False
-            if keep.any():
-                frames.append(pd.DataFrame({
-                    "id_a": np.full(int(keep.sum()), ids[i]),
-                    "id_b": ids[i + 1:][keep],
-                    "cosine_sim": tail[keep],
-                }))
+        # row i against the j > i tail: the fold dot is dimension-ordered
+        # and multiplication commutes, so sims[i, j] is bit-identical to
+        # the oracle's cos(e_a, e_b) whichever side is the "query".  A
+        # duplicate group also keeps its (rep, rep) marker row, which
+        # carries the group's self-similarity (cos(v, v), NOT assumed 1.0:
+        # sqrt(s)*sqrt(s) may round away from s) for expansion into its
+        # member pairs.  NaN (zero-norm) compares False.
+        for lo, sims in _cosine_rows(ma, ma, cells):
+            i = np.arange(lo, lo + len(sims))[:, None]
+            j = np.arange(len(ids))
+            r, c = np.nonzero(((j > i) | ((j == i) & dup[i]))
+                              & (sims >= threshold))
+            if len(r):
+                frames.append(pd.DataFrame({"id_a": ids[lo + r],
+                                            "id_b": ids[c],
+                                            "cosine_sim": sims[r, c]}))
         return pd.concat(frames) if frames else empty
 
     rep_pairs = reps.groupBy("__list").applyInPandas(
@@ -1112,14 +1035,17 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     tests/test_extensions.py beats the raw seed draw).  The whole index is
     a pure function of the data and admits an exact SQL oracle.
 
-    Scale shape: the centroid set is tiny and replicates in-plan; every
-    stage (refinement assignment, inverted-list assignment, probe
-    selection, exact re-score) is ONE cogrouped Arrow scorer over its
-    candidate group (hash block / single group / inverted list), so each
-    corpus vector crosses the Arrow boundary once per stage — never once
-    per (pair, stage).  Refinement touches only the ``sample_size`` sample;
-    the re-score touches only ``n_probe / n_lists`` of the corpus per
-    query, hash-partitioned by list id.
+    Scale shape: the centroid set is metadata-sized (n_lists ~ sqrt(N))
+    and lives on the driver.  Lloyd refinement runs driver-side on the
+    collected ``sample_size`` sample (``_lloyd_refine``); inverted-list
+    assignment is a narrow ``mapInPandas`` over the corpus with the
+    centroids in the task closure (``_ivf_index``); probe selection is
+    a narrow ``mapInPandas`` over the queries (``_ivf_probe``); only the
+    exact re-score is a cogrouped Arrow scorer, one group per probed
+    inverted list, over the ``n_probe / n_lists`` of the corpus each
+    query probes.  Each corpus vector crosses the Arrow boundary once per
+    stage — never once per (pair, stage) — and every stage scores with
+    the same kernel (:func:`_topk`).
     """
     id_t = corpus.schema[id_col].dataType.simpleString()
     qid_t = queries.schema[query_id_col].dataType.simpleString()
@@ -1156,42 +1082,29 @@ def _ivf_probe(cent_local, assign: DataFrame, queries: DataFrame, k: int,
     # probe selection: top-n_probe centroids per query, computed MAP-SIDE
     # against the local centroid set (closure-captured numpy — n_lists
     # rows, metadata-sized at any corpus scale): a narrow mapInPandas over
-    # the queries, no shuffle, no extra job.  Replays the grouped scorer's
-    # exact semantics: NULL query vectors drop, NaN sims (zero-norm) drop,
-    # order (sim desc, cid asc) via the same left-fold cosine + lexsort;
-    # no self-exclusion (a query id colliding with a centroid id is a
-    # valid probe).
+    # the queries, no shuffle, no extra job.  Same semantics as the
+    # grouped scorer (NULL query vectors drop, _topk's NaN drop and
+    # (sim desc, cid asc) order) with no self-exclusion: a query id
+    # colliding with a centroid id is a valid probe.
     if cent_local:
-        cm = np.stack([np.asarray(v, dtype=np.float64)
-                       for _, v in cent_local])
+        cm = _matrix([v for _, v in cent_local])
         cids_arr = np.array([c for c, _ in cent_local], dtype=object)
-        cna = _fold_dot_norms(cm)
-        n_probe_ = n_probe
+        cells = SCORE_CELLS
 
         def probe_fn(it):
             for pdf in it:
                 pdf = pdf[pdf["__qvec"].notna()]
-                qids: list = []
-                lists: list = []
-                vecs: list = []
-                for qid, qvec in zip(pdf["__qid"].to_numpy(),
-                                     pdf["__qvec"].to_numpy()):
-                    sims = _fold_scores(
-                        cm, cna, np.asarray(qvec, dtype=np.float64)
-                    )
-                    ok = ~np.isnan(sims)
-                    sid, ssim = cids_arr[ok], sims[ok]
-                    if len(sid) == 0:
-                        continue
-                    order = np.lexsort((sid, -ssim))[:n_probe_]
-                    qids.extend([qid] * len(order))
-                    lists.extend(list(sid[order]))
-                    vecs.extend([qvec] * len(order))
-                if not qids:
+                if len(pdf) == 0:
                     continue  # yield nothing — see assign_fn's note
+                qvecs = pdf["__qvec"].to_numpy()
+                rows, pos, _ = _topk(_matrix(qvecs), cm, cids_arr, n_probe,
+                                     cells)
+                if len(rows) == 0:
+                    continue
                 yield pd.DataFrame({
-                    "__qid": qids, "__list": lists,
-                    "__qvec": pd.Series(vecs, dtype=object),
+                    "__qid": pdf["__qid"].to_numpy()[rows],
+                    "__list": cids_arr[pos],
+                    "__qvec": pd.Series(qvecs[rows], dtype=object),
                 })
 
         # the query VECTOR rides through probe selection (same trick as
@@ -1400,8 +1313,7 @@ def _sq_dist_to(vec: Column, center: list[float]) -> Column:
 
 def kcenter_select(corpus: DataFrame, k: int = 8,
                    id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   materialize: bool | None = None) -> DataFrame:
+                   vec_col: str = "embedding") -> DataFrame:
     """Greedy k-center / farthest-point traversal (Gonzalez 1985) — the
     diversity-based coreset selection a training-data pipeline runs to
     pick a maximally-spread exemplar set (data-selection / active-
@@ -1417,54 +1329,35 @@ def kcenter_select(corpus: DataFrame, k: int = 8,
     the k rounds is ONE distributed TakeOrderedAndProject (per-partition
     top-1, O(partitions) driver merge — no full sort, no collect of the
     corpus); driver state is the O(k x dim) chosen-center list, and the
-    k-row result is metadata-sized.
-
-    Two round strategies, identical trajectories (min over doubles with
-    no NaN is associative, so a running least equals the full fold;
-    property-tested):
-
-    - ``materialize=False`` (default for k <= 4): round t re-derives
-      min-over-t distances map-side in codegen — total work
-      O(k^2 * dim) per row-scan unit, but every round is a pure
-      function of (corpus, chosen) with no intermediate state to
-      write, read, or recover (an executor loss just recomputes).
-    - ``materialize=True`` (default for k > 4): carries a running
-      ``__dmin`` column, updated each round against only the NEWEST
-      center — total work O(k * dim) per row-scan unit.  Round state is
-      one lazy ``localCheckpoint`` per round (materialized by the same
-      top-1 job — one job per round — and cutting the lineage, so plan
-      size is constant at any k; see :func:`_kcenter_rounds_materialized`).
-      Checkpoint blocks live in executor storage until Spark's
-      ``ContextCleaner`` frees a superseded round; a lost executor that
-      held checkpoint blocks requires a restart (the trade for the
-      k-fold fold saving).
-
-    ``materialize=None`` picks by the measured crossover
-    (tools/kcenter_crossover.py; sf0.1 = 60k x 64-dim, warm best-of-3,
-    stateless vs materialized, round 12, 32 cores): k=8 3.98/~1.7 s,
-    k=32 39.1/6.2 s, k=64 142.5/11.2 s — the O(k^2) fold cost
-    dominates from k~6 up and the two forms are measurement noise
-    apart below that, where the stateless form's operational purity
-    wins the tie (MEASUREMENTS.md logs the full round-12 cold/warm
-    panel).
+    k-row result is metadata-sized.  Each row carries a running
+    ``__dmin`` (distance to the nearest chosen center), updated each
+    round against only the NEWEST center — O(k * dim) fold work per
+    row-scan unit, where re-deriving min-over-t distances every round
+    would cost O(k^2 * dim).  Round state is one lazy checkpoint per
+    round (``materialize_once(storage="lazy")``): the same top-1 job
+    that picks the next center materializes it — one job per round — and
+    the next round's plan starts from that checkpoint leaf, so plan size
+    stays constant at any k (an uncut chain of per-round filter+select
+    pairs overflows the JVM stack past ~32 rounds).  Superseded rounds
+    are freed by Spark's ``ContextCleaner`` once garbage-collected; a
+    lost executor that held checkpoint blocks requires a restart.
 
     Exactness: float->double widening is value-exact, the distance fold
-    is the sequential left fold (matches DuckDB ``list_sum``), min/least
-    over doubles is order-independent (no NaN can arise from finite
-    squares), and the (dist DESC, id ASC) total order makes every round's
-    argmax — hence the whole trajectory — engine-portable bit-for-bit.
+    is the sequential left fold (matches DuckDB ``list_sum``), the
+    running min over doubles equals the min over all chosen centers (no
+    NaN can arise from finite squares, and min is associative), and the
+    (dist DESC, id ASC) total order makes every round's argmax — hence
+    the whole trajectory — engine-portable bit-for-bit.
     NULL ids and NULL vectors AND vectors containing a NULL element are
-    dropped up front (a NULL id would NULL-poison the
-    ``~isin(chosen)`` exclusion — and seed first under Spark's
-    NULLS-FIRST asc while an ANSI oracle seeds it last; a NULL element
-    would NULL-poison the distance fold); already-chosen ids are
-    excluded so duplicate vectors (distance 0 everywhere) can never
-    re-select a center.  ``k < 1`` selects nothing.
+    dropped up front (a NULL id would NULL-poison the ``!=`` exclusion —
+    and seed first under Spark's NULLS-FIRST asc while an ANSI oracle
+    seeds it last; a NULL element would NULL-poison the distance fold);
+    each chosen id leaves the candidate frame, so duplicate vectors
+    (distance 0 everywhere) can never re-select a center.  ``k < 1``
+    selects nothing.
     """
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    if materialize is None:
-        materialize = k > 4
     no_null_elem = ~F.exists(F.col(vec_col), lambda x: x.isNull())
     pts = corpus.filter(
         F.col(id_col).isNotNull()
@@ -1477,33 +1370,26 @@ def kcenter_select(corpus: DataFrame, k: int = 8,
         seed = (pts.orderBy(F.asc("__id")).limit(1).collect()
                 if k >= 1 else [])
         picked: list[tuple] = []
-        chosen: list[tuple] = []
         if seed:
-            chosen.append((seed[0]["__id"],
-                           [float(x) for x in seed[0]["__v"]]))
-            picked.append((1, seed[0]["__id"], None))
-        if materialize and chosen and len(picked) < k:
-            picked = _kcenter_rounds_materialized(pts, k, picked, chosen)
-        else:
-            while chosen and len(picked) < k:
-                dmin = None
-                for _cid, cvec in chosen:
-                    d = _sq_dist_to(F.col("__v"), cvec)
-                    dmin = d if dmin is None else F.least(dmin, d)
-                cand = (
-                    pts.filter(
-                        ~F.col("__id").isin([cid for cid, _ in chosen]))
-                    .select("__id", "__v", dmin.alias("__d"))
-                    .orderBy(F.desc("__d"), F.asc("__id"))
-                    .limit(1)
-                    .collect()
-                )
+            row, row_d, cur = seed[0], None, pts
+            while True:
+                picked.append((len(picked) + 1, row["__id"], row_d))
+                if len(picked) >= k:
+                    break
+                # fold only the NEWEST center into the running min
+                d = _sq_dist_to(F.col("__v"), [float(x) for x in row["__v"]])
+                if len(picked) > 1:
+                    d = F.least(F.col("__dmin"), d)
+                cur = materialize_once(
+                    cur.filter(F.col("__id") != F.lit(row["__id"]))
+                    .select("__id", "__v", d.alias("__dmin")),
+                    storage="lazy")
+                cand = (cur.orderBy(F.desc("__dmin"), F.asc("__id"))
+                        .limit(1).collect())
                 if not cand:
                     break
                 row = cand[0]
-                chosen.append((row["__id"], [float(x) for x in row["__v"]]))
-                picked.append(
-                    (len(picked) + 1, row["__id"], float(row["__d"])))
+                row_d = float(row["__dmin"])
     finally:
         pts.unpersist()
     schema = StructType([
@@ -1512,54 +1398,6 @@ def kcenter_select(corpus: DataFrame, k: int = 8,
         StructField("min_dist_sq", DoubleType(), True),
     ])
     return corpus.sparkSession.createDataFrame(picked, schema)
-
-
-def _kcenter_rounds_materialized(pts: DataFrame, k: int,
-                                 picked: list, chosen: list) -> list:
-    """The ``materialize=True`` round loop of :func:`kcenter_select`:
-    carry a running ``__dmin`` (distance to the nearest chosen center)
-    and update it each round against only the NEWEST center —
-    O(k * dim) fold work per row-scan unit instead of the stateless
-    form's O(k^2 * dim).
-
-    Round state: each round's frame is one lazy checkpoint
-    (``materialize_once(storage="lazy")``), so the same top-1 job that
-    picks the next center materializes it — one job per round — and the
-    next round's plan starts from that checkpoint leaf, so plan size
-    stays constant at any k (an uncut chain of per-round filter+select
-    pairs overflows the JVM stack past ~32 rounds).  Superseded rounds
-    are freed by Spark's ``ContextCleaner`` once garbage-collected.
-    The eager checkpoint costs a second job per round; measured at solo
-    k=8 sf0.1 it was 12.25 s cold / 2.6-5.0 s warm, page-cache-state
-    sensitive (MEASUREMENTS.md).
-
-    The trajectory is bit-identical to the stateless form because min
-    over finite doubles is associative (``least(least(d1,d2),d3) ==
-    least(d1,least(d2,d3))``) and both forms apply the same per-center
-    distance fold (property-tested).  Mutates and returns ``picked``;
-    extends ``chosen`` alongside."""
-    cur = (
-        pts.filter(F.col("__id") != F.lit(chosen[0][0]))
-        .select("__id", "__v",
-                _sq_dist_to(F.col("__v"), chosen[0][1]).alias("__dmin"))
-    )
-    while len(picked) < k:
-        cur = materialize_once(cur, storage="lazy")
-        cand = (cur.orderBy(F.desc("__dmin"), F.asc("__id"))
-                .limit(1).collect())
-        if not cand:
-            break
-        row = cand[0]
-        cvec = [float(x) for x in row["__v"]]
-        chosen.append((row["__id"], cvec))
-        picked.append((len(picked) + 1, row["__id"], float(row["__dmin"])))
-        cur = (
-            cur.filter(F.col("__id") != F.lit(row["__id"]))
-            .select("__id", "__v",
-                    F.least(F.col("__dmin"),
-                            _sq_dist_to(F.col("__v"), cvec)).alias("__dmin"))
-        )
-    return picked
 
 
 # --- persisted IVF index ---------------------------------------------------

@@ -89,8 +89,11 @@ def _marker_path(spark: SparkSession, path: str):
     parent, sep, base = p.rpartition("/")
     # "_" prefix: Spark file indexes skip it (like _SUCCESS) so a reader
     # of a table ROOT never chokes on it, but unlike the dot-hidden
-    # asides it DOES show up in a plain ls
-    return _fs_and_path(spark, f"{parent}{sep}_{base}{_MARKER_SUFFIX}")[1]
+    # asides it DOES show up in a plain ls.  Spark keeps "_" names that
+    # contain "=" (as partition dirs), so a leaf's "=" becomes "-":
+    # _part-1__COMPACTION_SWAP, never _part=1__COMPACTION_SWAP
+    name = base.replace("=", "-")
+    return _fs_and_path(spark, f"{parent}{sep}_{name}{_MARKER_SUFFIX}")[1]
 
 
 def _swap_marker(fs, spark: SparkSession, path: str, tmp: str, old: str):
@@ -241,21 +244,38 @@ def dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     return n, total
 
 
-def _leaf_partition_dirs(fs, hpath) -> list:
+def _leaf_partition_dirs(spark: SparkSession, fs, hpath) -> list:
     """Leaf ``key=value`` partition directories under ``hpath`` (handles
     multi-level partitioning); empty list when the path is unpartitioned.
     Hidden dirs and ``__compact_tmp``/``__compact_old`` leftovers are NOT
     partitions — a crashed compaction's aside dir must never be adopted
-    as a real leaf and compacted into place (silent row duplication)."""
-    parts = [st.getPath() for st in fs.listStatus(hpath)
-             if st.isDirectory() and "=" in st.getPath().getName()
-             and not st.getPath().getName().startswith(("_", "."))
-             and not _is_aside(st.getPath().getName())]
+    as a real leaf and compacted into place (silent row duplication).
+
+    A leaf whose swap crashed between its renames is missing, with only
+    its hidden old aside left: the same listing finds that aside and
+    ``recover_swap`` renames it back, so a call on the table root
+    restores every crashed leaf under it at no extra listing cost."""
+    listing = fs.listStatus(hpath)
+    names = {st.getPath().getName() for st in listing}
+    parts = []
+    for st in listing:
+        if not st.isDirectory():
+            continue
+        name = st.getPath().getName()
+        live = name[1:-len(_OLD_SUFFIX)]
+        if (name.startswith(".") and name.endswith(_OLD_SUFFIX)
+                and "=" in live and live not in names):
+            leaf = st.getPath().getParent().toString() + "/" + live
+            recover_swap(spark, leaf)
+            parts.append(_fs_and_path(spark, leaf)[1])
+        elif ("=" in name and not name.startswith(("_", "."))
+              and not _is_aside(name)):
+            parts.append(st.getPath())
     if not parts:
         return []
     leaves = []
     for p in parts:
-        deeper = _leaf_partition_dirs(fs, p)
+        deeper = _leaf_partition_dirs(spark, fs, p)
         leaves.extend(deeper if deeper else [p])
     return leaves
 
@@ -276,10 +296,12 @@ def compact_parquet(spark: SparkSession, path: str,
     Crash recovery: the aside dirs are dot-hidden, so after a crash
     mid-swap a plain ``ls`` of the parent can look empty even though the
     data is safe.  A marker file ``_<base>__COMPACTION_SWAP`` (visible to
-    ls; skipped by Spark readers like ``_SUCCESS``) exists in the parent
-    for exactly the swap window, containing these same instructions, so
-    the state is discoverable.  The next call recovers by itself
-    (``recover_swap``: a missing ``path`` gets its old aside back).  By
+    ls; skipped by Spark readers like ``_SUCCESS``; a leaf's ``=`` is
+    written ``-``) exists in the parent for exactly the swap window,
+    containing these same instructions, so the state is discoverable.
+    The next call recovers by itself (``recover_swap``: a missing
+    ``path`` gets its old aside back; a call on a partitioned root does
+    the same for every crashed leaf under it).  By
     hand: if ``path`` is missing, the live copy is the hidden sibling —
     ``rename parent/.base__compact_old -> path`` (old data) or, if only
     ``parent/.base__compact_tmp`` exists, rename that instead (the
@@ -290,7 +312,7 @@ def compact_parquet(spark: SparkSession, path: str,
         raise ValueError(f"target_bytes must be >= 1, got {target_bytes}")
     recover_swap(spark, path)
     fs, hpath = _fs_and_path(spark, path)
-    leaves = _leaf_partition_dirs(fs, hpath)
+    leaves = _leaf_partition_dirs(spark, fs, hpath)
     if leaves:
         if not per_partition:
             raise ValueError(

@@ -365,3 +365,70 @@ def test_merge_recovers_from_crash_between_swap_renames(spark, tmp_warehouse,
     merge_write_path(spark, path, delta, ["id"])
     assert digest(path) == digest(clean)
     assert spark.read.parquet(path).count() == 13
+
+
+def test_compact_root_recovers_leaf_crashed_between_swap_renames(
+        spark, tmp_warehouse, monkeypatch):
+    """A crash in one leaf partition's swap, after the leaf left its path
+    and before the rewrite took its place, must neither break readers of
+    the table root (the leaf's swap marker must not look like a partition
+    to Spark's file index) nor lose the leaf: the next
+    ``compact_parquet`` on the ROOT restores it, so the table ends with
+    exactly the rows of a run that never crashed."""
+    import hashlib
+
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators import (
+        compaction,
+    )
+
+    def digest(p):
+        rows = sorted(tuple(r) for r in spark.read.parquet(p).collect())
+        return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+    clean = os.path.join(tmp_warehouse, "parted_clean")
+    path = os.path.join(tmp_warehouse, "parted_crash")
+    for p in (clean, path):
+        spark.range(1_200).selectExpr("id", "id % 3 AS part") \
+            .repartition(4).write.partitionBy("part") \
+            .mode("overwrite").parquet(p)
+    assert dir_stats(spark, path)[0] == 12
+    compact_parquet(spark, clean, target_bytes=1 << 30)
+
+    class Crash(Exception):
+        pass
+
+    real_fs_and_path = compaction._fs_and_path
+
+    class CrashingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            # the second rename of leaf part=1: its rewrite onto its path
+            if dst.toString().endswith("/part=1"):
+                raise Crash
+            return self._fs.rename(src, dst)
+
+    def fs_and_path(spark_, p):
+        fs, hpath = real_fs_and_path(spark_, p)
+        return CrashingFs(fs), hpath
+
+    with monkeypatch.context() as m:
+        m.setattr(compaction, "_fs_and_path", fs_and_path)
+        with pytest.raises(Crash):
+            compact_parquet(spark, path, target_bytes=1 << 30)
+    assert not os.path.exists(os.path.join(path, "part=1"))
+    # (a) the root reads without error, the marker in place
+    assert [n for n in os.listdir(path) if n.endswith("COMPACTION_SWAP")] \
+        == ["_part-1__COMPACTION_SWAP"]
+    spark.catalog.refreshByPath(path)
+    assert spark.read.parquet(path).count() < 1_200
+
+    # (b) a second call on the root restores the leaf and finishes
+    compact_parquet(spark, path, target_bytes=1 << 30)
+    assert sorted(n for n in os.listdir(path) if not n.startswith(".")) \
+        == ["part=0", "part=1", "part=2"]
+    assert digest(path) == digest(clean)

@@ -224,26 +224,68 @@ def test_lsh_topk_subset_of_exact(spark, vectors):
     assert len(lsh) <= 3
 
 
-def test_cosine_arrow_bitwise_equals_hof(spark):
-    """The Arrow-batched scorer must replay the HOF left-fold bit-for-bit
-    (it replaces it on every ANN hot path while the HOF form stays the
-    oracle-parity reference)."""
+def test_fold_cosine_bitwise_equals_hof(spark):
+    """The numpy scoring kernel (``_fold_dot``'s left fold, in query
+    chunks) must replay the HOF cosine bit-for-bit: every ANN path scores
+    with it while the HOF form stays the oracle-parity reference."""
+    import numpy as np
+
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.similarity import (
-        cosine, cosine_arrow,
+        SCORE_CELLS, _cosine_rows, cosine,
     )
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qs = emb.filter("vec_id < 3").select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    both = emb.crossJoin(F.broadcast(qs)).select(
-        cosine(F.col("embedding"), F.col("qe")).alias("hof"),
-        cosine_arrow(F.col("embedding"), F.col("qe")).alias("arrow"),
-    )
-    n = both.count()
-    assert n > 0
+    hof = {
+        (r["qid"], r["vec_id"]): r["hof"]
+        for r in emb.crossJoin(F.broadcast(qs)).select(
+            "qid", "vec_id",
+            cosine(F.col("embedding"), F.col("qe")).alias("hof"),
+        ).collect()
+    }
+    rows = emb.orderBy("vec_id").collect()
+    ids = [r["vec_id"] for r in rows]
+    m = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    qm = m[:3]
+    assert [r["vec_id"] for r in rows[:3]] == [0, 1, 2]
+    got = {}
+    for lo, sims in _cosine_rows(qm, m, SCORE_CELLS):
+        for i, row in enumerate(sims):
+            got.update({(lo + i, vid): float(x) for vid, x in zip(ids, row)})
+    assert len(got) == len(hof) == 3 * len(ids) > 0
     # exact equality — no tolerance: a single differing ULP fails
-    assert both.filter(F.col("hof") != F.col("arrow")).count() == 0
-    assert both.filter(F.col("arrow").isNull()).count() == 0
+    assert got == hof
+
+
+def test_scoring_chunks_do_not_change_results(spark, monkeypatch):
+    """Query chunking is invisible: with the score buffer capped at a few
+    cells (one query per chunk, and chunks that split a list's queries),
+    cosine_topk, semantic_dedup_pairs and ivf_topk return exactly the
+    rows of the default cap."""
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions import (
+        similarity,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    qs = emb.filter("vec_id % 25 = 0").select(
+        F.col("vec_id").alias("query_id"), "embedding")
+
+    def outputs():
+        return [
+            sorted(map(tuple, df.collect())) for df in (
+                similarity.cosine_topk(emb, qs, k=5),
+                similarity.semantic_dedup_pairs(emb, threshold=0.3,
+                                                n_lists=4, sample_size=64),
+                similarity.ivf_topk(emb, qs, k=5, n_lists=8, n_probe=3,
+                                    refine_iters=1, sample_size=64),
+            )
+        ]
+
+    default = outputs()
+    assert all(default)
+    monkeypatch.setattr(similarity, "SCORE_CELLS", 7)
+    assert outputs() == default
 
 
 def test_blas_grid_candidates_match_bruteforce(spark):
@@ -2151,42 +2193,9 @@ def test_kcenter_select_null_id_dropped(spark):
         (7, [4.0, 4.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for mat in (False, True):
-        got = (kcenter_select(df, k=4, materialize=mat)
-               .orderBy("sel_rank").collect())
-        assert [r["vec_id"] for r in got] == [5, 7, 6]
-        assert got[0]["min_dist_sq"] is None
-
-
-def test_kcenter_select_materialized_identical_trajectory(spark):
-    # the running-__dmin variant must replay the stateless trajectory
-    # bit-for-bit: min over finite doubles is associative, both forms
-    # apply the same per-center distance fold
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.similarity import (
-        kcenter_select,
-    )
-
-    import numpy as np
-
-    rng = np.random.default_rng(23)
-    raw = rng.normal(size=(60, 8)).astype(np.float32)
-    rows = [(int(i), [float(x) for x in raw[i]]) for i in range(60)]
-    # duplicates + a NULL vector exercise the zero-radius / drop paths
-    rows += [(100, [float(x) for x in raw[0]]), (101, None)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for k in (1, 2, 9):
-        stateless = [(r["sel_rank"], r["vec_id"], r["min_dist_sq"])
-                     for r in kcenter_select(df, k=k, materialize=False)
-                     .orderBy("sel_rank").collect()]
-        materialized = [(r["sel_rank"], r["vec_id"], r["min_dist_sq"])
-                        for r in kcenter_select(df, k=k, materialize=True)
-                        .orderBy("sel_rank").collect()]
-        assert stateless == materialized  # ids AND bit-equal radii
-    # k > n drains the corpus identically too
-    a = kcenter_select(df, k=100, materialize=False).collect()
-    b = kcenter_select(df, k=100, materialize=True).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert len(a) == 61  # every non-null point exactly once
+    got = kcenter_select(df, k=4).orderBy("sel_rank").collect()
+    assert [r["vec_id"] for r in got] == [5, 7, 6]
+    assert got[0]["min_dist_sq"] is None
 
 
 def test_embedding_covariance_exact(spark):

@@ -367,41 +367,14 @@ def test_privacy_audits_aggregate_before_filter(spark):
         assert "Join" not in plan and "Window" not in plan
 
 
-def test_kcenter_round_plan_is_take_ordered_no_shuffle(spark):
-    """Each greedy k-center round must compile to ONE
-    TakeOrderedAndProject over the corpus scan — per-partition top-1 with
-    an O(partitions) driver merge, never a global Sort+Exchange (which
-    would shuffle the full corpus k times) and never any join.  The
-    distance min-chain is map-side codegen."""
-    from pyspark.sql import functions as F
-
-    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.similarity import (
-        _sq_dist_to,
-        _to_double,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    pts = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", _to_double(F.col("embedding")).alias("__v"))
-    dmin = F.least(_sq_dist_to(F.col("__v"), [0.0] * 64),
-                   _sq_dist_to(F.col("__v"), [1.0] * 64))
-    cand = (pts.filter(~F.col("vec_id").isin([0, 1]))
-            .select("vec_id", dmin.alias("__d"))
-            .orderBy(F.desc("__d"), F.asc("vec_id")).limit(1))
-    plan = _plan(cand)
-    assert "TakeOrderedAndProject" in plan
-    for bad in ("Exchange", "CartesianProduct", "Join", "Window"):
-        assert bad not in plan
-    assert plan.count("Scan parquet") == 1
-
-
 def test_kcenter_materialized_round_plan_no_shuffle(spark):
-    """The materialize=True round (the k>4 default) must stay
-    shuffle-free too: the argmax is ONE TakeOrderedAndProject over the
-    checkpointed running-min frame, and the __dmin update is a map-side
-    filter+project over that same scan — no Exchange, no Join, no
-    re-derivation of earlier centers (exactly one distance fold against
-    the newest center)."""
+    """Each greedy k-center round must stay shuffle-free: the argmax is
+    ONE TakeOrderedAndProject over the checkpointed running-min frame
+    (per-partition top-1 with an O(partitions) driver merge, never a
+    global Sort+Exchange that would shuffle the corpus k times), and the
+    __dmin update is a map-side filter+project over that same scan — no
+    Exchange, no Join, no re-derivation of earlier centers (exactly one
+    distance fold against the newest center)."""
     from pyspark.sql import functions as F
 
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.similarity import (
