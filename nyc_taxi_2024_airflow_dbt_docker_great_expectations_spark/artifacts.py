@@ -10,7 +10,8 @@ the only code that turns a declaration into catalog tables:
 1. name each table ``<name>_<sf suffix>[_<table>]`` (:func:`table_name`);
 2. per table, keep a catalog entry, else adopt surviving files whose
    ``_table_meta.json`` sidecar matches the declared bucket keys and
-   props (``operators/layout.py:adopt_bucketed_table``), else build the
+   props and was written by this engine code (its source digest;
+   ``operators/layout.py:adopt_bucketed_table``), else build the
    artifact once;
 3. run the artifact's staleness ``check`` once per session per table
    (``_memo``, keyed by ``(applicationId, table)``: tables are

@@ -13,10 +13,8 @@ distinct problems share this single fix:
    Projections do not collapse across a materialization boundary.
 
 ``localCheckpoint`` solves both at once: it truncates lineage (fence +
-no-recompute) and caches the result MEMORY_AND_DISK.  When the intermediate
-is too large for cluster memory to be a sensible home — the 100 TB case —
-``storage="disk"`` persists DISK_ONLY instead (an ``InMemoryRelation`` is
-still a projection fence, and DISK_ONLY never evicts executor heap).
+no-recompute) and caches the result MEMORY_AND_DISK, which spills what
+does not fit in executor memory to local disk.
 
 Iterative algorithms (star contraction in ``extensions/graph.py``, greedy
 k-center in ``extensions/similarity.py``) use the same primitive: each
@@ -30,19 +28,17 @@ DataFrame is garbage-collected, like every other result here.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 
 def materialize_once(df: DataFrame, storage: str = "memory") -> DataFrame:
     """Compute ``df`` once; serve every downstream consumer from the result.
 
     ``storage="memory"``: eager ``localCheckpoint`` (MEMORY_AND_DISK cache,
-    lineage truncated).  ``storage="disk"``: eager ``persist(DISK_ONLY)`` —
-    the escape hatch for intermediates larger than cluster memory.
-    ``storage="lazy"``: ``localCheckpoint(eager=False)`` — the first
-    ACTION over the result materializes the cache, so a caller whose very
-    next statement is itself an action pays ONE job where the eager form
-    pays two (materialize, then aggregate-from-cache).  The lazy callers:
+    lineage truncated).  ``storage="lazy"``:
+    ``localCheckpoint(eager=False)`` — the first ACTION over the result
+    materializes the cache, so a caller whose very next statement is
+    itself an action pays ONE job where the eager form pays two
+    (materialize, then aggregate-from-cache).  The lazy callers:
     the prefix-sum offset collects in packing.py, and every round of the
     iterative loops (``connected_components``' convergence count,
     k-center's top-1 pick), where the cut lineage also keeps each round's
@@ -54,15 +50,11 @@ def materialize_once(df: DataFrame, storage: str = "memory") -> DataFrame:
     previous round of an iterative loop) is freed by Spark's
     ``ContextCleaner`` once it is garbage-collected.
     """
-    if storage == "disk":
-        out = df.persist(StorageLevel.DISK_ONLY)
-        out.count()  # eager: populate before fan-out so consumers never race
-        return out
     if storage == "lazy":
         return df.localCheckpoint(eager=False)
     if storage != "memory":
         raise ValueError(
-            f"storage must be 'memory', 'disk' or 'lazy', got {storage!r}")
+            f"storage must be 'memory' or 'lazy', got {storage!r}")
     return df.localCheckpoint(eager=True)
 
 

@@ -18,7 +18,6 @@ from .dedup import (  # noqa: F401
     exact_dedup_keys,
     minhash_hot_bands,
     minhash_lsh_pairs,
-    minhash_signatures,
     ngram_jaccard_pairs,
     simhash_pairs,
     simhash_table,

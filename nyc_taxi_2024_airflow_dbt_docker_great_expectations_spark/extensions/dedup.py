@@ -1,44 +1,56 @@
 """Deduplication operators for training-data pipelines.
 
-Four strategies, all shuffle-conscious and driver-collect-free:
+Exact dedup is one hash-groupBy on a content digest
+(``exact_dedup_keys``): one shuffle, and the digest doubles as the
+canonical document key.  Every near-dup engine is a candidate-and-verify
+pipeline built from the same private steps, each written once:
 
-- **Exact** (``exact_dedup_keys``): hash-groupBy on a content digest.  One
-  shuffle on the digest; at 100 TB this is the cheapest possible dedup and
-  the digest doubles as the canonical document key.
-- **n-gram Jaccard** (``ngram_jaccard_pairs``): exact set similarity via an
-  inverted-index self-join — explode distinct shingles, join postings on the
-  shingle, count co-occurrences per pair, ``J = inter / (|A|+|B|-inter)``.
-  Scales as the posting-list volume, not |docs|^2; at 100 TB you'd drop the
-  most frequent shingles first (df-cut), exactly like a search engine.
-- **MinHash + LSH** (``minhash_signatures`` / ``minhash_lsh_pairs``):
-  md5-seeded k-permutation signatures, banded into buckets; only documents
-  sharing a band bucket are candidates, then candidates are verified with
-  the exact Jaccard.  This is the sub-quadratic scale path: candidate count
-  is tunable via (bands, rows-per-band) to target a similarity threshold.
-- **SimHash** (``simhash_pairs``): 32-bit parity simhash over token md5s,
-  banded into 4-bit chunks for candidate generation, Hamming-verified.
+1. **Rep collapse** (``_collapsed_shingles`` / ``_tag_shingles``):
+   verbatim copies (identical shingle array or signature) collapse to one
+   rep (min id) with a copy count, through one window exchange
+   (``execution.rep_tags``).  A persisted pre-tagged shingle table skips
+   the window after its ghost-id check.
+2. **Candidates**: the PPJoin prefix (``_prefix``: the df cut, then each
+   document's first ``n - ceil(t*n) + 1`` shingles in (df, shingle)
+   order) equi-joined on the shingle under the length filter
+   (``_candidates`` + ``_length_filter``); or shared MinHash band keys
+   (``_minhash_band_keys``); or shared 8-bit SimHash bands.
+3. **Exact verify** (``_jaccard_verify``): ``|A∩B| / |A∪B| >= t`` over
+   the candidates' full shingle sets, so no false positive survives and
+   the result equals brute force wherever the candidates are complete.
+4. **Expansion**: duplicate groups add one exact self marker and rep
+   pairs fan out to member pairs (``_expand_self``); cross-side forms fan
+   each side out through its own member map (``_expand_cross``).
 
-Every step is deterministic (md5-derived hashes, no RNG) so each operator is
-oracle-checkable in SQL.
+The engines: n-gram Jaccard as a self-join (``ngram_jaccard_pairs``),
+across two corpora (``ngram_jaccard_pairs_vs``) and as a persisted index
+(``build_ngram_index`` / ``probe_ngram_index``); MinHash + LSH
+(``minhash_lsh_pairs``, ``build_minhash_index`` /
+``probe_minhash_index``); n-gram containment
+(``ngram_containment_pairs``); and SimHash (``simhash_pairs``), verified
+by Hamming distance.  The substring audit and removal
+(``duplicated_ngram_stats``, ``remove_duplicated_spans``) share the rep
+collapse.
 
-All pairwise engines and persisted indexes here are **multiplicity-
-collapsed**: verbatim copies (identical shingle array / signature) collapse
-to one rep before the quadratic candidate/verify stage and member joins
-expand rep pairs back to id-level afterwards — byte-identical output, but
-a c-deep duplicate cluster costs one row instead of c^2 through the join.
-On a boilerplate-heavy web corpus (30-50% exact-duplicate mass is typical)
-this is the difference between the LSH/PPJoin machinery scaling with
-distinct content and scaling with raw crawl volume squared.
+Every step is deterministic (md5-derived hashes, no RNG) so each operator
+is oracle-checkable in SQL, and collapse + expansion is byte-identical to
+the uncollapsed engine: a c-deep duplicate cluster costs one row through
+the quadratic stage instead of c^2, which on a boilerplate-heavy web
+corpus (30-50% exact-duplicate mass is typical) is the difference between
+scaling with distinct content and scaling with raw crawl volume squared.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from functools import reduce
+from operator import and_
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..execution import expand_member_pairs, materialize_once, rep_tags
+from ..operators.layout import require_build_props, write_bucketed
 from .text import (
     positional_shingles,
-    shingle_postings,
     shingled_arrays,
     token_count,
     tokens,
@@ -58,36 +70,6 @@ def exact_dedup_keys(df: DataFrame, text_col: str = "text",
             F.min(id_col).alias("canonical_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
-    )
-
-
-def _pair_jaccard(shingled: DataFrame, id_col: str) -> DataFrame:
-    """Inverted-index pair similarity from (id, shingles array) rows."""
-    sized = shingled.select(
-        F.col(id_col), F.col("shingles"), F.size("shingles").alias("n_sh")
-    )
-    postings = sized.select(
-        F.col(id_col), F.col("n_sh"), F.explode("shingles").alias("shingle")
-    )
-    a = postings.select(
-        F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"), "shingle"
-    )
-    b = postings.select(
-        F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"), "shingle"
-    )
-    pairs = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        (
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-        ).alias("jaccard"),
     )
 
 
@@ -154,164 +136,258 @@ def _check_no_ghost_ids(corpus: DataFrame, table: DataFrame, id_col: str,
         )
 
 
+# --- the candidate-and-verify kernel ---------------------------------------
+# Every near-dup engine below is assembled from these steps; the pair
+# column names are the caller's (id_a/id_b for self-joins, __ua/__ub for
+# the combined cross-corpus form, new_id/corpus_id for index probes).
+
+def _reps(tagged: DataFrame, id_col: str, *extra: str) -> DataFrame:
+    """The group reps of a rep-tagged (id, shingles) frame."""
+    return tagged.filter(F.col(id_col) == F.col("__rep")).select(
+        id_col, "shingles", *extra
+    )
+
+
+def _tag_shingles(shingled: DataFrame, id_col: str,
+                  with_mult: bool = True) -> tuple[DataFrame, DataFrame]:
+    """``(tagged, base)`` of an (id, shingles) frame: every row tagged
+    with its group rep (min id per identical array) and, ``with_mult``,
+    the copy count, materialized once; ``base`` holds the reps only."""
+    tagged = materialize_once(
+        rep_tags(shingled.select(F.col(id_col), F.col("shingles")),
+                 "shingles", id_col, with_mult=with_mult)
+    )
+    return tagged, _reps(tagged, id_col, *(["__mult"] if with_mult else []))
+
+
+def _collapsed_shingles(df: DataFrame, text_col: str, id_col: str, k: int,
+                        shingled: DataFrame | None,
+                        tables_checked: bool) -> tuple[DataFrame, DataFrame]:
+    """The rep-collapse prologue of the self-join engines: ``(tagged,
+    base)`` as :func:`_tag_shingles`, with ``__mult`` on the reps.
+
+    The shingled base feeds several plan branches (postings or band keys
+    and both verify sides), so it is materialized once; callers running
+    several shingle consumers over one corpus (e.g. lsh_recall) pass
+    their own via ``shingled``.  A substituted table is checked for
+    ghost ids first unless the caller already validated it this session
+    (``tables_checked``), and one that already carries ``__rep``/
+    ``__mult`` (a persisted pre-tagged table) skips the tagging window."""
+    raw = (shingled if shingled is not None
+           else materialize_once(shingled_arrays(df, text_col, id_col, k)))
+    if shingled is not None and not tables_checked:
+        _check_no_ghost_ids(df, raw, id_col, "shingle",
+                            legit_missing=_dropped_by_shingling(text_col, k))
+    if _tagged_or_raise(raw, "shingle"):
+        return raw, _reps(raw, id_col, "__mult")
+    return _tag_shingles(raw, id_col)
+
+
+def _df_postings(base: DataFrame, id_col: str) -> DataFrame:
+    """(id, __mult, n_sh, shingle, df_cnt): one posting row per rep
+    shingle with its document frequency, through ONE window exchange of
+    the posting mass on the shingle key (not aggregate + join back).  A
+    stop-word-grade shingle buffers its postings in one window task, but
+    that is O(df) rows, linear and spillable (and exactly what ``max_df``
+    caps).  df counts DOCUMENTS — each rep posting weighs its copy count
+    — so ``max_df`` keeps its meaning under the collapse."""
+    posts = base.select(
+        F.col(id_col), F.col("__mult"), F.size("shingles").alias("n_sh"),
+        F.explode("shingles").alias("shingle"),
+    )
+    return posts.withColumn(
+        "df_cnt", F.sum("__mult").over(Window.partitionBy("shingle"))
+    )
+
+
+def _prefix(ranked: DataFrame, id_col: str, n_col: str, threshold: float,
+            max_df: int | None) -> DataFrame:
+    """PPJoin prefix of ranked postings (id, ``n_col``, shingle, df_cnt).
+
+    The df cut comes first: shingles in more than ``max_df`` documents
+    never enter the index, so the prefix is drawn from the rarer ones
+    (``n_col`` stays the full set size, so the length filter and the
+    verify are unaffected).  Then each document keeps its first
+    ``n - ceil(t*n) + 1`` shingles in the global (df_cnt, shingle)
+    order: if J(A,B) >= t, the rarest common shingle falls in both
+    prefixes, under ANY total order both sides share."""
+    if max_df is not None:
+        ranked = ranked.filter(F.col("df_cnt") <= max_df)
+    n = F.col(n_col)
+    return ranked.withColumn(
+        "rn",
+        F.row_number().over(
+            Window.partitionBy(id_col).orderBy("df_cnt", "shingle")),
+    ).filter(F.col("rn") <= n - F.ceil(F.lit(threshold) * n) + 1)
+
+
+def _self_sides(postings: DataFrame, id_col: str) -> tuple[DataFrame, ...]:
+    """The two sides of a posting self-join on the shingle:
+    (id_a, n_a, shingle) and (id_b, n_b, shingle)."""
+    return tuple(postings.select(F.col(id_col).alias(f"id_{s}"),
+                                 F.col("n_sh").alias(f"n_{s}"), "shingle")
+                 for s in "ab")
+
+
+def _length_filter(threshold: float) -> list[Column]:
+    """J >= t forces t <= |A|/|B| <= 1/t over the sides' set sizes."""
+    t = F.lit(threshold)
+    return [F.col("n_b") >= F.ceil(t * F.col("n_a")),
+            F.col("n_a") >= F.ceil(t * F.col("n_b"))]
+
+
+def _candidates(side_a: DataFrame, side_b: DataFrame, key: str, a: str,
+                b: str, *conds: Column) -> DataFrame:
+    """Distinct ``(a, b)`` pairs of the equi-join on ``key`` (a prefix
+    shingle or a band key) that satisfy every one of ``conds``."""
+    joined = side_a.join(side_b, key)
+    if conds:
+        joined = joined.filter(reduce(and_, conds))
+    return joined.select(a, b).distinct()
+
+
+def _jaccard_verify(candidates: DataFrame, sets_a: DataFrame,
+                    sets_b: DataFrame, id_col: str,
+                    threshold: float) -> DataFrame:
+    """Exact verify: join each candidate ``(a, b)`` to both sides' full
+    (``id_col``, shingles) sets and keep ``(a, b, jaccard)`` with
+    ``|A∩B| / |A∪B| >= threshold``.  O(candidates), never all pairs."""
+    a, b = candidates.columns
+    sh_a = sets_a.select(F.col(id_col).alias(a), F.col("shingles").alias("sh_a"))
+    sh_b = sets_b.select(F.col(id_col).alias(b), F.col("shingles").alias("sh_b"))
+    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    n_union = F.size("sh_a") + F.size("sh_b") - n_inter
+    return (
+        candidates.join(sh_a, a).join(sh_b, b)
+        .withColumn("jaccard", n_inter.cast("double") / n_union.cast("double"))
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
+def _dup_groups(base: DataFrame) -> DataFrame:
+    """Reps of duplicate groups with a non-empty shingle set: identical
+    sets have Jaccard and containment exactly 1 (n/n in IEEE); empty
+    sets have no postings or band keys and never pair."""
+    return base.filter((F.col("__mult") > 1) & (F.size("shingles") > 0))
+
+
+def _expand_self(rep_pairs: DataFrame, tagged: DataFrame, id_col: str,
+                 groups: DataFrame | None = None, value=None) -> DataFrame:
+    """Self-join tail: one ``(rep, rep, value)`` marker per duplicate
+    group in ``groups`` (every member pair of a group has the same,
+    exact score), then rep pairs fan out to id-level pairs through the
+    rep -> member map (``execution.expand_member_pairs``)."""
+    value_col = rep_pairs.columns[2]
+    if groups is not None:
+        rep_pairs = rep_pairs.unionByName(groups.select(
+            F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
+            F.lit(value).alias(value_col),
+        ))
+    return expand_member_pairs(
+        rep_pairs, tagged.select("__rep", F.col(id_col).alias("__member")),
+        [value_col],
+    )
+
+
+def _expand_cross(rep_pairs: DataFrame, members_a: DataFrame,
+                  members_b: DataFrame, new_id: Column | None = None,
+                  corpus_id: Column | None = None) -> DataFrame:
+    """Cross-side tail: rep pairs ``(a, b, jaccard)`` fan out to every
+    (new member, corpus member) combination — no ordering filter.  Each
+    side's map takes the pair column's rep to ``__na``/``__nb``;
+    ``new_id``/``corpus_id`` are the output ids over those (default:
+    the member ids as they are)."""
+    a, b, _ = rep_pairs.columns
+    return rep_pairs.join(members_a, a).join(members_b, b).select(
+        (F.col("__na") if new_id is None else new_id).alias("new_id"),
+        (F.col("__nb") if corpus_id is None else corpus_id)
+        .alias("corpus_id"),
+        "jaccard",
+    )
+
+
+def _probe_pairs(candidates: DataFrame, ntagged: DataFrame,
+                 nbase: DataFrame, index_sets: DataFrame,
+                 index_members: DataFrame, id_col: str,
+                 threshold: float) -> DataFrame:
+    """The index probes' tail: verify batch-rep x corpus-rep candidates
+    against the persisted verify sets, then expand both sides (the
+    batch through its tags, the corpus through the persisted members
+    table) to ``(new_id, corpus_id, jaccard)``."""
+    return _expand_cross(
+        _jaccard_verify(candidates, nbase, index_sets, id_col, threshold),
+        ntagged.select(F.col("__rep").alias("new_id"),
+                       F.col(id_col).alias("__na")),
+        index_members.select(F.col("rep_id").alias("corpus_id"),
+                             F.col("member_id").alias("__nb")),
+    )
+
+
+# --- n-gram Jaccard --------------------------------------------------------
+
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 3,
                         threshold: float = 0.6,
-                        prefix_filter: bool = True,
                         max_df: int | None = None,
                         shingled: DataFrame | None = None,
                         tables_checked: bool = False) -> DataFrame:
     """Exact word-k-gram Jaccard near-dup pairs above ``threshold``.
 
-    With ``prefix_filter`` (default), applies PPJoin-style **prefix
-    filtering**: shingles are globally ordered by (document frequency,
-    shingle) and only each document's first ``n - ceil(t*n) + 1`` shingles
-    are indexed.  If J(A,B) >= t, the rarest common shingle provably falls in
-    both prefixes, so joining prefix postings loses no true pair — while the
-    frequent shingles that cause the quadratic posting-list blowup never
-    enter the join.  A length filter (|A| and |B| within a factor t of each
-    other, another J >= t invariant) prunes further.  Candidates are then
-    verified with the exact set intersection, so the result is IDENTICAL to
-    the naive inverted-index join — this is the difference between an exact
-    similarity self-join that dies on a common-vocabulary corpus at 100 TB
-    and one that scales with the rare-token posting mass.
+    PPJoin-style **prefix filtering**: shingles are globally ordered by
+    (document frequency, shingle) and only each document's first
+    ``n - ceil(t*n) + 1`` shingles are indexed.  If J(A,B) >= t, the
+    rarest common shingle provably falls in both prefixes, so joining
+    prefix postings loses no true pair — while the frequent shingles that
+    cause the quadratic posting-list blowup never enter the join.  A
+    length filter (|A| and |B| within a factor t of each other, another
+    J >= t invariant) prunes further.  Candidates are then verified with
+    the exact set intersection, so the result is IDENTICAL to the naive
+    inverted-index join — this is the difference between an exact
+    similarity self-join that dies on a common-vocabulary corpus at
+    100 TB and one that scales with the rare-token posting mass.
 
-    ``max_df`` (requires ``prefix_filter``) is the search-engine df-cut:
-    shingles occurring in more than ``max_df`` documents are dropped from
-    the *index* before prefix selection (never from the verify sets).  On a
-    common-vocabulary corpus this caps the largest posting lists — the
-    quadratic term prefix filtering alone cannot bound when even the
-    *rarest* shingle of a stop-word-only document is frequent.  Unlike the
-    pure prefix filter it can lose recall: a true pair whose common shingles
-    are ALL above the cut produces no candidate.  Pick the cut from the df
-    histogram (e.g. 99.9th percentile) so only stop-word-grade shingles are
-    dropped; ``tests/test_extensions.py`` shows a safe cut leaving the pair
-    set identical.
+    ``max_df`` is the search-engine df-cut: shingles occurring in more
+    than ``max_df`` documents are dropped from the *index* before prefix
+    selection (never from the verify sets).  On a common-vocabulary
+    corpus this caps the largest posting lists — the quadratic term
+    prefix filtering alone cannot bound when even the *rarest* shingle of
+    a stop-word-only document is frequent.  Unlike the pure prefix filter
+    it can lose recall: a true pair whose common shingles are ALL above
+    the cut produces no candidate.  Pick the cut from the df histogram
+    (e.g. 99.9th percentile) so only stop-word-grade shingles are
+    dropped; ``tests/test_extensions.py`` shows a safe cut leaving the
+    pair set identical.
+
+    **Multiplicity collapse**: verbatim document copies share one shingle
+    array, inflate every posting list c-fold and the candidate/verify
+    pair mass c^2-fold, yet every such pair has Jaccard exactly 1.  The
+    engine runs over distinct arrays only, duplicate groups emit a J=1
+    self marker, and member expansion fans rep pairs back to id-level —
+    byte-identical to the uncollapsed output (prefix completeness holds
+    under ANY consistent global shingle order, and the verify phase is
+    exact, so ranking df over distinct arrays changes candidates but
+    never the result).
     """
-    from pyspark.sql import Window
-
-    if max_df is not None and not prefix_filter:
-        raise ValueError("max_df is an index-side cut; requires prefix_filter=True")
-
-    if not prefix_filter:
-        shingled = df.select(
-            F.col(id_col), word_shingles(text_col, k).alias("shingles")
-        ).filter(F.size("shingles") > 0)
-        return _pair_jaccard(shingled, id_col).filter(
-            F.col("jaccard") >= threshold
-        )
-
-    # the shingled base feeds three plan branches (postings + both verify
-    # sides); materialize it once or the tokenize/window/collect_set pass
-    # re-executes per branch (materialize_once(storage="disk") at 100 TB).
-    # Callers running several shingle consumers over the same corpus (e.g.
-    # lsh_recall) pass their own materialized base via ``shingled``.
-    raw = (shingled if shingled is not None
-           else materialize_once(shingled_arrays(df, text_col, id_col, k)))
-    # **Multiplicity collapse**: verbatim document copies share one shingle
-    # array, inflate every posting list c-fold and the candidate/verify pair
-    # mass c^2-fold, yet every such pair has Jaccard exactly 1.  ONE window
-    # exchange on the array key tags each row with its group rep (min id)
-    # and multiplicity; the PPJoin engine then runs over distinct arrays
-    # only, duplicate groups emit a J=1 self marker, and member-expansion
-    # joins fan rep pairs back to id-level — byte-identical to the
-    # uncollapsed output (prefix completeness holds under ANY consistent
-    # global shingle order, and the verify phase is exact, so ranking df
-    # over distinct arrays changes candidates but never the result).
-    # A ``shingled`` table that already carries __rep/__mult (a persisted
-    # pre-tagged corpus table) skips the window entirely; a stale table's
-    # ghost ids are refused up front unless the caller already validated
-    # this session (``tables_checked``).
-    if shingled is not None and not tables_checked:
-        _check_no_ghost_ids(df, raw, id_col, "shingle",
-                            legit_missing=_dropped_by_shingling(text_col, k))
-    tagged = raw if _tagged_or_raise(raw, "shingle") else materialize_once(
-        rep_tags(raw.select(F.col(id_col), F.col("shingles")),
-                 "shingles", id_col)
-    )
-    base = tagged.filter(F.col(id_col) == F.col("__rep")).select(
-        id_col, "shingles", "__mult"
-    )
-    posts = base.select(
-        F.col(id_col), F.col("__mult"), F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("shingle"),
-    )
-    # document frequency via a whole-partition window — ONE exchange of the
-    # posting mass on the shingle key, not aggregate + join back (two).  A
-    # stop-word-grade shingle buffers its postings in one window task, but
-    # that is O(df) rows, linear and spillable (and exactly what ``max_df``
-    # caps); the quadratic candidate mass is bounded by the prefix filter.
-    # df counts DOCUMENTS — each rep posting weighs its copy count — so
-    # ``max_df`` keeps its documented meaning under the collapse.
-    ranked = posts.withColumn(
-        "df_cnt", F.sum("__mult").over(Window.partitionBy("shingle"))
-    )
-    if max_df is not None:
-        # df-cut BEFORE ranking: frequent shingles never enter the index, so
-        # the prefix is drawn from the surviving (rarer) shingles only.
-        # n_sh stays the full set size — the length filter and the verify
-        # phase are unaffected by the cut.
-        ranked = ranked.filter(F.col("df_cnt") <= max_df)
-    ranked = ranked.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy(id_col).orderBy("df_cnt", "shingle")
-        ),
-    )
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    prefix = ranked.filter(F.col("rn") <= prefix_len).select(
-        id_col, "n_sh", "shingle"
-    )
-
-    pa = prefix.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"),
-                       "shingle")
-    pb = prefix.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"),
-                       "shingle")
-    candidates = (
-        pa.join(pb, "shingle")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            # length filter: J >= t forces t <= |A|/|B| <= 1/t
-            & (F.col("n_b") >= F.ceil(F.lit(threshold) * F.col("n_a")))
-            & (F.col("n_a") >= F.ceil(F.lit(threshold) * F.col("n_b")))
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-    sh_a = base.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = base.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    n_union = F.size("sh_a") + F.size("sh_b") - n_inter
-    rep_pairs = (
-        candidates.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("jaccard", n_inter.cast("double") / n_union.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    tagged, base = _collapsed_shingles(df, text_col, id_col, k, shingled,
+                                       tables_checked)
+    prefix = _prefix(_df_postings(base, id_col), id_col, "n_sh", threshold,
+                     max_df)
+    candidates = _candidates(*_self_sides(prefix, id_col), "shingle",
+                             "id_a", "id_b",
+                             F.col("id_a") < F.col("id_b"),
+                             *_length_filter(threshold))
+    rep_pairs = _jaccard_verify(candidates, base, base, id_col, threshold)
+    groups = None
     if threshold <= 1.0:
-        # duplicate-group self markers: identical non-empty shingle sets
-        # have Jaccard exactly 1 (n/n in IEEE); empty sets never paired in
-        # the uncollapsed engine (no postings) and must not here either
-        selfs = base.filter((F.col("__mult") > 1) & (F.size("shingles") > 0))
+        groups = _dup_groups(base)
         if max_df is not None:
-            # the uncollapsed engine finds a duplicate pair only if >= 1 of
-            # the group's shingles survives the df-cut into the index (the
-            # documented recall loss); gate the markers identically
-            selfs = selfs.join(
-                ranked.select(id_col).distinct(), id_col, "left_semi"
-            )
-        rep_pairs = rep_pairs.unionByName(
-            selfs.select(
-                F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-    return expand_member_pairs(
-        rep_pairs, tagged.select("__rep", F.col(id_col).alias("__member")),
-        ["jaccard"],
-    )
+            # the uncollapsed engine finds a duplicate pair only if >= 1
+            # of the group's shingles survives the df-cut into the index
+            # (the documented recall loss); gate the markers identically
+            groups = groups.join(prefix.select(id_col).distinct(), id_col,
+                                 "left_semi")
+    return _expand_self(rep_pairs, tagged, id_col, groups, 1.0)
 
 
 def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
@@ -338,26 +414,12 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
     1.0; reps carry the posting/verify work, dup groups emit a 1.0 self
     marker, member joins expand — same contract as every pair engine
     here (byte-identical to the uncollapsed form)."""
-    raw = (shingled if shingled is not None
-           else materialize_once(shingled_arrays(df, text_col, id_col, k)))
-    if shingled is not None and not tables_checked:
-        _check_no_ghost_ids(df, raw, id_col, "shingle",
-                            legit_missing=_dropped_by_shingling(text_col, k))
-    tagged = raw if _tagged_or_raise(raw, "shingle") else materialize_once(
-        rep_tags(raw.select(F.col(id_col), F.col("shingles")),
-                 "shingles", id_col)
-    )
-    base = tagged.filter(F.col(id_col) == F.col("__rep")).select(
-        id_col, "shingles", "__mult"
-    )
-    posts = base.select(
+    tagged, base = _collapsed_shingles(df, text_col, id_col, k, shingled,
+                                       tables_checked)
+    a, b = _self_sides(base.select(
         F.col(id_col), F.size("shingles").alias("n_sh"),
         F.explode("shingles").alias("shingle"),
-    )
-    a = posts.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"),
-                     "shingle")
-    b = posts.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"),
-                     "shingle")
+    ), id_col)
     rep_pairs = (
         a.join(b, "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -371,18 +433,7 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")
     )
-    # duplicate-group self markers: identical non-empty sets contain each
-    # other exactly (n/n in IEEE); empty sets never enter the posting join
-    rep_pairs = rep_pairs.unionByName(
-        base.filter((F.col("__mult") > 1) & (F.size("shingles") > 0)).select(
-            F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
-            F.lit(1.0).alias("containment"),
-        )
-    )
-    return expand_member_pairs(
-        rep_pairs, tagged.select("__rep", F.col(id_col).alias("__member")),
-        ["containment"],
-    )
+    return _expand_self(rep_pairs, tagged, id_col, _dup_groups(base), 1.0)
 
 
 def ngram_jaccard_pairs_vs(new: DataFrame, corpus: DataFrame,
@@ -409,8 +460,6 @@ def ngram_jaccard_pairs_vs(new: DataFrame, corpus: DataFrame,
     never merged).  Byte-identical output; the pair mass is paid per
     distinct cross-side content pair.
     """
-    from pyspark.sql import Window as W
-
     side_tagged = new.select(
         F.col(id_col), F.col(text_col), F.lit(0).alias("__side")
     ).unionByName(
@@ -432,75 +481,23 @@ def ngram_jaccard_pairs_vs(new: DataFrame, corpus: DataFrame,
         rep_tags(shingled.select("__uid", "shingles"),
                  [F.substring("__uid", 1, 2), F.col("shingles")], "__uid")
     )
-    base = tagged.filter(F.col("__uid") == F.col("__rep")).select(
-        "__uid", "shingles", "__mult"
-    )
-    posts = base.select(
-        "__uid", F.col("__mult"), F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("shingle"),
-    )
-    # df counts DOCUMENTS across both sides (copies weigh their count),
-    # keeping max_df's documented meaning under the collapse
-    ranked = posts.withColumn(
-        "df_cnt", F.sum("__mult").over(W.partitionBy("shingle"))
-    )
-    if max_df is not None:
-        ranked = ranked.filter(F.col("df_cnt") <= max_df)
-    ranked = ranked.withColumn(
-        "rn",
-        F.row_number().over(W.partitionBy("__uid").orderBy("df_cnt", "shingle")),
-    )
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    prefix = ranked.filter(F.col("rn") <= prefix_len).select(
-        "__uid", "n_sh", "shingle"
-    )
-    pa = prefix.filter(F.col("__uid").startswith("0:")).select(
-        F.col("__uid").alias("__ua"), F.col("n_sh").alias("n_a"), "shingle"
-    )
-    pb = prefix.filter(F.col("__uid").startswith("1:")).select(
-        F.col("__uid").alias("__ub"), F.col("n_sh").alias("n_b"), "shingle"
-    )
-    candidates = (
-        pa.join(pb, "shingle")
-        .filter(
-            (F.col("n_b") >= F.ceil(F.lit(threshold) * F.col("n_a")))
-            & (F.col("n_a") >= F.ceil(F.lit(threshold) * F.col("n_b")))
-        )
-        .select("__ua", "__ub")
-        .distinct()
-    )
-    sh_a = base.select(F.col("__uid").alias("__ua"),
-                       F.col("shingles").alias("sh_a"))
-    sh_b = base.select(F.col("__uid").alias("__ub"),
-                       F.col("shingles").alias("sh_b"))
-    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    n_union = F.size("sh_a") + F.size("sh_b") - n_inter
-    rep_pairs = (
-        candidates.join(sh_a, "__ua")
-        .join(sh_b, "__ub")
-        .withColumn("jaccard", n_inter.cast("double") / n_union.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("__ua", "__ub", "jaccard")
-    )
-    # expand rep pairs to member level on both sides (cross-side output:
-    # every (new member, corpus member) combination), then strip the fixed
-    # 2-char "0:"/"1:" side prefix positionally — NOT via
-    # substring_index(':'), which would truncate string ids that themselves
-    # contain a colon; each side casts back to its OWN id type
-    memb = tagged.select("__rep", F.col("__uid").alias("__member"))
-    ma = memb.withColumnRenamed("__rep", "__ua").withColumnRenamed(
-        "__member", "__na")
-    mb = memb.withColumnRenamed("__rep", "__ub").withColumnRenamed(
-        "__member", "__nb")
-    return (
-        rep_pairs.join(ma, "__ua").join(mb, "__ub")
-        .select(
-            F.expr("substring(__na, 3)")
-            .cast(new.schema[id_col].dataType).alias("new_id"),
-            F.expr("substring(__nb, 3)")
-            .cast(corpus.schema[id_col].dataType).alias("corpus_id"),
-            "jaccard",
-        )
+    base = _reps(tagged, "__uid", "__mult")
+    prefix = _prefix(_df_postings(base, "__uid"), "__uid", "n_sh", threshold,
+                     max_df)
+    pa, pb = (prefix.filter(F.col("__uid").startswith(f"{i}:")).select(
+        F.col("__uid").alias(f"__u{s}"), F.col("n_sh").alias(f"n_{s}"),
+        "shingle") for i, s in enumerate("ab"))
+    candidates = _candidates(pa, pb, "shingle", "__ua", "__ub",
+                             *_length_filter(threshold))
+    # strip the fixed 2-char "0:"/"1:" side prefix positionally — NOT via
+    # substring_index(':'), which would truncate string ids that
+    # themselves contain a colon; each side casts back to its OWN id type
+    ma, mb = (tagged.select(F.col("__rep").alias(f"__u{s}"),
+                            F.col("__uid").alias(f"__n{s}")) for s in "ab")
+    return _expand_cross(
+        _jaccard_verify(candidates, base, base, "__uid", threshold), ma, mb,
+        F.expr("substring(__na, 3)").cast(new.schema[id_col].dataType),
+        F.expr("substring(__nb, 3)").cast(corpus.schema[id_col].dataType),
     )
 
 
@@ -529,8 +526,22 @@ NGRAM_INDEX_TABLES = {"prefix_postings": ["shingle"],
                       "doc_members": ["rep_id"]}
 
 
-def _index_table_names(prefix: str) -> dict[str, str]:
-    return {t: f"{prefix}_{t}" for t in NGRAM_INDEX_TABLES}
+def _table_names(prefix: str, tables: dict) -> dict[str, str]:
+    return {t: f"{prefix}_{t}" for t in tables}
+
+
+def _index_writer(tables: dict, prefix: str, num_buckets: int, props: dict):
+    """``put(suffix, df)``: write one table of a persisted index bucketed
+    on its declared keys, with the build parameters in its sidecar."""
+    names = _table_names(prefix, tables)
+    return names, lambda t, df: write_bucketed(
+        df, names[t], tables[t], num_buckets, props=props)
+
+
+def _members_map(tagged: DataFrame, id_col: str) -> DataFrame:
+    """(rep_id, member_id): a persisted index's expansion map."""
+    return tagged.select(F.col("__rep").alias("rep_id"),
+                         F.col(id_col).alias("member_id"))
 
 
 def build_ngram_index(corpus: DataFrame, table_prefix: str,
@@ -565,68 +576,30 @@ def build_ngram_index(corpus: DataFrame, table_prefix: str,
     self-contained operator spends per query, paid once per corpus.
     The corpus id column is ``doc_id``, a bucket key of the layout.
     """
-    from pyspark.sql import Window as W
-
-    from ..operators.layout import write_bucketed
-
     id_col = "doc_id"
-    keys = NGRAM_INDEX_TABLES
-    names = _index_table_names(table_prefix)
     # the probe replays the build's tokenization and prefix theorem, so a
     # probe under different hyperparameters is silently wrong (mostly-empty
     # candidates, not an error): record them in the sidecar of every index
     # table and have probe_ngram_index refuse a mismatch.  "collapsed"
     # marks the rep-collapsed layout — pre-collapse dirs fail the props
     # check at adoption time and rebuild cleanly.
-    props = {"kind": "ngram_index", "k": k, "threshold": threshold,
-             "max_df": max_df, "collapsed": True}
-    tagged = materialize_once(
-        rep_tags(shingled_arrays(corpus, text_col, id_col, k),
-                 "shingles", id_col)
-    )
-    write_bucketed(
-        tagged.select(F.col("__rep").alias("rep_id"),
-                      F.col(id_col).alias("member_id")),
-        names["doc_members"], keys["doc_members"], num_buckets, props=props,
-    )
-    base = tagged.filter(F.col(id_col) == F.col("__rep")).select(
-        id_col, "shingles", "__mult"
-    )
-    write_bucketed(
-        base.select(id_col, F.size("shingles").alias("n_sh"), "shingles"),
-        names["doc_shingles"], keys["doc_shingles"], num_buckets,
-        props=props,
-    )
-    posts = base.select(
-        F.col(id_col), F.col("__mult"), F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("shingle"),
-    )
+    names, put = _index_writer(
+        NGRAM_INDEX_TABLES, table_prefix, num_buckets,
+        {"kind": "ngram_index", "k": k, "threshold": threshold,
+         "max_df": max_df, "collapsed": True})
+    tagged, base = _tag_shingles(
+        shingled_arrays(corpus, text_col, id_col, k), id_col)
+    put("doc_members", _members_map(tagged, id_col))
+    put("doc_shingles",
+        base.select(id_col, F.size("shingles").alias("n_sh"), "shingles"))
     # the df window's shingle exchange feeds BOTH the shingle_df write and
     # the prefix ranking — materialize it once instead of re-shuffling the
-    # full posting list per consumer.  df counts DOCUMENTS (each rep
-    # posting weighs its copy count): the persisted table keeps its
-    # documented "full corpus document frequencies" meaning
-    ranked = materialize_once(posts.withColumn(
-        "df_cnt", F.sum("__mult").over(W.partitionBy("shingle"))
-    ))
-    write_bucketed(
-        ranked.groupBy("shingle").agg(F.first("df_cnt").alias("df_cnt")),
-        names["shingle_df"], keys["shingle_df"], num_buckets, props=props,
-    )
-    if max_df is not None:
-        ranked = ranked.filter(F.col("df_cnt") <= max_df)
-    ranked = ranked.withColumn(
-        "rn",
-        F.row_number().over(W.partitionBy(id_col).orderBy("df_cnt", "shingle")),
-    )
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    write_bucketed(
-        ranked.filter(F.col("rn") <= prefix_len).select(
-            "shingle", id_col, "n_sh"
-        ),
-        names["prefix_postings"], keys["prefix_postings"], num_buckets,
-        props=props,
-    )
+    # full posting list per consumer
+    ranked = materialize_once(_df_postings(base, id_col))
+    put("shingle_df",
+        ranked.groupBy("shingle").agg(F.first("df_cnt").alias("df_cnt")))
+    put("prefix_postings", _prefix(ranked, id_col, "n_sh", threshold, max_df)
+        .select("shingle", id_col, "n_sh"))
     return names
 
 
@@ -655,23 +628,13 @@ def probe_ngram_index(new: DataFrame, table_prefix: str,
     (mostly empty) candidate sets, so it raises instead.  The recorded
     threshold also supplies ``built_threshold`` when the caller omits it.
     """
-    from pyspark.sql import Window as W
-
-    from ..operators.layout import read_table_meta
-
     spark = new.sparkSession
-    names = _index_table_names(table_prefix)
-    meta = read_table_meta(spark, names["prefix_postings"])
-    if meta is not None and meta.get("props"):
-        built = meta["props"]
-        for param, got in (("k", k), ("max_df", max_df),
-                           ("collapsed", True)):
-            if built.get(param) != got:
-                raise ValueError(
-                    f"ngram index `{table_prefix}` was built with "
-                    f"{param}={built.get(param)!r}; probing with {got!r} "
-                    "would return wrong candidates — rebuild or match it"
-                )
+    names = _table_names(table_prefix, NGRAM_INDEX_TABLES)
+    built = require_build_props(
+        spark, names["prefix_postings"], f"ngram index `{table_prefix}`",
+        {"k": k, "max_df": max_df, "collapsed": True},
+        "would return wrong candidates")
+    if built:
         if built_threshold is None:
             built_threshold = built.get("threshold")
         elif built_threshold != built.get("threshold"):
@@ -686,101 +649,32 @@ def probe_ngram_index(new: DataFrame, table_prefix: str,
             f"index built at threshold {built_threshold}; probing at "
             f"{threshold} < that would lose recall — rebuild the index"
         )
-    postings = spark.table(names["prefix_postings"])
-    shingle_df = spark.table(names["shingle_df"])
-    doc_shingles = spark.table(names["doc_shingles"])
-    members = spark.table(names["doc_members"])
-    corpus_id_t = doc_shingles.schema[id_col].dataType
-
     # multiplicity collapse, both sides: the index stores corpus reps only
     # (expansion map persisted as doc_members); the batch collapses here
     # with one window exchange on its shingle arrays
-    ntagged = materialize_once(
-        rep_tags(shingled_arrays(new, text_col, id_col, k),
-                 "shingles", id_col, with_mult=False)
-    )
-    base = ntagged.filter(F.col(id_col) == F.col("__rep")).select(
-        id_col, "shingles"
-    )
+    ntagged, base = _tag_shingles(
+        shingled_arrays(new, text_col, id_col, k), id_col, with_mult=False)
     nposts = base.select(
         F.col(id_col).alias("new_id"), F.size("shingles").alias("n_a"),
         F.explode("shingles").alias("shingle"),
-    ).join(shingle_df, "shingle", "left").withColumn(
+    ).join(spark.table(names["shingle_df"]), "shingle", "left").withColumn(
         "df_cnt", F.coalesce(F.col("df_cnt"), F.lit(0).cast("long"))
     )
-    if max_df is not None:
-        nposts = nposts.filter(F.col("df_cnt") <= max_df)
-    nprefix = nposts.withColumn(
-        "rn",
-        F.row_number().over(W.partitionBy("new_id").orderBy("df_cnt", "shingle")),
-    ).filter(
-        F.col("rn")
-        <= F.col("n_a") - F.ceil(F.lit(threshold) * F.col("n_a")) + 1
-    ).select("new_id", "n_a", "shingle")
-
-    candidates = (
-        nprefix.join(postings.withColumnRenamed(id_col, "corpus_id")
-                     .withColumnRenamed("n_sh", "n_b"), "shingle")
-        .filter(
-            (F.col("n_b") >= F.ceil(F.lit(threshold) * F.col("n_a")))
-            & (F.col("n_a") >= F.ceil(F.lit(threshold) * F.col("n_b")))
-        )
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
-    sh_a = base.select(F.col(id_col).alias("new_id"),
-                       F.col("shingles").alias("sh_a"))
-    sh_b = doc_shingles.select(F.col(id_col).alias("corpus_id"),
-                               F.col("shingles").alias("sh_b"))
-    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    n_union = F.size("sh_a") + F.size("sh_b") - n_inter
-    rep_pairs = (
-        candidates.join(sh_a, "new_id")
-        .join(sh_b, "corpus_id")
-        .withColumn("jaccard", n_inter.cast("double") / n_union.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
-    )
-    # expand rep pairs to member level on both sides (cross-side output:
-    # every (new member, corpus member) combination, no ordering filter)
-    nmemb = ntagged.select(F.col("__rep").alias("new_id"),
-                           F.col(id_col).alias("__na"))
-    cmemb = members.select(F.col("rep_id").alias("corpus_id"),
-                           F.col("member_id").alias("__nb"))
-    return (
-        rep_pairs.join(nmemb, "new_id").join(cmemb, "corpus_id")
-        .select(
-            F.col("__na").cast(new.schema[id_col].dataType).alias("new_id"),
-            F.col("__nb").cast(corpus_id_t).alias("corpus_id"),
-            "jaccard",
-        )
-    )
+    nprefix = _prefix(nposts, "new_id", "n_a", threshold, max_df).select(
+        "new_id", "n_a", "shingle")
+    postings = spark.table(names["prefix_postings"]).withColumnRenamed(
+        id_col, "corpus_id").withColumnRenamed("n_sh", "n_b")
+    candidates = _candidates(nprefix, postings, "shingle", "new_id",
+                             "corpus_id", *_length_filter(threshold))
+    return _probe_pairs(candidates, ntagged, base,
+                        spark.table(names["doc_shingles"]),
+                        spark.table(names["doc_members"]), id_col, threshold)
 
 
 # --- MinHash + LSH ---------------------------------------------------------
 # One permutation = min over shingles of md5(seed || ':' || shingle); the
 # hex-string min is a valid uniform order and the seed prefix is the
 # permutation.
-
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", k: int = 3,
-                       num_hashes: int = 12) -> DataFrame:
-    """(id, sig_0..sig_{n-1}) MinHash signature table.
-
-    Computed explode-then-aggregate rather than ``array_min(transform(...))``:
-    higher-order-function lambdas are interpreted (no whole-stage codegen),
-    while ``explode -> groupBy(id).agg(min(md5(...)) x k)`` runs the k hash
-    evaluations inside one codegen'd partial+final hash aggregate — map-side
-    combine shrinks the shuffle to one signature row per doc per partition.
-    """
-    exploded = shingle_postings(df, text_col, id_col, k)
-    return exploded.groupBy(id_col).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"sig_{j}")
-            for j in range(num_hashes)
-        ]
-    )
-
 
 def _minhash_band_keys(base: DataFrame, id_col: str, num_hashes: int,
                        bands: int) -> DataFrame:
@@ -789,7 +683,13 @@ def _minhash_band_keys(base: DataFrame, id_col: str, num_hashes: int,
     permutation, no RNG) folded into ``bands`` md5 band keys.  A pure
     per-document function — no corpus statistics — which is what lets a
     probe side compute ITS keys independently and equi-join a persisted
-    corpus band table."""
+    corpus band table.
+
+    Signatures are computed explode-then-aggregate rather than
+    ``array_min(transform(...))``: higher-order-function lambdas are
+    interpreted (no whole-stage codegen), while ``explode ->
+    groupBy(id).agg(min(md5(...)) x k)`` runs the k hash evaluations
+    inside one codegen'd partial+final hash aggregate."""
     rows_per_band = num_hashes // bands
     exploded = base.select(
         F.col(id_col), F.explode("shingles").alias("shingle")
@@ -835,13 +735,10 @@ def minhash_hot_bands(df: DataFrame, text_col: str = "text",
 
     Bucket sizes count distinct shingle arrays (group reps), matching what
     :func:`minhash_lsh_pairs`'s cap bounds after multiplicity collapse."""
-    from pyspark.sql import Window
-
     base = (shingled if shingled is not None
             else materialize_once(shingled_arrays(df, text_col, id_col, k)))
-    reps = rep_tags(base.select(F.col(id_col), F.col("shingles")),
-                    "shingles", id_col, with_mult=False) \
-        .filter(F.col(id_col) == F.col("__rep")).select(id_col, "shingles")
+    reps = _reps(rep_tags(base.select(F.col(id_col), F.col("shingles")),
+                          "shingles", id_col, with_mult=False), id_col)
     return (
         _minhash_band_keys(reps, id_col, num_hashes, bands)
         .groupBy("band_key")
@@ -899,35 +796,18 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     better recall and the measure the cap was always meant to bound
     (:func:`minhash_hot_bands` applies the same collapse).
     """
-    from pyspark.sql import Window
-
-    # one materialized shingle pass feeds signatures AND both verify sides
-    # (exploding the stored arrays re-derives the distinct postings without
-    # a second tokenize/window pass); ``shingled`` lets callers share it
-    # across several consumers
-    raw = (shingled if shingled is not None
-           else materialize_once(shingled_arrays(df, text_col, id_col, k)))
-    # persisted substitutions: refuse stale tables' ghost ids up front
-    # unless the caller already validated this session (``tables_checked``)
-    if not tables_checked:
-        if shingled is not None:
-            _check_no_ghost_ids(df, raw, id_col, "shingle",
-                            legit_missing=_dropped_by_shingling(text_col, k))
-        if band_keys is not None:
-            _check_no_ghost_ids(df, band_keys, id_col, "band-key",
-                                legit_missing=_dropped_by_shingling(text_col,
-                                                                    k))
-    # a pre-tagged persisted table (carrying __rep/__mult) skips the window
-    tagged = raw if _tagged_or_raise(raw, "shingle") else materialize_once(
-        rep_tags(raw.select(F.col(id_col), F.col("shingles")),
-                 "shingles", id_col)
-    )
-    base = tagged.filter(F.col(id_col) == F.col("__rep")).select(
-        id_col, "shingles", "__mult"
-    )
+    # one shingle pass feeds signatures AND both verify sides (exploding
+    # the stored arrays re-derives the distinct postings without a second
+    # tokenize/window pass)
+    tagged, base = _collapsed_shingles(df, text_col, id_col, k, shingled,
+                                       tables_checked)
     if band_keys is None:
         band_keys = _minhash_band_keys(base, id_col, num_hashes, bands)
     else:
+        if not tables_checked:
+            _check_no_ghost_ids(df, band_keys, id_col, "band-key",
+                                legit_missing=_dropped_by_shingling(text_col,
+                                                                    k))
         # persisted band tables cover every copy; restrict to group reps
         # (copies carry identical keys, so this drops nothing but volume)
         band_keys = band_keys.join(base.select(id_col), id_col)
@@ -938,48 +818,16 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
             "__bucket_n",
             F.count(F.lit(1)).over(Window.partitionBy("band_key")),
         ).filter(F.col("__bucket_n") <= max_bucket).drop("__bucket_n")
-
-    ca = band_keys.select(F.col(id_col).alias("id_a"), "band_key")
-    cb = band_keys.select(F.col(id_col).alias("id_b"), "band_key")
-    candidates = (
-        ca.join(cb, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-    # Verify ONLY the candidates: join their shingle sets back and compute
-    # the exact Jaccard with array intersection — O(candidates), never the
-    # all-pairs inverted-index join (that is ngram_jaccard_pairs' job as the
-    # exact baseline; at 100 TB the candidate set is what makes LSH viable).
-    sh_a = base.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = base.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    n_union = F.size("sh_a") + F.size("sh_b") - n_inter
-    rep_pairs = (
-        candidates.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard", n_inter.cast("double") / n_union.cast("double")
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    if threshold <= 1.0:
-        # duplicate-group self markers: identical non-empty shingle sets
-        # collide in every band and verify to Jaccard exactly 1; empty
-        # sets have no band keys and never pair
-        rep_pairs = rep_pairs.unionByName(
-            base.filter((F.col("__mult") > 1) & (F.size("shingles") > 0))
-            .select(
-                F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-    return expand_member_pairs(
-        rep_pairs, tagged.select("__rep", F.col(id_col).alias("__member")),
-        ["jaccard"],
-    )
+    ca, cb = (band_keys.select(F.col(id_col).alias(c), "band_key")
+              for c in ("id_a", "id_b"))
+    candidates = _candidates(ca, cb, "band_key", "id_a", "id_b",
+                             F.col("id_a") < F.col("id_b"))
+    # verify ONLY the candidates — at 100 TB the candidate set is what
+    # makes LSH viable (the all-pairs inverted index is
+    # ngram_jaccard_pairs' job as the exact baseline)
+    rep_pairs = _jaccard_verify(candidates, base, base, id_col, threshold)
+    groups = _dup_groups(base) if threshold <= 1.0 else None
+    return _expand_self(rep_pairs, tagged, id_col, groups, 1.0)
 
 
 # --- SimHash ---------------------------------------------------------------
@@ -1061,8 +909,6 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     banding every copy, but a c-deep duplicate cluster costs one row in
     the candidate join instead of c^2.
     """
-    from pyspark.sql import Window
-
     # 4 band self-joins read this table 8 times; materialize the md5+vote
     # aggregation once instead of re-running it per consumer (the tiny
     # (id, simhash) rows are the cheapest possible thing to cache)
@@ -1107,18 +953,10 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .distinct()
-        # signature groups: every member pair is exactly Hamming 0
-        .unionByName(
-            reps.filter(F.col("__mult") > 1).select(
-                F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
-                F.lit(0).alias("hamming"),
-            )
-        )
     )
-    return expand_member_pairs(
-        rep_pairs, tagged.select("__rep", F.col(id_col).alias("__member")),
-        ["hamming"],
-    )
+    # signature groups: every member pair is exactly Hamming 0
+    return _expand_self(rep_pairs, tagged, id_col,
+                        reps.filter(F.col("__mult") > 1), 0)
 
 
 def duplicated_ngram_stats(df: DataFrame, n: int = 5,
@@ -1243,24 +1081,15 @@ def build_gram_profile(corpus: DataFrame, table_prefix: str, n: int = 5,
     query — is paid once per corpus.  The corpus id column is ``doc_id``,
     a bucket key of the layout.
     """
-    from pyspark.sql import Window
-
-    from ..execution import rep_tags
-    from ..operators.layout import write_bucketed
-
     id_col = "doc_id"
-    keys = GRAM_PROFILE_TABLES
-    names = {t: f"{table_prefix}_{t}" for t in GRAM_PROFILE_TABLES}
-    props = {"kind": "gram_profile", "n": n, "collapsed": True}
+    names, put = _index_writer(GRAM_PROFILE_TABLES, table_prefix, num_buckets,
+                               {"kind": "gram_profile", "n": n,
+                                "collapsed": True})
     tagged = materialize_once(
         rep_tags(corpus.select(F.col(id_col), F.col(text_col)),
                  text_col, id_col)
     )
-    write_bucketed(
-        tagged.select(F.col("__rep").alias("rep_id"),
-                      F.col(id_col).alias("member_id")),
-        names["members"], keys["members"], num_buckets, props=props,
-    )
+    put("members", _members_map(tagged, id_col))
     reps = tagged.filter(F.col(id_col) == F.col("__rep"))
     grams = reps.select(
         F.col(id_col), F.col("__mult"),
@@ -1278,8 +1107,7 @@ def build_gram_profile(corpus: DataFrame, table_prefix: str, n: int = 5,
             "n_dup_grams"
         ),
     )
-    write_bucketed(profile, names["df_profile"], keys["df_profile"],
-                   num_buckets, props=props)
+    put("df_profile", profile)
     return names
 
 
@@ -1291,7 +1119,7 @@ def stats_from_gram_profile(spark, table_prefix: str,
     (bucket-local: the profile is bucketed on the id), expand reps to
     members.  Output schema and values are identical to the from-scratch
     engine at the same ``max_df``."""
-    names = {t: f"{table_prefix}_{t}" for t in GRAM_PROFILE_TABLES}
+    names = _table_names(table_prefix, GRAM_PROFILE_TABLES)
     prof = spark.table(names["df_profile"])
     if max_df is not None:
         prof = prof.filter(F.col("df_cnt") <= max_df)
@@ -1324,10 +1152,6 @@ MINHASH_INDEX_TABLES = {"bands": ["band_key"], "shingles": ["doc_id"],
                         "members": ["rep_id"]}
 
 
-def _minhash_table_names(prefix: str) -> dict[str, str]:
-    return {t: f"{prefix}_{t}" for t in MINHASH_INDEX_TABLES}
-
-
 def build_minhash_index(corpus: DataFrame, table_prefix: str,
                         text_col: str = "text",
                         k: int = 3, num_hashes: int = 12, bands: int = 4,
@@ -1348,38 +1172,19 @@ def build_minhash_index(corpus: DataFrame, table_prefix: str,
     expansion map probes fan matched reps back out with — verbatim copies
     cost one signature, one set of band rows, and one verify set.  The
     corpus id column is ``doc_id``, a bucket key of the layout."""
-    from pyspark.sql import Window as W
-
-    from ..operators.layout import write_bucketed
-
     id_col = "doc_id"
-    keys = MINHASH_INDEX_TABLES
-    names = _minhash_table_names(table_prefix)
     # band keys are scheme-dependent (k, num_hashes, bands): a probe under
     # a different scheme joins disjoint key spaces and silently finds
     # nothing — record the scheme so probe_minhash_index can refuse it
-    props = {"kind": "minhash_index", "k": k, "num_hashes": num_hashes,
-             "bands": bands, "collapsed": True}
-    tagged = materialize_once(
-        rep_tags(shingled_arrays(corpus, text_col, id_col, k),
-                 "shingles", id_col, with_mult=False)
-    )
-    write_bucketed(
-        tagged.select(F.col("__rep").alias("rep_id"),
-                      F.col(id_col).alias("member_id")),
-        names["members"], keys["members"], num_buckets, props=props,
-    )
-    base = tagged.filter(F.col(id_col) == F.col("__rep")).select(
-        id_col, "shingles"
-    )
-    write_bucketed(
-        _minhash_band_keys(base, id_col, num_hashes, bands),
-        names["bands"], keys["bands"], num_buckets, props=props,
-    )
-    write_bucketed(
-        base.select(id_col, "shingles"), names["shingles"],
-        keys["shingles"], num_buckets, props=props,
-    )
+    names, put = _index_writer(
+        MINHASH_INDEX_TABLES, table_prefix, num_buckets,
+        {"kind": "minhash_index", "k": k, "num_hashes": num_hashes,
+         "bands": bands, "collapsed": True})
+    tagged, base = _tag_shingles(
+        shingled_arrays(corpus, text_col, id_col, k), id_col, with_mult=False)
+    put("members", _members_map(tagged, id_col))
+    put("bands", _minhash_band_keys(base, id_col, num_hashes, bands))
+    put("shingles", base)
     return names
 
 
@@ -1398,70 +1203,28 @@ def probe_minhash_index(new: DataFrame, table_prefix: str,
     instead of silently returning an empty candidate set.  Identical
     semantics to running ``minhash_lsh_pairs`` over (batch UNION corpus)
     and keeping the cross-side pairs."""
-    from ..operators.layout import read_table_meta
-
     spark = new.sparkSession
-    names = _minhash_table_names(table_prefix)
-    meta = read_table_meta(spark, names["bands"])
-    if meta is not None and meta.get("props"):
-        built = meta["props"]
-        for param, got in (("k", k), ("num_hashes", num_hashes),
-                           ("bands", bands), ("collapsed", True)):
-            if built.get(param) != got:
-                raise ValueError(
-                    f"minhash index `{table_prefix}` was built with "
-                    f"{param}={built.get(param)!r}; probing with {got!r} "
-                    "joins a disjoint band-key space — rebuild or match it"
-                )
-    from pyspark.sql import Window as W
-
-    corpus_bands = spark.table(names["bands"])
-    corpus_shingles = spark.table(names["shingles"])
-    members = spark.table(names["members"])
+    names = _table_names(table_prefix, MINHASH_INDEX_TABLES)
+    require_build_props(
+        spark, names["bands"], f"minhash index `{table_prefix}`",
+        {"k": k, "num_hashes": num_hashes, "bands": bands,
+         "collapsed": True},
+        "joins a disjoint band-key space")
 
     # multiplicity collapse, both sides: the index stores corpus reps only
     # (expansion map persisted as <prefix>_members); the batch collapses
     # here with one window exchange on its shingle arrays
-    ntagged = materialize_once(
-        rep_tags(shingled_arrays(new, text_col, id_col, k),
-                 "shingles", id_col, with_mult=False)
-    )
-    nbase = ntagged.filter(F.col(id_col) == F.col("__rep")).select(
-        id_col, "shingles"
-    )
-    nbands = _minhash_band_keys(nbase, id_col, num_hashes, bands)
-    candidates = (
-        nbands.select(F.col(id_col).alias("new_id"), "band_key")
-        .join(corpus_bands.select(F.col(id_col).alias("corpus_id"),
-                                  "band_key"), "band_key")
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
-    sh_a = nbase.select(F.col(id_col).alias("new_id"),
-                        F.col("shingles").alias("sh_a"))
-    sh_b = corpus_shingles.select(F.col(id_col).alias("corpus_id"),
-                                  F.col("shingles").alias("sh_b"))
-    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    n_union = F.size("sh_a") + F.size("sh_b") - n_inter
-    rep_pairs = (
-        candidates.join(sh_a, "new_id")
-        .join(sh_b, "corpus_id")
-        .withColumn("jaccard",
-                    n_inter.cast("double") / n_union.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
-    )
-    nmemb = ntagged.select(F.col("__rep").alias("new_id"),
-                           F.col(id_col).alias("__na"))
-    cmemb = members.select(F.col("rep_id").alias("corpus_id"),
-                           F.col("member_id").alias("__nb"))
-    return (
-        rep_pairs.join(nmemb, "new_id").join(cmemb, "corpus_id")
-        .select(
-            F.col("__na").alias("new_id"), F.col("__nb").alias("corpus_id"),
-            "jaccard",
-        )
-    )
+    ntagged, nbase = _tag_shingles(
+        shingled_arrays(new, text_col, id_col, k), id_col, with_mult=False)
+    candidates = _candidates(
+        _minhash_band_keys(nbase, id_col, num_hashes, bands)
+        .select(F.col(id_col).alias("new_id"), "band_key"),
+        spark.table(names["bands"])
+        .select(F.col(id_col).alias("corpus_id"), "band_key"),
+        "band_key", "new_id", "corpus_id")
+    return _probe_pairs(candidates, ntagged, nbase,
+                        spark.table(names["shingles"]),
+                        spark.table(names["members"]), id_col, threshold)
 
 
 def remove_duplicated_spans(df: DataFrame, n: int = 4,

@@ -206,16 +206,12 @@ def probe_bm25_index(spark, table_prefix: str, terms: tuple[str, ...],
         raise ValueError("terms must be non-empty")
     if len(set(terms)) != len(terms):
         raise ValueError("terms must be distinct")
-    from ..operators.layout import read_table_meta
+    from ..operators.layout import require_build_props
 
     names = _bm25_table_names(table_prefix)
-    meta = read_table_meta(spark, names["postings"])
-    if meta is not None and meta.get("props") and not meta["props"].get(
-            "collapsed"):
-        raise ValueError(
-            f"bm25 index `{table_prefix}` uses the pre-collapse layout "
-            "(no mult/members); rebuild it with build_bm25_index"
-        )
+    require_build_props(spark, names["postings"],
+                        f"bm25 index `{table_prefix}`", {"collapsed": True},
+                        "reads a pre-collapse layout (no mult/members)")
     posts = spark.table(names["postings"]).filter(
         F.col("term").isin(*terms)
     )

@@ -19,16 +19,40 @@ deployment lives or dies by them):
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
+import pathlib
 import warnings
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 #: sidecar carrying the physical layout a table was ACTUALLY written with
-#: (bucket keys/count/sort) plus caller-supplied build parameters (index
-#: hyperparameters).  Lives next to ``_SUCCESS`` so it commits and survives
+#: (bucket keys/count/sort), caller-supplied build parameters (index
+#: hyperparameters), the written schema and the digest of the engine code
+#: that wrote it.  Lives next to ``_SUCCESS`` so it commits and survives
 #: with the data files themselves.
 TABLE_META_FILE = "_table_meta.json"
+
+
+@functools.lru_cache(maxsize=None)
+def engine_digest() -> str:
+    """sha256 of the engine source: every ``.py`` file of the package and
+    the ``__spark_entry__.py`` beside it, keyed by relative path.  Every
+    sidecar records it, and adoption refuses a table whose digest
+    differs, so a warehouse that outlives a code change rebuilds its
+    tables instead of serving what the old code built."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent
+    files = sorted(pkg.rglob("*.py"))
+    entry = pkg.parent / "__spark_entry__.py"
+    if entry.exists():
+        files.append(entry)
+    h = hashlib.sha256()
+    for f in files:
+        h.update(f"{f.relative_to(pkg.parent)}\0".encode())
+        h.update(f.read_bytes())
+    return h.hexdigest()
 
 
 def drop_table_and_location(spark, table: str) -> None:
@@ -74,12 +98,8 @@ def write_bucketed(df: DataFrame, table: str, keys: list[str],
     if sort_by:
         w = w.sortBy(*sort_by)
     w.saveAsTable(table)
-    write_table_meta(spark, table, {
-        "keys": list(keys),
-        "num_buckets": num_buckets,
-        "sort_by": list(sort_by or []),
-        "props": props or {},
-    })
+    _record_layout(df, table, list(keys), num_buckets, list(sort_by or []),
+                   props)
 
 
 def write_unbucketed(df: DataFrame, table: str,
@@ -90,8 +110,21 @@ def write_unbucketed(df: DataFrame, table: str,
     spark = df.sparkSession
     drop_table_and_location(spark, table)
     df.write.mode("overwrite").saveAsTable(table)
-    write_table_meta(spark, table, {
-        "keys": [], "num_buckets": 0, "sort_by": [], "props": props or {},
+    _record_layout(df, table, [], 0, [], props)
+
+
+def _record_layout(df: DataFrame, table: str, keys: list[str],
+                   num_buckets: int, sort_by: list[str],
+                   props: dict | None) -> None:
+    """The sidecar of ``table``, just written from ``df``: its layout,
+    ``props``, the written schema (adoption declares it instead of
+    reading parquet footers, which costs a Spark job) and the engine
+    digest."""
+    write_table_meta(df.sparkSession, table, {
+        "keys": keys, "num_buckets": num_buckets, "sort_by": sort_by,
+        "props": props or {},
+        "schema": df.schema.jsonValue(),
+        "code": engine_digest(),
     })
 
 
@@ -133,6 +166,24 @@ def read_table_meta(spark, table: str) -> dict | None:
     return json.loads(txt)
 
 
+def require_build_props(spark, table: str, label: str, expected: dict,
+                        consequence: str) -> dict:
+    """The build parameters ``table``'s sidecar records (``{}`` when it
+    records none), after refusing a probe whose ``expected`` parameters
+    differ from them: an index probed under other parameters than it was
+    built with returns plausible but wrong rows, so this raises instead.
+    ``label`` names the index and ``consequence`` says what a mismatched
+    probe would do."""
+    built = (read_table_meta(spark, table) or {}).get("props") or {}
+    for param, got in expected.items():
+        if built and built.get(param) != got:
+            raise ValueError(
+                f"{label} was built with {param}={built.get(param)!r}; "
+                f"probing with {got!r} {consequence} — rebuild or match it"
+            )
+    return built
+
+
 def adopt_bucketed_table(spark, table: str, keys: list[str] | None = None,
                          num_buckets: int = 8,
                          props: dict | None = None) -> bool:
@@ -149,15 +200,17 @@ def adopt_bucketed_table(spark, table: str, keys: list[str] | None = None,
     marker (``_SUCCESS``); a partial dir from a crashed write is ignored
     (and later cleaned by ``drop_table_and_location``).
 
-    The CREATE TABLE replays the bucket spec FROM THE SIDECAR the write
-    recorded, never from the caller's expectation: declaring a spec the
-    files weren't written with would make Spark silently skip shuffles in
-    bucketed joins and return wrong rows.  ``keys``/``num_buckets``/
-    ``props`` are the caller's expectation — any mismatch with the sidecar
-    (including a missing sidecar when bucketing is expected) refuses
-    adoption and returns False, so the caller (``artifacts.ensure``) falls
-    through to a clean rebuild under the new spec.  Returns True on
-    adoption.
+    The CREATE TABLE replays the bucket spec and the schema FROM THE
+    SIDECAR the write recorded, never from the caller's expectation:
+    declaring a spec the files weren't written with would make Spark
+    silently skip shuffles in bucketed joins and return wrong rows, and
+    the recorded schema spares a parquet footer read (one Spark job per
+    table).  ``keys``/``num_buckets``/``props`` are the caller's
+    expectation.  Adoption is refused — a warning, and False, so the
+    caller (``artifacts.ensure``) falls through to a clean rebuild —
+    when the sidecar is missing or records no schema, when other engine
+    code wrote it (:func:`engine_digest`), or when it disagrees with the
+    expectation.  Returns True on adoption.
     """
     loc = _warehouse_location(spark, table)
     jvm = spark._jvm
@@ -166,38 +219,29 @@ def adopt_bucketed_table(spark, table: str, keys: list[str] | None = None,
     marker = jvm.org.apache.hadoop.fs.Path(loc + "/_SUCCESS")
     if not fs.exists(p) or not fs.exists(marker):
         return False
+
+    def refuse(why: str) -> bool:
+        warnings.warn(f"refusing to adopt `{table}`: {why} — rebuilding",
+                      stacklevel=3)
+        return False
+
     meta = read_table_meta(spark, table)
-    if meta is None:
-        if keys:
-            warnings.warn(
-                f"refusing to adopt `{table}`: bucketing on {keys} expected "
-                f"but no {TABLE_META_FILE} records how the files were "
-                "written — rebuilding instead",
-                stacklevel=2,
-            )
-            return False
-        meta = {"keys": [], "num_buckets": 0, "sort_by": [], "props": {}}
+    if meta is None or "schema" not in meta:
+        return refuse(f"no {TABLE_META_FILE} records the schema the files "
+                      "were written with")
+    if meta.get("code") != engine_digest():
+        return refuse("the files were written by other engine code")
     expected = {"keys": list(keys or []),
                 "num_buckets": num_buckets if keys else meta["num_buckets"]}
     actual = {"keys": meta["keys"], "num_buckets": meta["num_buckets"]}
     if keys is not None and expected != actual:
-        warnings.warn(
-            f"refusing to adopt `{table}`: caller expects bucket spec "
-            f"{expected}, files were written with {actual} — rebuilding",
-            stacklevel=2,
-        )
-        return False
+        return refuse(f"caller expects bucket spec {expected}, files were "
+                      f"written with {actual}")
     if props is not None and props != meta.get("props", {}):
-        warnings.warn(
-            f"refusing to adopt `{table}`: caller expects build params "
-            f"{props}, files were built with {meta.get('props')} — "
-            "rebuilding",
-            stacklevel=2,
-        )
-        return False
-    schema = spark.read.parquet(loc).schema
+        return refuse(f"caller expects build params {props}, files were "
+                      f"built with {meta.get('props')}")
     cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                     for f in schema.fields)
+                     for f in StructType.fromJson(meta["schema"]).fields)
     cluster = ""
     if meta["keys"]:
         key_list = ", ".join(f"`{k}`" for k in meta["keys"])

@@ -80,8 +80,7 @@ def scd2_from_changelog(df: DataFrame, key_cols: list[str],
 
 def scd2_apply(dim: DataFrame, updates: DataFrame, key_cols: list[str],
                tracked_cols: list[str], ts_col: str,
-               broadcast_updates: bool = True,
-               dim_storage: str = "memory") -> DataFrame:
+               broadcast_updates: bool = True) -> DataFrame:
     """Merge a current-state batch into an SCD2 dimension.
 
     ``dim`` rows carry ``valid_from``/``valid_to`` (NULL = open); ``updates``
@@ -94,9 +93,8 @@ def scd2_apply(dim: DataFrame, updates: DataFrame, key_cols: list[str],
     batches.
 
     ``dim`` is consumed TWICE (pass-through join + new-key anti-join), so it
-    is materialized once up front (``dim_storage`` as in
-    execution.materialize_once; ``"disk"`` for dims larger than cluster
-    memory).  Materializing also truncates the input's lineage, which
+    is materialized once up front (``execution.materialize_once``).
+    Materializing also truncates the input's lineage, which
     matters when chaining applies: the output union's branches advertise
     inconsistent partitionings (join-output PartitioningCollection vs
     window exchanges), and feeding that lineage straight back into another
@@ -105,7 +103,7 @@ def scd2_apply(dim: DataFrame, updates: DataFrame, key_cols: list[str],
     zipped-partition mismatches).  In production the dim round-trips
     through a table between runs, which truncates lineage the same way.
     """
-    dim = materialize_once(dim, storage=dim_storage)
+    dim = materialize_once(dim)
     u = updates.select(
         *key_cols, F.col(ts_col).alias("__u_ts"),
         *[F.col(c).alias(f"__u_{c}") for c in tracked_cols],

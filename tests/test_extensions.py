@@ -80,8 +80,6 @@ def test_ngram_jaccard_df_cut_safe(spark):
     tiny = {(r["id_a"], r["id_b"]) for r in
             ngram_jaccard_pairs(docs, threshold=0.6, max_df=1).collect()}
     assert tiny <= set(base)
-    with pytest.raises(ValueError):
-        ngram_jaccard_pairs(docs, threshold=0.6, prefix_filter=False, max_df=5)
 
 
 def test_minhash_lsh_catches_exact_and_near(spark, docs):

@@ -151,9 +151,12 @@ def test_adoption_validates_bucket_spec_and_props(spark):
     shuffles in bucketed joins and return wrong rows."""
     import warnings
 
+    from pyspark.sql.types import StructType
+
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
         adopt_bucketed_table,
         drop_table_and_location,
+        engine_digest,
         read_table_meta,
         write_bucketed,
         write_unbucketed,
@@ -168,8 +171,10 @@ def test_adoption_validates_bucket_spec_and_props(spark):
     write_bucketed(df, "meta_src", ["k"], num_buckets=4, sort_by=["g"],
                    props=props)
     meta = read_table_meta(spark, "meta_src")
+    assert StructType.fromJson(meta.pop("schema")).simpleString() == (
+        "struct<k:bigint,g:bigint>")
     assert meta == {"keys": ["k"], "num_buckets": 4, "sort_by": ["g"],
-                    "props": props}
+                    "props": props, "code": engine_digest()}
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
 
     def orphan(name: str) -> None:
@@ -207,18 +212,17 @@ def test_adoption_validates_bucket_spec_and_props(spark):
     drop_table_and_location(spark, "meta_tbl")
     drop_table_and_location(spark, "meta_src")
 
-    # a meta-less dir (legacy write) refuses adoption when bucketing is
-    # expected, but adopts as a plain table when it is not
+    # a meta-less dir (legacy write) records neither a schema nor the
+    # code that wrote it: refused whether or not bucketing is expected
     drop_table_and_location(spark, "meta_less")
     df.write.saveAsTable("meta_less_src")
     shutil.copytree(os.path.join(wh, "meta_less_src"),
                     os.path.join(wh, "meta_less"))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert not adopt_bucketed_table(spark, "meta_less", ["k"], 4)
-    assert any("refusing to adopt" in str(x.message) for x in w)
-    assert adopt_bucketed_table(spark, "meta_less")
-    assert spark.table("meta_less").count() == 100
+    for expect in (dict(keys=["k"], num_buckets=4), {}):
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            assert not adopt_bucketed_table(spark, "meta_less", **expect)
+        assert any("refusing to adopt" in str(x.message) for x in w)
     drop_table_and_location(spark, "meta_less")
     drop_table_and_location(spark, "meta_less_src")
 
@@ -232,6 +236,107 @@ def test_adoption_validates_bucket_spec_and_props(spark):
     assert spark.table("meta_small2").count() == 1
     drop_table_and_location(spark, "meta_small")
     drop_table_and_location(spark, "meta_small2")
+
+
+def _forget_table(spark, table: str) -> str:
+    """Simulate a new session: the catalog forgets ``table`` (a managed
+    DROP purges the location, so the files are kept aside and put back).
+    Returns the table's warehouse directory."""
+    import os
+    import shutil
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    loc = os.path.join(wh, table)
+    shutil.rmtree(loc + "_keep", ignore_errors=True)
+    shutil.copytree(loc, loc + "_keep")
+    spark.sql(f"DROP TABLE `{table}`")
+    shutil.move(loc + "_keep", loc)
+    return loc
+
+
+def test_adoption_rebuilds_tables_other_code_wrote(spark):
+    """``artifacts.ensure`` adopts a surviving table only when its sidecar
+    records the digest of the engine code under test and the written
+    schema; a table another version of the code wrote, or a sidecar
+    without a schema, is rebuilt — so the suite checks tables the code
+    under test built."""
+    import warnings
+
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.artifacts import (
+        Artifact,
+        ensure,
+        table_name,
+    )
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
+        drop_table_and_location,
+        read_table_meta,
+        write_table_meta,
+    )
+
+    builds = []
+
+    def build(spark, sf_dir, prefix):
+        builds.append(prefix)
+        return spark.range(20).select(F.col("id").alias("k"))
+
+    art = Artifact("digest_t", build, tables={"": ["k"]},
+                   props={"kind": "digest_test"})
+    sf = "/data/sf_digest"
+    drop_table_and_location(spark, table_name(art, sf))
+    table = ensure(spark, sf, art)
+    assert len(builds) == 1
+
+    _forget_table(spark, table)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # the happy path adopts silently
+        ensure(spark, sf, art)
+    assert len(builds) == 1
+
+    for edit in (lambda m: m.update(code="0" * 64),
+                 lambda m: m.pop("schema")):
+        _forget_table(spark, table)
+        meta = read_table_meta(spark, table)
+        edit(meta)
+        write_table_meta(spark, table, meta)
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            ensure(spark, sf, art)
+        assert any("refusing to adopt" in str(x.message) for x in w)
+        assert sorted(r["k"] for r in spark.table(table).collect()) == (
+            list(range(20)))
+    assert len(builds) == 3
+    drop_table_and_location(spark, table)
+
+
+def test_adoption_runs_no_spark_job(spark):
+    """Adoption declares the table from the schema its sidecar recorded;
+    inferring it from the parquet footers costs one Spark job per table
+    (30 of the 62 jobs of an adopting ``warm_persisted``)."""
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
+        adopt_bucketed_table,
+        drop_table_and_location,
+        write_bucketed,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"v{i}", [i * 0.5], i % 2 == 0) for i in range(50)],
+        "k long, v string, xs array<double>, even boolean")
+    write_bucketed(df, "nojob_tbl", ["k"], num_buckets=4, props={"p": 1})
+    _forget_table(spark, "nojob_tbl")
+    sc = spark.sparkContext
+    group = "test_adoption_runs_no_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        assert adopt_bucketed_table(spark, "nojob_tbl", ["k"], 4,
+                                    props={"p": 1})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert spark.table("nojob_tbl").schema.simpleString() == (
+        "struct<k:bigint,v:string,xs:array<double>,even:boolean>")
+    assert sorted(map(tuple, spark.table("nojob_tbl").collect())) == sorted(
+        map(tuple, df.collect()))
+    drop_table_and_location(spark, "nojob_tbl")
 
 
 def test_collect_table_stats_feeds_cbo(spark, tmp_path):

@@ -478,9 +478,21 @@ def test_ngram_pairs_collapse_matches_bruteforce(spark, texts):
     """The multiplicity-collapsed PPJoin engine equals the brute-force
     all-pairs Jaccard on corpora drawn from a tiny vocabulary — a regime
     dense in verbatim copies, shared prefixes, and shingle-less (short)
-    documents, the exact edge cases the collapse/expansion must survive."""
+    documents, the exact edge cases the collapse/expansion must survive.
+    With even ids as the batch and odd ids as the corpus, the
+    cross-corpus engine and the persisted-index probe equal the brute
+    force's cross pairs, and every MinHash-LSH pair is a brute-force
+    pair with the same Jaccard."""
     from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.dedup import (
+        NGRAM_INDEX_TABLES,
+        build_ngram_index,
+        minhash_lsh_pairs,
         ngram_jaccard_pairs,
+        ngram_jaccard_pairs_vs,
+        probe_ngram_index,
+    )
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.operators.layout import (
+        drop_table_and_location,
     )
 
     df = spark.createDataFrame(list(enumerate(texts)),
@@ -489,6 +501,29 @@ def test_ngram_pairs_collapse_matches_bruteforce(spark, texts):
            for r in ngram_jaccard_pairs(df, k=2, threshold=0.5).collect()}
     want = _brute_jaccard_pairs(texts, 2, 0.5)
     assert got == want
+
+    mh = {(r["id_a"], r["id_b"]): r["jaccard"] for r in minhash_lsh_pairs(
+        df, k=2, num_hashes=12, bands=4, threshold=0.5).collect()}
+    assert all(want.get(p) == j for p, j in mh.items())
+
+    new = df.filter(F.col("doc_id") % 2 == 0)
+    corpus = df.filter(F.col("doc_id") % 2 == 1)
+    want_cross = {((a, b) if a % 2 == 0 else (b, a)): j
+                  for (a, b), j in want.items() if a % 2 != b % 2}
+
+    def cross(pairs):
+        return {(r["new_id"], r["corpus_id"]): r["jaccard"]
+                for r in pairs.collect()}
+
+    assert cross(ngram_jaccard_pairs_vs(new, corpus, k=2,
+                                        threshold=0.5)) == want_cross
+    try:
+        build_ngram_index(corpus, "prop_ngram_idx", k=2, threshold=0.5)
+        assert cross(probe_ngram_index(new, "prop_ngram_idx", k=2,
+                                       threshold=0.5)) == want_cross
+    finally:
+        for t in NGRAM_INDEX_TABLES:
+            drop_table_and_location(spark, f"prop_ngram_idx_{t}")
 
 
 privacy_rows = st.lists(
