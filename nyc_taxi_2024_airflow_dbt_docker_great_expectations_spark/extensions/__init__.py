@@ -45,7 +45,6 @@ from .text import (  # noqa: F401
     text_stats,
     token_count,
     winnowing_fingerprints,
-    word_shingles,
 )
 from .analytics import cohort_retention, groupwise_ols  # noqa: F401
 from .graph import pagerank_fixed  # noqa: F401

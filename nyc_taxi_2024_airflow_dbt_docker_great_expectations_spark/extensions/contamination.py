@@ -11,15 +11,23 @@ Scale shape (100 TB train, MB-scale benchmark): the benchmark n-gram set is
 tiny by construction — distinct-ed and broadcast, so the check is one
 map-side semi-join over the training corpus's exploded n-gram postings plus
 one partial+final aggregate per doc.  No shuffle of the training corpus
-beyond the posting aggregate; the corpus never materializes its n-grams as
-arrays (posting rows stream out of whole-stage codegen).
+beyond the posting aggregate: each document's distinct n-grams come from
+one narrow Arrow pass (``text.shingled_arrays``) and explode into posting
+rows in the same stage.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .text import shingle_postings
+from .text import shingled_arrays
+
+
+def _postings(df: DataFrame, text_col: str, id_col: str,
+              n: int) -> DataFrame:
+    """(id, shingle): one row per distinct word n-gram of each document."""
+    return shingled_arrays(df, text_col, id_col, n).select(
+        id_col, F.explode("shingles").alias("shingle"))
 
 
 def ngram_contamination(train: DataFrame, benchmark: DataFrame, n: int = 13,
@@ -34,11 +42,9 @@ def ngram_contamination(train: DataFrame, benchmark: DataFrame, n: int = 13,
     default because benchmark suites are small; pass ``False`` if yours is
     not and let the n-gram join shuffle-partition.
     """
-    train_posts = shingle_postings(train, text_col, id_col, k=n)
+    train_posts = _postings(train, text_col, id_col, n)
     bench_grams = (
-        shingle_postings(benchmark, text_col, id_col, k=n)
-        .select("shingle")
-        .distinct()
+        _postings(benchmark, text_col, id_col, n).select("shingle").distinct()
     )
     if broadcast_benchmark:
         bench_grams = F.broadcast(bench_grams)
@@ -94,10 +100,8 @@ def bloom_build_mask(benchmark: DataFrame, n: int = 13,
     split: callers serving repeated decontamination queries memoize it
     per session (the build pays one shingle explode over the benchmark
     that the apply path then never repeats)."""
-    from .text import shingle_postings
-
     bench_pos = (
-        shingle_postings(benchmark, text_col, id_col, k=n)
+        _postings(benchmark, text_col, id_col, n)
         .select(F.explode(F.array(
             *_bloom_positions(F.col("shingle"), m_bits, k_hashes)
         )).alias("pos"))
@@ -137,8 +141,6 @@ def bloom_contamination(train: DataFrame, benchmark: DataFrame = None,
     docs with >= 1 flagged n-gram — same shape as ngram_contamination,
     whose exact result is a subset (pytest-asserted).
     """
-    from .text import shingle_postings
-
     def positions(col):
         return _bloom_positions(col, m_bits, k_hashes)
 
@@ -152,7 +154,7 @@ def bloom_contamination(train: DataFrame, benchmark: DataFrame = None,
         for w in mask
     ])
 
-    posts = shingle_postings(train, text_col, id_col, k=n)
+    posts = _postings(train, text_col, id_col, n)
     member = None
     for p in positions(F.col("shingle")):
         # bit (p mod 64) of word (p div 64), LSB-first — bit_get takes a

@@ -50,11 +50,11 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from ..execution import expand_member_pairs, materialize_once, rep_tags
 from ..operators.layout import require_build_props, write_bucketed
 from .text import (
+    _gram_rows,
     positional_shingles,
     shingled_arrays,
     token_count,
     tokens,
-    word_shingles,
 )
 
 
@@ -959,6 +959,15 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                         reps.filter(F.col("__mult") > 1), 0)
 
 
+def _rep_grams(reps: DataFrame, text_col: str, id_col: str,
+               n: int) -> DataFrame:
+    """(id, __mult, gram): one row per distinct word ``n``-gram of each
+    rep document, carrying its copy count."""
+    sets = _gram_rows(reps.select(id_col, "__mult", text_col), text_col, n,
+                      positional=False)
+    return sets.select(id_col, "__mult", F.explode("shingles").alias("gram"))
+
+
 def duplicated_ngram_stats(df: DataFrame, n: int = 5,
                            text_col: str = "text",
                            id_col: str = "doc_id",
@@ -1008,17 +1017,12 @@ def duplicated_ngram_stats(df: DataFrame, n: int = 5,
     ``(n_grams, n_grams, 1.0)``, the Lee et al. verdict on a verbatim
     copy — emitted by expansion without touching its text.
     """
-    from pyspark.sql import Window
-
     tagged = materialize_once(
         rep_tags(df.select(F.col(id_col), F.col(text_col)),
                  text_col, id_col)
     )
     reps = tagged.filter(F.col(id_col) == F.col("__rep"))
-    grams = reps.select(
-        F.col(id_col), F.col("__mult"),
-        F.explode(word_shingles(text_col, n)).alias("gram"),
-    )
+    grams = _rep_grams(reps, text_col, id_col, n)
     w = Window.partitionBy("gram")
     owned = grams.withColumn("owner", F.min(id_col).over(w))
     if max_df is not None:
@@ -1091,10 +1095,7 @@ def build_gram_profile(corpus: DataFrame, table_prefix: str, n: int = 5,
     )
     put("members", _members_map(tagged, id_col))
     reps = tagged.filter(F.col(id_col) == F.col("__rep"))
-    grams = reps.select(
-        F.col(id_col), F.col("__mult"),
-        F.explode(word_shingles(text_col, n)).alias("gram"),
-    )
+    grams = _rep_grams(reps, text_col, id_col, n)
     w = Window.partitionBy("gram")
     owned = grams.select(
         F.col(id_col),
@@ -1273,14 +1274,8 @@ def remove_duplicated_spans(df: DataFrame, n: int = 4,
     reps = tagged.filter(F.col(id_col) == F.col("__rep"))
     toks = tokens(text_col)
     n_toks = token_count(text_col)
-    # positional grams via ONE narrow Arrow pass — the expression form
-    # (transform over sequence with slice(tokens(...))) re-ran the regex
-    # split once per gram position (no CSE across lambda bodies),
-    # O(tokens^2) regex work per doc; measured 7x slower at sf0.1.
-    # Short/NULL docs yield no gram rows, same as the old WHEN guard.
+    # short/NULL docs yield no gram rows
     grams = positional_shingles(reps, text_col, id_col, k=n)
-    from pyspark.sql import Window
-
     owner = F.min(id_col).over(Window.partitionBy("gram"))
     dup_pos = (
         grams.withColumn("__owner", owner)

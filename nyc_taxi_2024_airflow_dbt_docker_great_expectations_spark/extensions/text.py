@@ -3,15 +3,21 @@
 All built-in column expressions (JVM-side, codegen-friendly): tokenize,
 token stats, quality scoring, language ID, fingerprinting.  No row-at-a-time
 Python UDFs — at 100 TB the difference between a codegen'd regexp and a
-per-row UDF is the whole job budget.  The one Python touchpoint is
-``shingled_arrays``'s Arrow ``mapInPandas`` (narrow, batch-vectorized),
-which replaced a double shuffle of the posting mass.
+per-row UDF is the whole job budget.  Word k-grams are the exception: a
+document's grams are per-document string work that no expression builds
+without re-running the split per gram position, so they come from ONE
+narrow Arrow ``mapInPandas`` body (``_gram_rows``) over ONE Python copy
+of the ``tokens()`` split (``_word_grams``), with two views:
+``shingled_arrays`` (each document's distinct grams) and
+``positional_shingles`` (every occurrence with its start).
 
 Determinism: every score is integer-count arithmetic / fixed-order double
 ops, so results are bit-stable and oracle-checkable.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -37,6 +43,17 @@ def _c(col: Column | str) -> Column:
 
 # the \s character set of Java/RE2 regexes: space, \t, \n, \x0b, \f, \r
 _WS_CHARS = " \t\n\x0b\f\r"
+# tokens()'s split on the Python side: an explicit class, because Python's
+# own \s also splits on unicode whitespace (U+00A0, U+2003, ...) and Java's
+# does not
+_WS_RE = re.compile("[" + re.escape(_WS_CHARS) + "]+")
+
+
+def _word_grams(text: str, k: int) -> list[str]:
+    """The word ``k``-grams of one document in order, over exactly the
+    tokens :func:`tokens` yields (none when there are fewer than ``k``)."""
+    toks = _WS_RE.split(text.strip(_WS_CHARS))
+    return [" ".join(toks[j:j + k]) for j in range(len(toks) - k + 1)]
 
 
 def _wtrim(col: Column) -> Column:
@@ -59,29 +76,6 @@ def token_count(col: Column | str) -> Column:
     """Token count; empty/blank text counts 0 (split('') yields [''])."""
     t = _wtrim(_c(col))
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, "\\s+")))
-
-
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct word k-gram shingles -> array<string>.  Documents shorter
-    than k tokens yield an empty array.
-
-    PERF: Catalyst does not common-subexpression-eliminate across lambda
-    bodies, so the ``slice(tokens(...))`` here re-runs the regex split
-    once per gram position — O(tokens²) regex work per document
-    (measured 7x slower than the Arrow pass at sf0.1).  Fine for
-    one-time index builds and small inputs; hot per-query paths should
-    use :func:`shingled_arrays` (distinct sets) or
-    :func:`positional_shingles` (occurrences with positions) instead."""
-    toks = tokens(col)
-    n = F.size(toks)
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n - F.lit(k - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-            )
-        )
-    )
 
 
 # GPT-2-style pre-tokenizer pattern, restricted to syntax shared by Java
@@ -200,10 +194,12 @@ def repetition_scores(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """Repetition signal: the share of a document's word k-grams taken by
     its single most frequent k-gram.  Boilerplate/templated/looping text
-    scores high — a standard pre-training quality filter.  One explode +
-    two-level aggregate, all codegen'd."""
-    raw = shingle_postings(df, text_col, id_col, k, distinct=False)
-    per_gram = raw.groupBy(id_col, "shingle").agg(F.count(F.lit(1)).alias("c"))
+    scores high — a standard pre-training quality filter.  One narrow
+    gram pass (:func:`positional_shingles`) + a two-level aggregate."""
+    per_gram = (
+        positional_shingles(df, text_col, id_col, k)
+        .groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("c"))
+    )
     return per_gram.groupBy(id_col).agg(
         F.max("c").alias("top_kgram_count"),
         F.sum("c").alias("n_kgrams"),
@@ -213,136 +209,77 @@ def repetition_scores(df: DataFrame, text_col: str = "text",
     )
 
 
-def shingle_postings(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", k: int = 3,
-                     distinct: bool = True) -> DataFrame:
-    """(id, shingle) posting rows via posexplode + LEAD windows.
+def _gram_rows(df: DataFrame, text_col: str, k: int,
+               positional: bool) -> DataFrame:
+    """The word ``k``-grams of every row of ``df`` as ONE narrow Arrow
+    pass (``mapInPandas``, no shuffle).  Each output row is its input row
+    minus ``text_col``, plus either ``shingles`` (the document's DISTINCT
+    grams in first-occurrence order) or, ``positional``, one row per gram
+    occurrence as ``(gpos, gram)`` with ``gpos`` its 0-based start.  NULL
+    text and documents with fewer than ``k`` tokens yield no rows.
 
-    Semantically identical to exploding ``word_shingles`` but fully
-    whole-stage-codegen'd: the array-building higher-order functions
-    (``transform``/``slice``/``array_distinct``) are interpreted expressions
-    and measured ~10x slower per pass.  One sort per document (the window),
-    then every downstream consumer (similarity joins, MinHash, fingerprints)
-    reads plain rows.
-    """
-    from pyspark.sql import Window
+    The expression form (``transform(sequence(...), i -> concat_ws(' ',
+    slice(tokens(text), i, k)))``) re-runs the regex split once per gram
+    position — Catalyst does not common-subexpression-eliminate across
+    lambda bodies — so it is O(tokens²) regex work per document and was
+    measured 7x slower at sf0.1; the lead-window form shuffles the token
+    mass.  Here each document is split once, by :func:`_word_grams`.
+    Output rows are taken from the input batch, so every carried column
+    keeps its pandas dtype whatever its Spark type."""
+    import pandas as pd
+    from pyspark.sql.types import (
+        ArrayType, IntegerType, StringType, StructField, StructType,
+    )
 
-    exploded = df.select(
-        F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "tok")
+    grams_fields = (
+        [StructField("gpos", IntegerType(), False),
+         StructField("gram", StringType(), False)] if positional
+        else [StructField("shingles", ArrayType(StringType()), False)]
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", i).over(w) for i in range(1, k)]
-    sh = (
-        exploded.select(
-            F.col(id_col),
-            F.concat_ws(" ", *parts).alias("shingle"),
-            parts[-1].isNotNull().alias("__full"),
-        )
-        .filter(F.col("__full"))
-        .drop("__full")
+    out_schema = StructType(
+        [f for f in df.schema.fields if f.name != text_col] + grams_fields
     )
-    return sh.distinct() if distinct else sh
+
+    def gen(batches):
+        for pdf in batches:
+            rows, gpos, grams = [], [], []
+            for r, txt in enumerate(pdf[text_col]):
+                g = [] if txt is None else _word_grams(txt, k)
+                if positional:
+                    rows += [r] * len(g)
+                    gpos += range(len(g))
+                    grams += g
+                elif g:
+                    rows.append(r)
+                    grams.append(list(dict.fromkeys(g)))
+            out = pdf.drop(columns=text_col).take(rows).reset_index(drop=True)
+            if positional:
+                out["gpos"] = pd.Series(gpos, dtype="int32")
+            out["gram" if positional else "shingles"] = pd.Series(
+                grams, dtype=object)
+            yield out
+
+    return df.mapInPandas(gen, out_schema)
 
 
 def shingled_arrays(df: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id", k: int = 3) -> DataFrame:
-    """(id, shingles array<string>) with set semantics, as ONE narrow
-    Arrow pass (``mapInPandas``) — no shuffle at all.
-
-    The previous form (posexplode -> per-doc LEAD window -> collect_set)
-    shuffled the full posting mass twice and dominated every ngram-dedup
-    pipeline (~3.5s of a 5s query at sf0.1).  Shingling is per-document
-    string work, so it maps; the Python tokenizer replicates ``tokens()``'s
-    exact Java-``\\s`` semantics (the explicit ``[ \\t\\n\\x0b\\f\\r]``
-    class — Python's ``\\s`` would also split on unicode whitespace, which
-    Java's does not).  Strings only, no floats: the shingle SETS are
-    identical to the expression form; only the in-array order differs
-    (insertion order vs collect_set's arrival order), and every consumer
+    """(id, shingles array<string>): each document's distinct word
+    ``k``-grams — the set view of :func:`_gram_rows`.  Every consumer
     (explode, array_intersect size, MinHash min) is order-insensitive.
-    Documents with fewer than ``k`` tokens yield no row, matching the
-    posting form.
-    """
-    import re
-
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-    ws_re = re.compile("[" + re.escape(_WS_CHARS) + "]+")
-    id_field = df.schema[id_col]
-    out_schema = StructType([
-        id_field, StructField("shingles", ArrayType(StringType()), False)
-    ])
-
-    def shingle(iterator):
-        for pdf in iterator:
-            ids, shs = [], []
-            for i, txt in zip(pdf[id_col], pdf[text_col]):
-                if txt is None:
-                    continue
-                toks = ws_re.split(txt.strip(_WS_CHARS))
-                if len(toks) < k:
-                    continue
-                grams = dict.fromkeys(
-                    " ".join(toks[j:j + k]) for j in range(len(toks) - k + 1)
-                )
-                ids.append(i)
-                shs.append(list(grams))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids), "shingles": pd.Series(shs)}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(shingle, out_schema)
+    Documents with NULL text or fewer than ``k`` tokens yield no row."""
+    return _gram_rows(df.select(id_col, text_col), text_col, k,
+                      positional=False)
 
 
 def positional_shingles(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 3) -> DataFrame:
-    """(id, gpos, gram) — every word ``k``-gram occurrence WITH its
-    0-based start position, as ONE narrow Arrow pass (``mapInPandas``,
-    no shuffle): the positional, non-distinct sibling of
-    :func:`shingled_arrays` for consumers that need to map grams back
-    onto token spans (substring-dedup removal).
-
-    The expression form (``transform(sequence(...), i -> concat_ws(' ',
-    slice(tokens(text), i, k)))``) re-evaluates the regex split once per
-    gram position — O(tokens²) regex work per document; measured 7x
-    slower at sf0.1 — because Catalyst does not common-subexpression-
-    eliminate across lambda bodies.  Here the tokenizer runs once per
-    document (same explicit Java-``\\s`` class as ``tokens()``).
-    Documents with NULL text or fewer than ``k`` tokens yield no rows.
-    """
-    import re
-
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    ws_re = re.compile("[" + re.escape(_WS_CHARS) + "]+")
-    id_field = df.schema[id_col]
-    out_schema = StructType([
-        id_field,
-        StructField("gpos", IntegerType(), False),
-        StructField("gram", StringType(), False),
-    ])
-    id_dtype = ("int64" if id_field.dataType.simpleString()
-                in ("bigint", "long", "int") else "object")
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids, poss, grams = [], [], []
-            for i, txt in zip(pdf[id_col], pdf[text_col]):
-                if txt is None:
-                    continue
-                toks = ws_re.split(txt.strip(_WS_CHARS))
-                for p in range(len(toks) - k + 1):
-                    ids.append(i)
-                    poss.append(p)
-                    grams.append(" ".join(toks[p:p + k]))
-            yield pd.DataFrame({
-                id_col: pd.Series(ids, dtype=id_dtype),
-                "gpos": pd.Series(poss, dtype="int32"),
-                "gram": pd.Series(grams, dtype="object"),
-            })
-
-    return df.select(id_col, text_col).mapInPandas(gen, out_schema)
+    """(id, gpos, gram): every word ``k``-gram occurrence with its 0-based
+    start — the positional view of :func:`_gram_rows`, for consumers
+    that count occurrences or map grams back onto token spans.
+    Documents with NULL text or fewer than ``k`` tokens yield no rows."""
+    return _gram_rows(df.select(id_col, text_col), text_col, k,
+                      positional=True)
 
 
 def _count_matching(toks: Column, values: tuple[str, ...]) -> Column:
@@ -396,7 +333,7 @@ def _quality_counts(t: Column, w: Column, toks: Column) -> dict[str, Column]:
     stopword filter is a lambda HOF, and Catalyst neither codegens nor
     common-subexpression-eliminates lambda bodies, so the inline
     expression form re-runs the regex split per reference (the same
-    O(duplication) trap word_shingles documents)."""
+    O(duplication) trap ``_gram_rows`` documents)."""
     n_chars = F.length(t)
     return {
         "n_chars": n_chars,
@@ -612,17 +549,18 @@ def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
       MinHash, the building block of the winnowing/LSH family.  NULL for
       documents shorter than k tokens.
 
-    The shingle min runs explode-then-aggregate (codegen'd hash aggregate
-    with map-side combine) instead of an interpreted higher-order-function
-    ``array_min(transform(...))`` — same values, ~5x throughput.
+    The shingle min explodes :func:`shingled_arrays` into a codegen'd
+    hash aggregate with map-side combine, instead of an interpreted
+    higher-order-function ``array_min(transform(...))`` — same values,
+    ~5x throughput.
     """
     norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), "\\s+", " "))
     content = df.select(F.col(id_col), F.md5(norm).alias("content_md5"))
     min_sh = (
-        shingle_postings(df, text_col, id_col, k, distinct=False)
-        .select(F.col(id_col), F.md5("shingle").alias("h"))
+        shingled_arrays(df, text_col, id_col, k)
+        .select(F.col(id_col), F.explode("shingles").alias("shingle"))
         .groupBy(id_col)
-        .agg(F.min("h").alias("min_shingle_hash"))
+        .agg(F.min(F.md5("shingle")).alias("min_shingle_hash"))
     )
     return content.join(min_sh, id_col, "left")
 
@@ -641,18 +579,16 @@ def winnowing_fingerprints(df: DataFrame, text_col: str = "text",
     ~2/(w+1) of the gram hashes — (k, w) is the storage/recall dial for
     plagiarism/boilerplate detection at corpus scale.
 
-    Plan shape: tokens posexplode narrowly (one row per token) and the
-    gram hash assembles from LEAD windows — fully whole-stage-codegen'd,
-    like :func:`shingle_postings` (the ``transform``/``slice``
-    array-builder form is interpreted and measured ~5x slower) — then
-    ONE exchange keyed on the document id feeds the leads, the
-    sliding-window min, and the full-window filter; the rightmost-tie
-    rule rides the SAME window as the min via lexicographic struct order
-    on (hash, -pos) — no second pass, no self-join.  O(n_grams * w)
-    comparisons per document, map-heavy and shuffle-light.  Documents
-    with fewer than ``w + k - 1`` tokens have no full window and yield
-    no rows (their exact-dup key is :func:`fingerprints`' job).  Returns
-    (id_col, fp_pos, fp_hash), fp_pos 0-based.
+    Plan shape: the positional grams come from ONE narrow Arrow pass
+    (:func:`positional_shingles`), then ONE exchange keyed on the
+    document id feeds a single sliding window that computes both the
+    min and the full-window test (the window holds ``w`` grams); the
+    rightmost-tie rule rides the same window via lexicographic struct
+    order on (hash, -pos) — no second pass, no self-join.  O(n_grams *
+    w) comparisons per document, map-heavy and shuffle-light.
+    Documents with fewer than ``w + k - 1`` tokens have no full window
+    and yield no rows (their exact-dup key is :func:`fingerprints`'
+    job).  Returns (id_col, fp_pos, fp_hash), fp_pos 0-based.
 
     **Multiplicity collapse**: fingerprints are a pure function of the
     text, so only one rep per distinct text (min member id) runs the
@@ -686,32 +622,21 @@ def _rep_winnow_fps(reps: DataFrame, text_col: str, id_col: str,
     function."""
     from pyspark.sql import Window
 
-    n = token_count(text_col)
-    exploded = reps.filter(n >= k + w - 1).select(
-        F.col(id_col),
-        (n - k + 1).cast("long").alias("__m"),
-        F.posexplode(tokens(text_col)).alias("pos", "tok"),
-    )
-    wd = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", i).over(wd) for i in range(1, k)]
-    grams = exploded.select(
-        F.col(id_col), F.col("__m"), F.col("pos"),
-        F.md5(F.concat_ws(" ", *parts)).alias("h"),
-        parts[-1].isNotNull().alias("__full"),
-    ).filter(F.col("__full"))
     wspec = (
-        Window.partitionBy(id_col).orderBy("pos")
+        Window.partitionBy(id_col).orderBy("gpos")
         .rowsBetween(Window.currentRow, w - 1)
     )
     pick = F.min(
-        F.struct(F.col("h").alias("h"),
-                 (-F.col("pos")).cast("long").alias("np"))
+        F.struct(F.md5("gram").alias("h"),
+                 (-F.col("gpos")).cast("long").alias("np"))
     ).over(wspec)
     return (
-        grams.withColumn("__pick", pick)
+        positional_shingles(reps, text_col, id_col, k)
+        .select(F.col(id_col), pick.alias("__pick"),
+                F.count(F.lit(1)).over(wspec).alias("__n"))
         # full windows only: the guarantee is defined over complete
         # w-windows, and partial tail windows would select duplicates
-        .filter(F.col("pos") <= F.col("__m") - w)
+        .filter(F.col("__n") == w)
         .select(
             F.col(id_col),
             (-F.col("__pick.np")).alias("fp_pos"),
@@ -893,8 +818,8 @@ def collocations(df: DataFrame, text_col: str = "text",
     toks = arrs.select(F.explode("__toks").alias("w"))
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n_w"))
     n_total = uni.agg(F.sum("n_w").alias("n_tokens"))
-    # NOT word_shingles: that is the Jaccard SET form (array_distinct);
-    # collocation counts are multiset occurrences
+    # bigram occurrences (a multiset) from the token arrays already
+    # materialized for the unigram side, not a second gram pass
     bigram_arr = F.transform(
         F.sequence(F.lit(1), F.size(F.col("__toks")) - 1),
         lambda i: F.concat_ws(" ", F.slice(F.col("__toks"), i, 2)),

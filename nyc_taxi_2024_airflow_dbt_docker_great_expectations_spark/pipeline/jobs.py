@@ -195,9 +195,7 @@ class MedallionPipeline:
         month = month or self.ledger.target_month(PIPELINE_NAME)
         run_id = self.ledger.register_run(PIPELINE_NAME, month)
 
-        runner = PipelineRunner(
-            PIPELINE_NAME, alert_hook=self.alert_hook, sleep=lambda s: None
-        )
+        runner = PipelineRunner(PIPELINE_NAME, alert_hook=self.alert_hook)
         runner.add("ingest", lambda ctx: self.ingest_staging(month),
                    retries=self.retries, retry_delay=self.retry_delay)
         runner.add("bronze_run", lambda ctx: self.build_bronze(month),

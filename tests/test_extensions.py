@@ -17,7 +17,9 @@ from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions import
     quality_scores,
     simhash_pairs,
     text_stats,
-    word_shingles,
+)
+from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.text import (
+    shingled_arrays,
 )
 from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.multimodal import (
     decode_image_meta,
@@ -41,11 +43,11 @@ def docs(spark):
 
 
 def test_word_shingles(spark, docs):
-    out = docs.select("doc_id", word_shingles("text", 3).alias("sh")).collect()
-    by_id = {r["doc_id"]: r["sh"] for r in out}
+    out = shingled_arrays(docs, "text", "doc_id", 3).collect()
+    by_id = {r["doc_id"]: r["shingles"] for r in out}
     assert "the quick brown" in by_id[1]
     assert len(by_id[1]) == 7  # 9 tokens -> 7 trigrams, all distinct
-    assert by_id[5] == []      # shorter than k
+    assert 5 not in by_id      # shorter than k: no row
 
 
 def test_exact_dedup(spark, docs):

@@ -4,6 +4,7 @@ gold with ledger lifecycle, quality gates, idempotent re-runs."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -159,6 +160,37 @@ def test_month_with_no_bronze_rows_after_a_loaded_one_succeeds(spark, pipe):
     assert pipe.warehouse.read(spark, "silver", "silver_yellow_tripdata").count() == 31
     assert pipe.ledger.read().filter("status = 'SUCCESS'").count() == 3
     assert pipe._alerts == []
+
+
+def test_failed_stage_waits_retry_delay_then_succeeds(spark, tmp_warehouse):
+    """A stage that fails once under ``retries=1`` is retried after
+    ``retry_delay`` seconds (the reference DAG waits between retries) and
+    the month still ends SUCCESS."""
+    src = os.path.join(tmp_warehouse, "source")
+    os.makedirs(src, exist_ok=True)
+    _write_month(spark, src, "2024-01", _month_rows("2024-01", n=10))
+    calls = []
+
+    def source_path(month):
+        calls.append((month, time.monotonic()))
+        if len(calls) == 1:
+            raise OSError("source not reachable yet")
+        return os.path.join(src, f"yellow_tripdata_{month}.parquet")
+
+    alerts = []
+    p = MedallionPipeline(
+        spark, Warehouse(os.path.join(tmp_warehouse, "wh")), source_path,
+        alert_hook=lambda *a: alerts.append(a), retries=1, retry_delay=0.3,
+    )
+    t0 = time.monotonic()
+    assert p.run_month("2024-01") == "2024-01"
+    assert time.monotonic() - t0 >= 0.3
+    (m1, t1), (m2, t2) = calls
+    assert m1 == m2 == "2024-01"
+    assert t2 - t1 >= 0.3  # the wait sits between the two attempts
+    assert alerts == []
+    row = p.ledger.read().first()
+    assert (row["target_month"], row["status"]) == ("2024-01", "SUCCESS")
 
 
 # Spark jobs per call in a warm month of two 30-row months, as measured on

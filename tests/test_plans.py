@@ -97,6 +97,17 @@ def test_new_joins_stay_hash_based(spark):
     assert tri.count("BroadcastNestedLoopJoin") <= 2
 
 
+def test_word_gram_consumers_read_the_arrow_pass(spark):
+    """Word k-grams come from the one Arrow gram pass (MapInPandas), not
+    from posexplode + lead windows: these consumers plan no Window."""
+    qs = entry.queries()
+    for name in ("decontamination", "bloom_decontamination", "fingerprints",
+                 "repetition_scores"):
+        plan = _plan(qs[name](spark, SF))
+        assert "MapInPandas" in plan, name
+        assert "Window" not in plan, name
+
+
 def test_prefix_sum_is_narrow_single_exchange(spark):
     """The distributed prefix sum behind sequence_pack/corpus_shuffle moves
     the data through exactly ONE exchange (the range partitioning, inside

@@ -1252,3 +1252,47 @@ def test_distinct_ngrams_matches_model(spark, docs):
             assert r["distinct_2"] == len(m["ub"]) / m["nb"]
         else:
             assert r["distinct_2"] is None
+
+
+# --- the one Python tokenizer vs the JVM's tokens() -------------------------
+
+_WS_MIX = " \t\n\x0b\f\r" + "\u00a0\u2003\u001c" + "ab"
+_ws_texts = st.lists(
+    st.one_of(st.none(), st.text(alphabet=st.sampled_from(_WS_MIX),
+                                 max_size=12)),
+    min_size=1, max_size=8,
+)
+
+
+@settings(**SETTINGS)
+@given(texts=_ws_texts)
+def test_gram_views_match_jvm_tokens(spark, texts):
+    """Both word-gram views split exactly as the JVM's ``tokens()``: over
+    every Java-``\\s`` char and the unicode spaces (U+00A0, U+2003) and
+    separator (U+001C) Java's ``\\s`` does NOT match, for k in 1..3, the
+    set view is each document's distinct grams (no row below k tokens)
+    and the positional view every gram with its 0-based start."""
+    from nyc_taxi_2024_airflow_dbt_docker_great_expectations_spark.extensions.text import (
+        _WS_CHARS,
+        positional_shingles,
+        shingled_arrays,
+        tokens,
+    )
+
+    assert set(_WS_CHARS) <= set(_WS_MIX)
+    texts = texts + [None, "", _WS_CHARS]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    jvm = {r["doc_id"]: r["t"] for r in
+           df.select("doc_id", tokens("text").alias("t")).collect()}
+    for k in (1, 2, 3):
+        model = {i: [" ".join(t[j:j + k]) for j in range(len(t) - k + 1)]
+                 for i, t in jvm.items() if t is not None}
+        sets = {r["doc_id"]: r["shingles"]
+                for r in shingled_arrays(df, k=k).collect()}
+        assert {i: sorted(s) for i, s in sets.items()} == {
+            i: sorted(set(g)) for i, g in model.items() if g}
+        assert all(len(s) == len(set(s)) for s in sets.values())
+        got = sorted(tuple(r) for r in positional_shingles(df, k=k).collect())
+        assert got == sorted((i, p, g) for i, gs in model.items()
+                             for p, g in enumerate(gs))
